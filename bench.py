@@ -246,6 +246,27 @@ def format_line(result: dict) -> str:
     return line
 
 
+# the five latency pins whose spreads `txn_lat_sp` packs, in key order
+_SP_ORDER = (
+    "txn_latency_ms_at_5200_fixed",
+    "txn_latency_ms_at_30k_fixed",
+    "txn_latency_ms_at_52k_fixed",
+    "txn_latency_ms_unloaded",
+    "txn_latency_ms_at_80pct_sustained",
+)
+
+
+def pack_spreads(sp_vals: dict) -> str:
+    """The `txn_lat_sp` value: each pin's spread in _SP_ORDER,
+    "/"-joined, "-" for a pin that did not run.  A spread prints as
+    ``f"{round(v, 1):g}"`` (one decimal, at most six significant
+    digits), so an unrounded float can never grow the key until the
+    shed loop drops it and the self-evidence with it."""
+    return "/".join(
+        f"{round(sp_vals[n], 1):g}" if n in sp_vals else "-" for n in _SP_ORDER
+    )
+
+
 def _prev_discovered_rate() -> float | None:
     """Seed for the sustained probe's bracket: the newest committed
     BENCH_r*.json's sustainable_tps_pl3 (round-12 verdict next-round #3:
@@ -372,19 +393,12 @@ def bench_extra(spark, sf_dir, compact: dict, details: dict) -> None:
     # the five cross-round latency pins carry their spread there too —
     # a 0.4x swing on untouched code is then attributable to box
     # scatter in ONE round instead of two.  Packed into ONE ~43 B key
-    # ("txn_lat_sp": "a/b/c/d/e", fixed order below, "-" for a missing
+    # ("txn_lat_sp": "a/b/c/d/e", fixed order _SP_ORDER, "-" for a missing
     # row) because five separate `*_sp` keys (~110 B) pushed the real
     # r15 line past the cap and were shed — self-evidence that sheds
     # itself is no evidence.  Additions only; every existing key keeps
     # its meaning and position; bench_details keeps the structured
     # copies.
-    _SP_ORDER = (
-        "txn_latency_ms_at_5200_fixed",
-        "txn_latency_ms_at_30k_fixed",
-        "txn_latency_ms_at_52k_fixed",
-        "txn_latency_ms_unloaded",
-        "txn_latency_ms_at_80pct_sustained",
-    )
     sp_vals: dict[str, float] = {}
 
     def _run_stats(name: str, fn) -> None:
@@ -531,9 +545,7 @@ def bench_extra(spark, sf_dir, compact: dict, details: dict) -> None:
             print(f"# txn_latency_ms_at_80pct_sustained: FAILED {exc}", file=sys.stderr)
     # compose the packed latency-pin spread key (VERDICT r14 #7) now
     # that all five pins have run; order documented at _SP_ORDER
-    compact["txn_lat_sp"] = "/".join(
-        str(sp_vals[n]) if n in sp_vals else "-" for n in _SP_ORDER
-    )
+    compact["txn_lat_sp"] = pack_spreads(sp_vals)
 
     # streaming end-to-end trigger-to-commit latency — the epoch-model
     # analogue of the reference's LatencyTrackerStart/End sink pair

@@ -30,12 +30,13 @@ a Python twin, the whole fixpoint runs on the driver:
 - each cascade round is a pure-Python refold of the affected key chains
   (cost proportional to the contended key set, zero Spark jobs);
 - the final votes / writes re-enter Spark as LocalRelations, and the
-  resolved per-namespace finals are handed to the store's fused pandas
-  commit when its size gates allow.
+  resolved per-namespace finals are handed to the store's pandas commit
+  (StateStore.commit_pandas) when its size gates allow.
 
-Result identity with the Spark refold path is pinned by tests
+Result identity with the distributed close is pinned by tests
 (tests/test_driver_cascade.py): same votes, same balances, same epoch
-count, with the Spark path still exercised via TSPOON_DRIVER_CASCADE=0.
+count, with the distributed close run the way a cluster reaches it
+(materialize mode 'reliable').
 
 Python twins for expression stages are AUTO-DERIVED: the same rendered
 SQL the JVM chain fold executes (runner._chain_update_sql — Catalyst's
@@ -52,7 +53,6 @@ runs.
 from __future__ import annotations
 
 import math
-import os
 import re
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -807,7 +807,7 @@ _INT_VTS = {"bigint", "long", "int", "integer", "smallint", "tinyint"}
 # degrade the step loop to per-row Python — past this, the epoch falls
 # back to the JVM fold (one sequential task, JVM-speed).  Contended
 # operating points run chains of a few hundred.
-OPS_FOLD_MAX_CHAIN = int(os.environ.get("TSPOON_OPS_FOLD_MAX_CHAIN", "50000"))
+OPS_FOLD_MAX_CHAIN = 50_000
 
 
 def _pull_pdf(df, key_cols: tuple[str, ...] = ()) -> pd.DataFrame:
@@ -951,8 +951,7 @@ class DriverCascade:
     def _pull_fused(self, store, tids_df) -> pd.Series | None:
         """ONE-job pull of everything a loaded epoch needs: the tid set,
         every chain stage's evaluation links, AND the raw ops the
-        cascade would refold from — as a part-tagged union frame (the
-        same single-materialize idea as the fused no-abort commit).
+        cascade would refold from — as a part-tagged union frame.
         Job launches dominate control-frame pulls locally (~0.1-0.2 s
         each), so three pulls into one job is a direct latency cut.
 
@@ -1005,8 +1004,8 @@ class DriverCascade:
 
         # value sentinel is a TYPED ZERO, not NULL: one null in an
         # integer Arrow column degrades the whole pandas column to
-        # float64, where values past 2^53 round — the same degrade the
-        # fused commit guards _tid against (part-0 values are never read).
+        # float64, where values past 2^53 round (part-0 values are never
+        # read).
         # tids_df is None when the graph provably links every txn
         # (links_cover_tids): no part-0 branch, tid set derived from the
         # links below — one fewer source scan, batch-size fewer rows.

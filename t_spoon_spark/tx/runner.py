@@ -38,36 +38,30 @@ from __future__ import annotations
 import os
 import re
 import time
-from dataclasses import dataclass
 
 _DEBUG = os.environ.get("TSPOON_DEBUG") == "1"
-# None = auto-select per session master (local → pandas, cluster →
-# reliable); an explicit TSPOON_MATERIALIZE always wins.
+# The materialize mode is the one selector between the two epoch
+# closes: 'pandas' runs the driver close (tx/driver_cascade.py),
+# 'reliable' the distributed close a cluster runs.  None = auto-select
+# per session master (local → pandas, cluster → reliable); an explicit
+# TSPOON_MATERIALIZE always wins.
 _MATERIALIZE = os.environ.get("TSPOON_MATERIALIZE") or None
-# Driver-side cascade fixpoint (pandas materialize mode only; see
-# tx/driver_cascade.py). On by default; TSPOON_DRIVER_CASCADE=0 pins
-# the distributed refold loop (tests use it to keep both paths covered).
-_DRIVER_CASCADE = os.environ.get("TSPOON_DRIVER_CASCADE", "1") != "0"
-# Fused no-abort single-job close (pandas mode). TSPOON_FUSED=0 pins the
-# two-action path for comparisons/tests.
-_FUSED = os.environ.get("TSPOON_FUSED", "1") != "0"
-# Driver-side FULL fold (pandas mode, round-12 unloaded-latency floor):
-# the epoch's one Spark job is the pre-fold ops projection; the chain
-# evaluation itself runs through the vectorized numpy fold
-# (tx/driver_cascade.py ops_fold).  TSPOON_OPS_FOLD=0 pins the JVM fold
-# for comparisons/tests.  The txn threshold bounds the regime by the
-# PREVIOUS epoch's size: paired A/B at sf0.1 shows the fold winning
-# across the whole local operating range (100-txn floor -53%, 26k-txn
-# pin -66%, 150k-txn pin -46%, ~20k-txn tps epochs +17%), and the
-# round-13 boundary probe (tools/ops_fold_threshold_probe.py, sf1,
-# 100k keyspace) extends that: 300k/400k/500k/600k/800k-txn epochs run
-# 23%/31%/42%/21%/24% faster on the fold with NO crossover, so the
-# default sits at the largest measured-win size — epochs past it fall
-# back to the fused JVM fold (same driver-frame memory class either
-# way — pandas mode always pulls batch-sized control frames).  Cluster
-# sessions never take either driver path.
-_OPS_FOLD = os.environ.get("TSPOON_OPS_FOLD", "1") != "0"
-_OPS_FOLD_MAX_TXNS = int(os.environ.get("TSPOON_OPS_FOLD_MAX_TXNS", "800000"))
+_MATERIALIZE_MODES = ("pandas", "reliable")
+# Driver close flavour: the ops fold (tx/driver_cascade.py ops_fold —
+# the epoch's one Spark job is the pre-fold ops projection and every
+# chain runs through the vectorized numpy fold) or the evaluated pull
+# (the JVM chain fold, pulled in one job).  The txn threshold bounds
+# the ops fold by the PREVIOUS epoch's size: paired A/B at sf0.1 shows
+# the fold winning across the whole local operating range (100-txn
+# floor -53%, 26k-txn pin -66%, 150k-txn pin -46%, ~20k-txn tps epochs
+# +17%), and the round-13 boundary probe (sf1, 100k keyspace; table in
+# BENCHNOTES and SCALING.md) extends that: 300k/400k/500k/600k/800k-txn
+# epochs run 23%/31%/42%/21%/24% faster on the fold with NO crossover,
+# so the threshold sits at the largest measured-win size — epochs past
+# it take the evaluated pull (same driver-frame memory class either
+# way — pandas mode always pulls batch-sized control frames).  Tests
+# pin the evaluated pull by setting it to -1.
+_OPS_FOLD_MAX_TXNS = 800_000
 
 
 class _OpsFoldRetry(Exception):
@@ -84,12 +78,16 @@ def _dbg(label: str, t0: float) -> float:
 def materialize_mode(spark) -> str:
     """Resolve the materialize mode for this session.
 
-    Explicit TSPOON_MATERIALIZE wins; otherwise key off the master URL:
-    'pandas' on local[*] (single-JVM, control frames trivially fit the
-    driver), 'reliable' on any cluster master — a cluster session must
-    never round-trip epoch control frames through toPandas() without an
-    explicit opt-in."""
+    Explicit TSPOON_MATERIALIZE ('pandas' or 'reliable') wins; otherwise
+    key off the master URL: 'pandas' on local[*] (single-JVM, control
+    frames trivially fit the driver), 'reliable' on any cluster master —
+    a cluster session must never round-trip epoch control frames through
+    toPandas() without an explicit opt-in."""
     if _MATERIALIZE is not None:
+        if _MATERIALIZE not in _MATERIALIZE_MODES:
+            raise ValueError(
+                f"TSPOON_MATERIALIZE={_MATERIALIZE!r}: expected one of {_MATERIALIZE_MODES}"
+            )
         return _MATERIALIZE
     master = spark.sparkContext.master
     # Match single-JVM masters precisely: 'local', 'local[4]',
@@ -103,16 +101,12 @@ def materialize(df: DataFrame) -> DataFrame:
 
     Modes (TSPOON_MATERIALIZE, default auto — see materialize_mode):
     'pandas' round-trips through Arrow to a LocalRelation —
-    pathology-free and right-sized for the control-plane frames of an
-    epoch (votes, replay queue, resolved updates), which are bounded by
-    batch size, not state size; 'reliable' uses rdd.checkpoint() to the
-    checkpoint dir (the cluster default: control frames may exceed
-    driver memory); 'ckpt' is eager localCheckpoint (both distributed
-    modes showed super-linear per-epoch job slowdowns over long replay
-    chains in Spark 4.1 local mode — see tools/dbg_epoch.py)."""
+    right-sized for the control-plane frames of an epoch (votes, replay
+    queue, resolved updates), which are bounded by batch size, not
+    state size; 'reliable' uses rdd.checkpoint() to the checkpoint dir
+    (the cluster default: control frames may exceed driver memory)."""
     spark = df.sparkSession
-    mode = materialize_mode(spark)
-    if mode == "pandas":
+    if materialize_mode(spark) == "pandas":
         pdf = df.toPandas()
         out = spark.createDataFrame(pdf, schema=df.schema)
         # driver-side twin: control-plane scans (abort counts, the
@@ -122,17 +116,15 @@ def materialize(df: DataFrame) -> DataFrame:
         # callers fall back to Spark actions.
         out._tspoon_pdf = pdf
         return out
-    if mode == "reliable":
-        if not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
-            import tempfile
+    if not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined():
+        import tempfile
 
-            spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="tspoon_ckpt_"))
-        # (persist-before-checkpoint measured NO gain here — the epoch
-        # control frames are small enough that the checkpoint's lineage
-        # recompute is noise against per-job dispatch; see
-        # tools/bench_cluster_probe.py + BENCHNOTES round-9 row)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+        spark.sparkContext.setCheckpointDir(tempfile.mkdtemp(prefix="tspoon_ckpt_"))
+    # (persist-before-checkpoint measured NO gain here — the epoch
+    # control frames are small enough that the checkpoint's lineage
+    # recompute is noise against per-job dispatch; see
+    # tools/bench_cluster_probe.py + BENCHNOTES round-9 row)
+    return df.checkpoint(eager=True)
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -144,11 +136,6 @@ from t_spoon_spark.tx.namespace import Namespace
 from t_spoon_spark.tx.vote import ABORT, COMMIT, REPLAY, vote_name
 
 EPOCH_TID_SHIFT = 40  # tid = (epoch+1) << 40 | row-id; replays keep old (smaller) tids
-
-# cascade refold strategy threshold: key-local refold below this abort
-# fraction, plain full refold above (module-level so tests can pin
-# either path and assert result identity)
-FULL_REFOLD_FRAC = 0.05
 
 
 def _per_key_votes(evaluated: DataFrame) -> DataFrame:
@@ -200,7 +187,7 @@ class EpochResult:
         stream: DataFrame,
         spu_results: DataFrame | None,
         n_replay: int,
-        votes: DataFrame | None = None,
+        votes: DataFrame,
     ):
         self.epoch = epoch
         self._results = results
@@ -220,19 +207,16 @@ class EpochResult:
         return self._results
 
     def vote_counts(self) -> dict[str, int]:
-        if self.votes is not None:
-            pdf = getattr(self.votes, "_tspoon_pdf", None)
-            if pdf is not None:  # driver twin: zero Spark jobs
-                from t_spoon_spark.tx.vote import VOTE_NAMES
+        pdf = getattr(self.votes, "_tspoon_pdf", None)
+        if pdf is not None:  # driver twin: zero Spark jobs
+            from t_spoon_spark.tx.vote import VOTE_NAMES
 
-                counts = pdf["vote"].value_counts()
-                return {VOTE_NAMES[int(v)]: int(n) for v, n in counts.items()}
-            rows = (
-                self.votes.select(vote_name(F.col("vote")).alias("v")).groupBy("v").count().collect()
-            )
-            return {r["v"]: r["count"] for r in rows}
-        rows = self.results.groupBy("vote").count().collect()
-        return {r["vote"]: r["count"] for r in rows}
+            counts = pdf["vote"].value_counts()
+            return {VOTE_NAMES[int(v)]: int(n) for v, n in counts.items()}
+        rows = (
+            self.votes.select(vote_name(F.col("vote")).alias("v")).groupBy("v").count().collect()
+        )
+        return {r["v"]: r["count"] for r in rows}
 
 
 class GraphRunner:
@@ -375,7 +359,7 @@ class GraphRunner:
         reruns: list = []
 
         def exec_states(
-            excluded: DataFrame | None, full_refold: bool = False
+            excluded: DataFrame | None,
         ) -> tuple[list[DataFrame], dict[str, list[DataFrame]]]:
             votes_parts: list[DataFrame] = []
             writes_parts: dict[str, list[DataFrame]] = {}
@@ -387,7 +371,7 @@ class GraphRunner:
                     writes_parts.setdefault(stage.namespace, []).append(writes)
             else:
                 for rerun, (_, stage, _) in zip(reruns, state_jobs):
-                    votes, writes = rerun(excluded, full_refold)
+                    votes, writes = rerun(excluded)
                     votes_parts.append(votes)
                     writes_parts.setdefault(stage.namespace, []).append(writes)
             return votes_parts, writes_parts
@@ -454,8 +438,7 @@ class GraphRunner:
         # fails, that one epoch runs the distributed path uncached and
         # the next epoch persists again.
         self._skip_persist = (
-            _DRIVER_CASCADE
-            and kind != "expr"
+            kind != "expr"
             and self._dc_compiled is not False
             and materialize_mode(env.spark) == "pandas"
         )
@@ -495,7 +478,7 @@ class GraphRunner:
             )
         )
 
-        def rerun(excluded: DataFrame, full: bool = False) -> tuple[DataFrame, DataFrame]:
+        def rerun(excluded: DataFrame) -> tuple[DataFrame, DataFrame]:
             # mark (don't drop) the excluded txns' ops: the refold
             # evaluates them against the clean chain without applying
             # their writes, so a contaminated abort can flip back to
@@ -506,7 +489,9 @@ class GraphRunner:
                 .withColumn("__ex", F.coalesce(F.col("__exf"), F.lit(0)))
                 .drop("__exf")
             )
-            if evaluated is None or full:
+            if evaluated is None:
+                # no per-(key, tid) evaluation to keep (epoch_combine):
+                # refold the whole stage
                 v, w, _ = impl(marked, stage, ns, snapshot, stage_idx)
                 return v, w
             # A cascade pass refolds ONLY the keys where some excluded
@@ -519,9 +504,6 @@ class GraphRunner:
             # proportional to the CONTAMINATED key set, not even the
             # touched key set: at cluster scale an epoch of 10^7 txns
             # with 100 contended keys refolds at most 100 chains.
-            # (The caller switches to a full refold when the abort
-            # fraction is large — then the extra semi/anti joins cost
-            # more than the refold they avoid.)
             affected = (
                 evaluated.join(excluded, "_tid", "left_semi")
                 .filter(F.col("vote") == COMMIT)
@@ -860,10 +842,10 @@ class GraphRunner:
         vectorized fold.  Conservative by construction — every condition
         a pull can't verify later must hold up front; epochs past the
         size threshold (previous driver epoch > _OPS_FOLD_MAX_TXNS
-        txns) fall back to the fused JVM fold.  First eligible epoch is
-        the runner's second: the compile (and the size signal) come
-        from a standard epoch."""
-        if not (_OPS_FOLD and _DRIVER_CASCADE) or stamped or spus is not None:
+        txns) take the evaluated pull.  First eligible epoch is the
+        runner's second: the compile (and the size signal) come from a
+        standard epoch."""
+        if stamped or spus is not None:
             return False
         if not isinstance(self._dc_compiled, list):
             return False
@@ -879,11 +861,11 @@ class GraphRunner:
 
     def _driver_cascade_or_none(self, spark):
         """A DriverCascade for this epoch, or None when the distributed
-        refold loop must run instead (cluster materialize mode, the
-        feature flag, or a stage without a compilable python twin)."""
+        close must run instead (reliable materialize mode, or a stage
+        without a compilable python twin)."""
         from t_spoon_spark.tx import driver_cascade as dcm
 
-        if not _DRIVER_CASCADE or materialize_mode(spark) != "pandas":
+        if materialize_mode(spark) != "pandas":
             return None
         if not self._stage_ctxs or any(c.kind == "expr" for c in self._stage_ctxs):
             return None
@@ -971,20 +953,17 @@ class GraphRunner:
         spus: DataFrame | None,
     ) -> EpochResult:
         env = self.env
-        store = env.store
-
         t0 = time.time()
         tids = src.select("_tid")
         votes_parts, writes_parts = exec_states(None)
         spark = tids.sparkSession
 
-        # Driver-side close (pandas materialize mode + compiled python
-        # twins, tx/driver_cascade.py): ONE Spark job per chain stage —
-        # the evaluation pull — then vote merge, abort-cascade fixpoint,
-        # and finals resolution all in pandas over batch-sized control
-        # frames.  Replaces both the fused union job and the distributed
-        # cascade loop; ineligible graphs and cluster sessions fall
-        # through to those paths unchanged.
+        # Driver close (pandas materialize mode + compiled python twins,
+        # tx/driver_cascade.py): as few as ONE Spark job per epoch — the
+        # ops-fold projection or the evaluation pull — then vote merge,
+        # abort-cascade fixpoint and finals resolution all in pandas
+        # over batch-sized control frames.  Cluster sessions and graphs
+        # the compile refuses take the distributed close below.
         dc = self._driver_cascade_or_none(spark) if n_state > 0 else None
         if dc is not None:
             from t_spoon_spark.tx.driver_cascade import Ineligible
@@ -1007,114 +986,9 @@ class GraphRunner:
                     print(f"    [tspoon] driver close fell back: {e}", flush=True)
                 self._dc_compiled = False
 
-        # Fused no-abort fast path: ONE Spark job per epoch instead of
-        # two. The votes materialize and the commit's state cut are the
-        # two per-epoch actions; here they ride a single union frame
-        # (tids ∪ link votes ∪ OPTIMISTIC per-key finals — the resolved
-        # state assuming every transaction commits). Driver-side we
-        # check the votes: all COMMIT → the optimistic finals are exact
-        # and the store merges them in pandas with zero further jobs;
-        # any ABORT/REPLAY → discard the finals and fall through to the
-        # standard cascade + commit path (the wasted work is one window
-        # over the already-cached evaluation frame). Only engaged on
-        # the local pandas materialize path with small namespaces that
-        # share one value type (one union frame needs one value column
-        # type) — a cluster session never routes epoch state through
-        # the driver (materialize_mode 'reliable').
-        fused_updates_pdf = None  # {ns_name: finals pdf} when the fast path lands
-        fuse_types = {env.namespaces[n].value_type for n in writes_parts}
-        fusable = (
-            _FUSED
-            and spus is None
-            and bool(votes_parts)
-            and len(fuse_types) == 1  # one union frame needs one value type
-            and all(store.can_commit_pandas(n) for n in writes_parts)
-        )
-        if fusable and materialize_mode(spark) == "pandas":
-            vt = next(iter(fuse_types))
-            w = None
-            for ns_name, parts in writes_parts.items():
-                for p in parts:
-                    tagged = p.withColumn("__ns", F.lit(ns_name))
-                    w = tagged if w is None else w.unionByName(tagged)
-            rn = F.row_number().over(
-                W.partitionBy("__ns", "key").orderBy(F.desc("_stage"), F.desc("_ord"))
-            )
-            finals = w.withColumn("__rn", rn).filter(F.col("__rn") == 1)
-            links = votes_parts[0]
-            for v in votes_parts[1:]:
-                links = links.unionByName(v)
-            # _tid, vote AND value use typed sentinels (never nulls) on
-            # the parts that don't carry them: a null in an int64 Arrow
-            # column degrades the whole pandas column to float64 —
-            # stamped tids ((epoch+1)<<40 | row) exceed 2^53 from epoch
-            # ~8191 and would collide, and a BIGINT namespace's values
-            # past 2^53 would silently round in the merged twin.
-            combined = (
-                tids.select(
-                    F.lit(0).alias("__part"),
-                    "_tid",
-                    F.lit(-1).cast("int").alias("vote"),
-                    F.lit(None).cast("string").alias("__ns"),
-                    F.lit(None).cast("string").alias("key"),
-                    F.lit(0).cast(vt).alias("value"),
-                )
-                .unionByName(
-                    links.select(
-                        F.lit(1).alias("__part"),
-                        "_tid",
-                        F.col("vote").cast("int"),
-                        F.lit(None).cast("string").alias("__ns"),
-                        F.lit(None).cast("string").alias("key"),
-                        F.lit(0).cast(vt).alias("value"),
-                    )
-                )
-                .unionByName(
-                    finals.select(
-                        F.lit(2).alias("__part"),
-                        F.lit(-1).cast("long").alias("_tid"),
-                        F.lit(-1).cast("int").alias("vote"),
-                        "__ns",
-                        "key",
-                        F.col("value").cast(vt),
-                    )
-                )
-            )
-            cpdf = getattr(materialize(combined), "_tspoon_pdf", None)
-            if cpdf is not None:
-                import pandas as pd
-
-                lk = cpdf[cpdf["__part"] == 1]
-                gv = (
-                    lk.groupby("_tid", as_index=False)
-                    .agg(
-                        vote=("vote", "max"),
-                        any_commit=("vote", lambda s: int((s == COMMIT).any())),
-                    )
-                    if len(lk)
-                    else pd.DataFrame(columns=["_tid", "vote", "any_commit"])
-                )
-                all_tids = cpdf[cpdf["__part"] == 0][["_tid"]].drop_duplicates()
-                gv_pdf = all_tids.merge(gv, on="_tid", how="left")
-                gv_pdf["vote"] = gv_pdf["vote"].fillna(COMMIT).astype("int32")
-                gv_pdf["any_commit"] = (
-                    gv_pdf["any_commit"].fillna(0).astype("int32")
-                )
-                gvotes = spark.createDataFrame(
-                    gv_pdf, schema="_tid long, vote int, any_commit int"
-                )
-                gvotes._tspoon_pdf = gv_pdf
-                if int((gv_pdf["vote"] != COMMIT).sum()) == 0:
-                    fin = cpdf[cpdf["__part"] == 2]
-                    fused_updates_pdf = {
-                        ns_name: fin[fin["__ns"] == ns_name][["key", "value"]]
-                        .reset_index(drop=True)
-                        for ns_name in writes_parts
-                    }
-            else:  # pragma: no cover - pandas mode always yields a twin
-                gvotes = materialize(self._merge_votes(tids, votes_parts))
-        else:
-            gvotes = materialize(self._merge_votes(tids, votes_parts))
+        # Distributed close: the cluster's path (materialize 'reliable')
+        # and the local fallback for graphs the driver compile refuses.
+        gvotes = materialize(self._merge_votes(tids, votes_parts))
         t0 = _dbg("gvotes", t0)
 
         # Forward abort cascade (the epoch-model analogue of the
@@ -1134,9 +1008,8 @@ class GraphRunner:
         # unique serial-replay answer: influence flows strictly forward
         # in tid order, so the k-th smallest tid's verdict is stable
         # from round k and the loop terminates in at most
-        # longest-dependency-chain rounds. Cost: zero extra passes when
+        # longest-dependency-chain rounds. Cost: one control job when
         # nothing aborts.
-        driver_res = None
         if n_state > 0 and env.isolation in ("PL3", "PL4"):
             # epoch_combine folds every txn unconditionally, so its sums
             # must always be re-derived when something aborts — the
@@ -1144,76 +1017,51 @@ class GraphRunner:
             has_ec = any(
                 isinstance(s, G.StateStage) and s.epoch_combine for s in self.graph.stages
             )
-            prev_set: set = set()
             prev_df: DataFrame | None = None
             rounds = 0
             while True:
-                # gvotes is materialized, so these are cheap local
-                # scans; the excluded set stays rooted at the local vote
-                # frame (broadcast join in rerun) — no driver collect of
-                # tids, no extra materialize job. In pandas mode the
-                # set diffs come off the driver-side twin with no Spark
-                # job at all.
-                gpdf = getattr(gvotes, "_tspoon_pdf", None)
+                # ONE control job per round (optimization r15: each
+                # count()/limit(1).count() was a full job dispatch on
+                # the multi-JVM path, and the cascade pays them EVERY
+                # round).  gvotes carries every epoch tid exactly once
+                # (tids left-joined to the per-tid vote merge; pinned by
+                # tests/test_merge_votes_invariant.py), so prev-set
+                # membership rides one left join against the previous
+                # (materialize-rooted) abort set and all four control
+                # reads collapse into a single one-row aggregate:
+                # n_aborted, n_new (aborted ∧ ∉prev), has_replays (∈prev
+                # ∧ no longer aborted), and the new-contamination flag
+                # (new abort that chain-committed a link).
                 aborted = gvotes.filter(F.col("vote") == ABORT).select("_tid")
-                if gpdf is not None:
-                    ab_set = set(int(t) for t in gpdf.loc[gpdf["vote"] == ABORT, "_tid"])
-                    n_aborted = len(ab_set)
-                    if ab_set == prev_set:
-                        break
-                    has_replays = bool(prev_set - ab_set)
-                    if not has_ec and not has_replays:
-                        # early exit: no NEWLY aborted txn applied a
-                        # single link write, so excluding it changes no
-                        # chain — the votes are already the fixpoint.
-                        # (Replays always force a refold: their writes
-                        # must re-enter the chains.)
-                        new_ab = ab_set - prev_set
-                        nmask = (gpdf["vote"] == ABORT) & gpdf["_tid"].isin(new_ab)
-                        if not bool((gpdf.loc[nmask, "any_commit"] == 1).any()):
-                            break
-                else:
-                    # distributed branch (cluster 'reliable'/'ckpt'
-                    # materialize): ONE control job per round instead of
-                    # up to four (optimization r15, guide §5 — each
-                    # count()/limit(1).count() was a full job dispatch
-                    # on the multi-JVM path, and the cascade pays them
-                    # EVERY round).  gvotes carries every epoch tid
-                    # exactly once (tids left-joined to the per-tid vote
-                    # merge), so prev-set membership rides one left join
-                    # against the previous (checkpoint-rooted) abort set
-                    # and all four control reads collapse into a single
-                    # one-row aggregate: n_aborted, n_new (aborted ∧
-                    # ∉prev), has_replays (∈prev ∧ no longer aborted),
-                    # and the new-contamination flag (new abort that
-                    # chain-committed a link) — bitwise the same
-                    # break conditions as the four separate scans.
-                    gv = (
-                        gvotes.join(
-                            prev_df.withColumn("__prev", F.lit(1)), "_tid", "left"
-                        )
-                        if prev_df is not None
-                        else gvotes.withColumn("__prev", F.lit(None).cast("int"))
-                    )
-                    is_ab = F.col("vote") == ABORT
-                    is_new = is_ab & F.col("__prev").isNull()
-                    ctl = gv.agg(
-                        F.sum(is_ab.cast("long")).alias("n_ab"),
-                        F.sum(is_new.cast("long")).alias("n_new"),
-                        F.max(((~is_ab) & F.col("__prev").isNotNull()).cast("int")).alias(
-                            "replays"
-                        ),
-                        F.max((is_new & (F.col("any_commit") == 1)).cast("int")).alias(
-                            "contam"
-                        ),
-                    ).collect()[0]
-                    n_aborted = int(ctl["n_ab"] or 0)
-                    n_new = int(ctl["n_new"] or 0)
-                    has_replays = bool(ctl["replays"])
-                    if n_new == 0 and not has_replays:
-                        break
-                    if not has_ec and not has_replays and not bool(ctl["contam"]):
-                        break
+                gv = (
+                    gvotes.join(prev_df.withColumn("__prev", F.lit(1)), "_tid", "left")
+                    if prev_df is not None
+                    else gvotes.withColumn("__prev", F.lit(None).cast("int"))
+                )
+                is_ab = F.col("vote") == ABORT
+                is_new = is_ab & F.col("__prev").isNull()
+                ctl = gv.agg(
+                    F.sum(is_ab.cast("long")).alias("n_ab"),
+                    F.sum(is_new.cast("long")).alias("n_new"),
+                    F.max(((~is_ab) & F.col("__prev").isNotNull()).cast("int")).alias(
+                        "replays"
+                    ),
+                    F.max((is_new & (F.col("any_commit") == 1)).cast("int")).alias(
+                        "contam"
+                    ),
+                ).collect()[0]
+                n_aborted = int(ctl["n_ab"] or 0)
+                n_new = int(ctl["n_new"] or 0)
+                has_replays = bool(ctl["replays"])
+                if n_new == 0 and not has_replays:
+                    break
+                if not has_ec and not has_replays and not bool(ctl["contam"]):
+                    # early exit: no NEWLY aborted txn applied a single
+                    # link write, so excluding it changes no chain — the
+                    # votes are already the fixpoint.  (Replays always
+                    # force a refold: their writes must re-enter the
+                    # chains.)
+                    break
                 # Fixpoint, not a fixed cap: per the tid-order argument
                 # above the round count is bounded by the epoch's
                 # longest dependency chain. A silent cap would commit
@@ -1226,31 +1074,14 @@ class GraphRunner:
                         "abort cascade failed to converge: aborted set still "
                         f"changing after {rounds} rounds ({n_aborted} aborted)"
                     )
-                excluded = aborted
-                if gpdf is not None:
-                    prev_set = ab_set
                 prev_df = aborted
-                # key-local refold pays off when aborted txns are a
-                # sliver of the epoch (hot-key contention); past ~5%
-                # the extra semi/anti joins cost more than the refold
-                # they avoid — use the plain full refold there.
-                n_txns = len(gpdf) if gpdf is not None else None
-                full_refold = (
-                    n_txns is not None and n_aborted > FULL_REFOLD_FRAC * n_txns
-                )
-                votes_parts, writes_parts = exec_states(excluded, full_refold)
+                votes_parts, writes_parts = exec_states(aborted)
                 gvotes = materialize(self._merge_votes(tids, votes_parts))
-                if _DEBUG:
-                    t0 = _dbg(
-                        f"cascade_round {rounds} aborted={n_aborted} "
-                        f"full={full_refold}",
-                        t0,
-                    )
+                t0 = _dbg(f"cascade_round {rounds} aborted={n_aborted}", t0)
             t0 = _dbg("abort_cascade", t0)
 
         return self._finish_close(
-            epoch, src, stream, gvotes, lambda: writes_parts, spus,
-            fused_updates_pdf, driver_res, t0,
+            epoch, src, stream, gvotes, lambda: writes_parts, spus, None, t0
         )
 
     def _driver_close(
@@ -1306,7 +1137,7 @@ class GraphRunner:
 
         t0 = _dbg(f"driver_close rounds={out.rounds}", t0)
         return self._finish_close(
-            epoch, src, stream, gvotes, writes_supplier, spus, None, out, t0
+            epoch, src, stream, gvotes, writes_supplier, spus, out, t0
         )
 
     def _finish_close(
@@ -1317,7 +1148,6 @@ class GraphRunner:
         gvotes: DataFrame,
         writes_supplier,
         spus: DataFrame | None,
-        fused_updates_pdf,
         driver_res,
         t0: float,
     ) -> EpochResult:
@@ -1393,21 +1223,18 @@ class GraphRunner:
             return results
 
         spu_results = None
-        pandas_commit = spus is None and (
-            fused_updates_pdf is not None
-            or (
-                driver_res is not None
-                and all(store.can_commit_pandas(n) for n in driver_res.finals)
-            )
+        pandas_commit = (
+            spus is None
+            and driver_res is not None
+            and all(store.can_commit_pandas(n) for n in driver_res.finals)
         )
         t0 = _dbg("build_updates", t0)
         if pandas_commit:
-            # resolved finals already live driver-side (fused no-abort
-            # materialize, or the driver close) — pandas merge, zero
-            # Spark jobs
+            # resolved finals already live driver-side (the driver
+            # close) — pandas merge, zero Spark jobs
             store.commit_pandas(
                 epoch,
-                fused_updates_pdf if fused_updates_pdf is not None else driver_res.finals,
+                driver_res.finals,
                 batch_id=getattr(self, "_batch_id", None),
                 query_id=getattr(self, "_query_id", None),
             )

@@ -111,7 +111,7 @@ class StateStore:
         # ("mem", deep-pandas-bytes) or ("parquet", on-disk bytes)
         self._spill_bytes: dict[str, tuple[str, int]] = {}
         # driver-side pandas twin of small in-memory snapshots — the
-        # no-abort fused commit merges state here with ZERO Spark jobs.
+        # driver close's commit_pandas merges state here with ZERO Spark jobs.
         # Only populated on the pandas materialize path; absent (None)
         # means the namespace is on the distributed spill path.
         self._current_pdf: dict[str, "object"] = {}
@@ -336,7 +336,7 @@ class StateStore:
             self._inflight = None
 
     def can_commit_pandas(self, name: str) -> bool:
-        """True when the fused driver-side commit is valid for this
+        """True when the driver-side pandas commit is valid for this
         namespace: non-durable store, pandas twin present (small
         in-memory snapshot on the local materialize path), and the cut
         cadence is per-epoch (the twin mirrors `_current` exactly)."""
@@ -360,9 +360,9 @@ class StateStore:
         batch_id: int | None = None,
         query_id: str | None = None,
     ) -> None:
-        """Fused no-abort commit: merge the epoch's resolved updates
-        ({namespace: pandas frame}, already driver-side via the epoch's
-        single fused materialize) into the pandas snapshot twins — ZERO
+        """Driver-close commit: merge the epoch's resolved updates
+        ({namespace: pandas frame}, already driver-side via the driver
+        close, tx/driver_cascade.py) into the pandas snapshot twins — ZERO
         Spark jobs. Semantics identical to commit() + _nondurable_cut
         on the pandas path: last-writer-wins upsert, per-epoch lineage
         cut (the new current IS a LocalRelation), full history
@@ -376,7 +376,7 @@ class StateStore:
             raise ValueError(f"epoch {epoch} != committed {self._committed} + 1")
         # pandas twins ride the in-flight overlay as-is (zero cost: dict
         # of references); read_uncommitted converts on demand — the
-        # fused-commit window is tiny, but the PL0 semantics stay
+        # pandas-commit window is tiny, but the PL0 semantics stay
         # uniform across commit paths.
         self._inflight = (epoch, dict(updates_pdfs))
         try:
@@ -423,7 +423,7 @@ class StateStore:
     # above (or on a cluster) the distributed parquet spill takes over.
     # A LocalRelation snapshot is embedded in every downstream job's
     # task binary, so multi-MB state re-ships with each epoch job — but
-    # since the driver-side cascade + fused commit landed, a local-mode
+    # since the driver-side cascade + pandas commit landed, a local-mode
     # epoch runs 1-3 jobs total, and measurements at the loaded-latency
     # operating point (26k-txn epochs, 100k-key state ≈ 6.5 MB deep)
     # show the twin saving ~2 s/epoch of spill-commit against ~0.2 s of
@@ -464,14 +464,18 @@ class StateStore:
             else self.SMALL_SNAPSHOT_PARQUET_BYTES
         )
         if small and materialize_mode(self.spark) == "pandas":
-            pdf = merged.toPandas()
+            tbl = merged.toArrow()
+            pdf = tbl.to_pandas()
             self._spill_bytes[name] = ("mem", int(pdf.memory_usage(deep=True).sum()))
             self._current_pdf[name] = pdf
             # A namespace that spilled to parquet in an earlier epoch and
             # shrank back under the threshold must still drop its stale
             # base dirs — the in-memory frame supersedes them (ADVICE r4).
             self._gc_bases(name, epoch)
-            return self.spark.createDataFrame(pdf, schema=merged.schema)
+            # the snapshot is rebuilt from the Arrow table, not the pandas
+            # twin: pandas holds NULL and NaN alike as NaN, and a NaN
+            # value must stay NaN as it does on the spill path
+            return self.spark.createDataFrame(tbl, schema=merged.schema)
         self._current_pdf.pop(name, None)
         est_b = est if kind == "parquet" else est // 6  # ~parquet compression
         n_parts = max(1, est_b // (64 << 20) + 1)

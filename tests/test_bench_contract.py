@@ -140,6 +140,22 @@ def test_spread_keys_shed_before_x_rows():
     assert len(line) <= bench.MAX_LINE_BYTES
 
 
+def test_unrounded_spread_does_not_lengthen_packed_key():
+    """`txn_lat_sp` prints each spread from a bounded repr: an unrounded
+    float (a spread computed outside _median_discard_first) packs to
+    exactly the length of its one-decimal rounded form, never to the
+    ~18-character repr that would push the key off the line."""
+    raw = {n: 12345.6 + 1.0 / 3.0 for n in bench._SP_ORDER}
+    rounded = {n: round(v, 1) for n, v in raw.items()}
+    assert str(raw[bench._SP_ORDER[0]]) != str(rounded[bench._SP_ORDER[0]])
+    packed = bench.pack_spreads(raw)
+    assert len(packed) == len(bench.pack_spreads(rounded))
+    assert packed == "/".join(["12345.9"] * 5)
+    # a missing pin still reads "-", and small spreads stay short
+    partial = bench.pack_spreads({bench._SP_ORDER[0]: 0.04999999999})
+    assert partial == "0/-/-/-/-"
+
+
 def test_median_discard_first_protocol():
     """pin-cluster-v2 (round-13 verdict #2): first post-warm-up epoch
     discarded, median of the kept walls, spread = max-min of kept."""

@@ -67,9 +67,11 @@ def _spec(rows):
 
 @pytest.mark.parametrize("rows", [REPRO, REPRO2, REPRO3], ids=["r7", "re-abort", "deep"])
 @pytest.mark.parametrize("isolation", ["PL3", "PL4"])
-@pytest.mark.parametrize("driver_cascade", [True, False], ids=["driver", "distributed"])
-def test_contaminated_abort_replays(spark, monkeypatch, rows, isolation, driver_cascade):
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", driver_cascade)
+@pytest.mark.parametrize("mode", ["pandas", "reliable"], ids=["driver", "distributed"])
+def test_contaminated_abort_replays(spark, monkeypatch, rows, isolation, mode):
+    # the materialize mode selects the close: 'pandas' runs the driver
+    # close, 'reliable' the distributed close a cluster runs
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", mode)
     want, want_votes = _spec(rows)
     got, got_votes = _run(spark, rows, isolation)
     assert got == want

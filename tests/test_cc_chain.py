@@ -28,7 +28,7 @@ def test_chain_cluster_path_log_rounds(spark, monkeypatch):
     chain each round — 64 nodes in <= log2(64)+2 = 8 rounds, where bare
     min-propagation would need 63."""
     n = 64
-    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "ckpt")
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     stats: dict = {}
     out = connected_components(_chain_pairs(spark, n), stats=stats)
     got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}

@@ -1,17 +1,17 @@
 """Driver-side close / abort-cascade fixpoint (tx/driver_cascade.py).
 
-The pandas-mode close replaces the fused union job and the distributed
-refold loop with a driver-resident fixpoint over batch-sized control
-frames.  These tests pin:
+The pandas-mode close runs the abort-cascade fixpoint driver-resident
+over batch-sized control frames.  These tests pin:
 
-- RESULT IDENTITY with the distributed path (TSPOON_DRIVER_CASCADE=0)
-  across contended PL3/PL4, multi-namespace, epoch_combine, and
-  py_update workloads — same votes, same balances, same epoch count;
+- RESULT IDENTITY with the distributed close, run the way a cluster
+  reaches it (materialize mode 'reliable'), across contended PL3/PL4,
+  multi-namespace, epoch_combine, and py_update workloads — same votes,
+  same balances, same epoch count;
 - the SQL-fragment -> Python compiler's Spark semantics (null
   propagation, CASE, CAST truncation, UTF-8 ordering) — checked
   end-to-end by running the SAME update expression through both paths;
-- the eligibility fallback: a non-whitelisted expression (division)
-  silently keeps the distributed path, never a wrong answer.
+- the eligibility fallback: a non-whitelisted expression (exp) makes a
+  local session take the distributed close, never a wrong answer.
 """
 
 from __future__ import annotations
@@ -70,9 +70,9 @@ def _run_bank(spark, *, isolation="PL3", update=None, invariant="value >= 0",
 
 
 def _both_paths(spark, monkeypatch, **kw):
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     on = _run_bank(spark, **kw)[:3]
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     off = _run_bank(spark, **kw)[:3]
     return on, off
 
@@ -154,12 +154,12 @@ def test_parity_bigint_cast_truncation(spark, monkeypatch):
 def test_unknown_function_falls_back_to_distributed(spark, monkeypatch):
     """A function outside the compiler whitelist (exp) must mark the
     graph ineligible and keep the distributed cascade — with the same
-    results as pinning it off explicitly."""
+    results as the distributed close in 'reliable' mode."""
     upd = lambda v: v + F.col("delta") * F.exp(F.lit(0.0))  # noqa: E731
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     votes_on, bal_on, n_on, runner = _run_bank(spark, update=upd, overdraws=3)
     assert runner._dc_compiled is False  # compile tried once, ineligible
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     votes_off, bal_off, n_off, _ = _run_bank(spark, update=upd, overdraws=3)
     assert (votes_on, bal_on, n_on) == (votes_off, bal_off, n_off)
 
@@ -275,10 +275,10 @@ def test_parity_no_pre_combine_full_struct_sort(spark, monkeypatch):
         bal = {r["key"]: r["value"] for r in env.store.read("balances").collect()}
         return votes, bal, runner
 
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     votes_on, bal_on, runner = run()
     assert isinstance(runner._dc_compiled, list)  # eligible, driver path ran
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     votes_off, bal_off, _ = run()
     assert (votes_on, bal_on) == (votes_off, bal_off)
     assert votes_on.get("ABORT", 0) >= 1
@@ -320,9 +320,9 @@ def test_parity_bigint_values_past_2_53(spark, monkeypatch):
         bal = {r["key"]: r["value"] for r in env.store.read("balances").collect()}
         return votes, bal
 
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     on = run()
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     off = run()
     assert on == off
     # odd-offset exactness: a float64 round-trip would have flattened +3
@@ -368,9 +368,9 @@ def test_nan_record_values_fall_back(spark, monkeypatch):
         }
         return votes, bal
 
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     on = run()
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     off = run()
     v_on, b_on = on
     v_off, b_off = off
@@ -391,8 +391,8 @@ def test_null_record_values_stay_on_driver_path(spark, monkeypatch):
     NULL candidate fails the invariant (unknown -> ABORT) identically
     in both engines."""
 
-    def run(flag):
-        monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", flag)
+    def run(mode):
+        monkeypatch.setattr(runner_mod, "_MATERIALIZE", mode)
         env = TxEnvironment(spark, isolation="PL3")
         env.create_namespace("balances", "double", 100.0, invariant="value >= 0")
         g = (
@@ -422,10 +422,10 @@ def test_null_record_values_stay_on_driver_path(spark, monkeypatch):
         bal = {r["key"]: r["value"] for r in env.store.read("balances").collect()}
         return votes, bal, runner
 
-    v_on, b_on, runner = run(True)
+    v_on, b_on, runner = run("pandas")
     assert isinstance(runner._dc_compiled, list)  # still eligible
     assert v_on[40] == "ABORT"
-    v_off, b_off, _ = run(False)
+    v_off, b_off, _ = run("reliable")
     assert (v_on, b_on) == (v_off, b_off)
 
 
@@ -434,7 +434,7 @@ def test_array_value_column_falls_back(spark, monkeypatch):
     struct; an array-typed record column is not driver-sortable, so the
     compile gate must mark the graph ineligible and the distributed
     path must produce the (identical) answer."""
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
 
     def run():
         env = TxEnvironment(spark, isolation="PL3")
@@ -457,7 +457,7 @@ def test_array_value_column_falls_back(spark, monkeypatch):
 
     votes_on, bal_on, runner = run()
     assert runner._dc_compiled is False  # ineligible, distributed path ran
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     votes_off, bal_off, _ = run()
     assert (votes_on, bal_on) == (votes_off, bal_off)
     assert votes_on.get("ABORT", 0) == 1
@@ -466,6 +466,6 @@ def test_array_value_column_falls_back(spark, monkeypatch):
 def test_driver_close_engages_on_bank_graph(spark, monkeypatch):
     """Guard against silent fallback: the canonical bank graph must
     actually compile and take the driver path in pandas mode."""
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", True)
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "pandas")
     _votes, _bal, _n, runner = _run_bank(spark, overdraws=2)
     assert isinstance(runner._dc_compiled, list) and runner._dc_compiled

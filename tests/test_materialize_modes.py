@@ -117,23 +117,8 @@ def test_default_mode_keyed_off_master(spark, monkeypatch):
     monkeypatch.setattr(runner_mod, "_MATERIALIZE", "reliable")
     assert runner_mod.materialize_mode(spark) == "reliable"
 
+    # exactly two modes: anything else is refused
+    monkeypatch.setattr(runner_mod, "_MATERIALIZE", "ckpt")
+    with pytest.raises(ValueError):
+        runner_mod.materialize_mode(spark)
 
-def test_refold_strategies_result_identical(spark, monkeypatch):
-    """The DISTRIBUTED cascade's two refold strategies — key-local
-    (refold only keys touched by aborted txns) and full (refold
-    everything) — must produce identical votes and final balances on a
-    workload with aborts, cascades, and cross-key contamination.
-    Driver cascade pinned OFF so the Spark refold paths stay covered
-    (their driver twin is pinned by tests/test_driver_cascade.py)."""
-    monkeypatch.setattr(runner_mod, "_DRIVER_CASCADE", False)
-    out = {}
-    for frac, tag in [(2.0, "key_local"), (-1.0, "full")]:
-        # frac > 1: n_aborted never exceeds it -> always key-local;
-        # frac < 0: any abort -> always full
-        monkeypatch.setattr(runner_mod, "FULL_REFOLD_FRAC", frac)
-        out[tag] = _run(spark, "pandas", monkeypatch)
-    votes_a, bal_a, n_a = out["key_local"]
-    votes_b, bal_b, n_b = out["full"]
-    assert votes_a == votes_b
-    assert bal_a == bal_b
-    assert n_a == n_b

@@ -3,8 +3,9 @@ mode, the runner skips BUILDING the chain-fold plan and evaluates every
 chain driver-side with the vectorized fold — per-epoch Catalyst
 re-analysis of the multi-KB fold expression was the unloaded-latency
 floor (r11 verdict next-round #2; measured 547 -> 229 ms on the probe
-box).  These tests pin the path's equivalence to the standard fused
-close and its fallback behavior.
+box).  These tests pin the path's equivalence to the evaluated-pull
+driver close (pinned by _OPS_FOLD_MAX_TXNS = -1) and its fallback
+behavior.
 """
 
 from __future__ import annotations
@@ -85,7 +86,7 @@ class TestOpsFoldEquivalence:
         votes_h, bal_h = _run_workload(spark, runner_h)
         assert engaged["n"] >= 1, "hot path never engaged"
 
-        monkeypatch.setattr(runner_mod, "_OPS_FOLD", False)
+        monkeypatch.setattr(runner_mod, "_OPS_FOLD_MAX_TXNS", -1)
         env_p, runner_p = _bank_env(spark)
         votes_p, bal_p = _run_workload(spark, runner_p)
         assert votes_h == votes_p
@@ -119,7 +120,7 @@ class TestOpsFoldEquivalence:
 
         _env, r_h = mk()
         votes_h, bal_h = _run_workload(spark, r_h)
-        monkeypatch.setattr(runner_mod, "_OPS_FOLD", False)
+        monkeypatch.setattr(runner_mod, "_OPS_FOLD_MAX_TXNS", -1)
         _env, r_p = mk()
         votes_p, bal_p = _run_workload(spark, r_p)
         assert (votes_h, bal_h) == (votes_p, bal_p)

@@ -1,7 +1,8 @@
 """Property-based parity for the ops-fold hot path (round 12): random
 contended bank workloads, split across random epoch boundaries, must
 produce IDENTICAL per-txn votes and final balances on the ops-fold
-path and on the pinned fused-JVM path — including overdraft aborts,
+path and on the evaluated-pull driver close (the JVM chain fold,
+pinned by _OPS_FOLD_MAX_TXNS = -1) — including overdraft aborts,
 hot-key chains, and cross-epoch state carry.
 
 Few examples by design: each example runs two full multi-epoch engines
@@ -106,13 +107,13 @@ def _workloads(draw):
 def test_ops_fold_matches_pinned_on_random_workloads(spark, wl):
     rows, cuts = wl
     # hot path (default): engages from the second epoch of each run
-    runner_mod._OPS_FOLD = True
     votes_h, bal_h = _run(spark, rows, cuts)
+    max_txns = runner_mod._OPS_FOLD_MAX_TXNS
     try:
-        runner_mod._OPS_FOLD = False
+        runner_mod._OPS_FOLD_MAX_TXNS = -1
         votes_p, bal_p = _run(spark, rows, cuts)
     finally:
-        runner_mod._OPS_FOLD = True
+        runner_mod._OPS_FOLD_MAX_TXNS = max_txns
     assert votes_h == votes_p
     assert bal_h == bal_p
     # money conservation holds on both (identical, so check once)

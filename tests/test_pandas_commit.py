@@ -1,7 +1,9 @@
-"""Fused no-abort commit path (tx/runner.py fused materialize +
-StateStore.commit_pandas): one Spark job per clean epoch, exact
-equivalence with the standard two-action path, and correct fall-through
-when transactions abort.
+"""StateStore.commit_pandas against StateStore.commit through the driver
+close: the driver close hands its resolved finals to commit_pandas when
+the store keeps a pandas twin (non-durable, checkpoint_every=1), and to
+the Spark commit otherwise (checkpoint_every=2).  Both must yield the
+same votes and snapshots — with aborts, over several epochs and
+namespaces, with history for time travel, and with int64 tids past 2^53.
 """
 
 from __future__ import annotations
@@ -49,10 +51,10 @@ def _run_epochs(env, batches):
     return votes, snap
 
 
-def test_fused_equals_standard_path_no_aborts(spark):
-    """checkpoint_every=1 (fused-eligible) and checkpoint_every=2
-    (standard path: can_commit_pandas is False) must produce identical
-    votes and identical final snapshots on a clean workload."""
+def test_pandas_commit_equals_commit_no_aborts(spark):
+    """checkpoint_every=1 (commit_pandas) and checkpoint_every=2
+    (commit: can_commit_pandas is False) must produce identical votes
+    and identical final snapshots on a clean workload."""
     rows1 = [("a", "b", 10.0), ("b", "c", 5.0)]
     rows2 = [("c", "a", 3.0), ("a", "c", 1.0)]
 
@@ -71,10 +73,10 @@ def test_fused_equals_standard_path_no_aborts(spark):
     assert all(v.get("ABORT", 0) == 0 for v in v_f)
 
 
-def test_fused_falls_through_on_abort(spark):
-    """An epoch with an invariant abort must discard the optimistic
-    finals and commit via the standard path — the aborted transfer's
-    writes are excluded, the committing ones land."""
+def test_pandas_commit_excludes_aborted_writes(spark):
+    """An epoch with an invariant abort commits through commit_pandas
+    with the aborted transfer's writes excluded and the committing ones
+    landed."""
     env = TxEnvironment(spark, isolation="PL3")
     env.create_namespace("balances", "double", 100.0, invariant="value >= 0")
     # tid 1 overdraws (abort); tid 2 is clean
@@ -84,7 +86,7 @@ def test_fused_falls_through_on_abort(spark):
     assert votes[0].get("ABORT", 0) == 1
     assert votes[0].get("COMMIT", 0) == 1
     assert snap == {"c": 90.0, "d": 110.0}
-    # next epoch is clean again and must re-enter the fused path
+    # the next clean epoch commits on top of that snapshot
     votes2, snap2 = [], {}
     runner = env.runner(_graph(env))
     res = runner.run_epoch(_batch(spark, [("d", "a", 5.0)], 50))
@@ -93,7 +95,7 @@ def test_fused_falls_through_on_abort(spark):
     assert snap2 == {"c": 90.0, "d": 105.0, "a": 105.0}
 
 
-def test_fused_history_and_time_travel(spark):
+def test_pandas_commit_history_and_time_travel(spark):
     """commit_pandas must keep the same history contract as commit():
     every namespace readable at every retained epoch boundary."""
     env = TxEnvironment(spark, isolation="PL3")
@@ -138,10 +140,9 @@ def _two_ns_graph(env):
     )
 
 
-def test_fused_multi_namespace_parallel_states(spark):
-    """The fused path generalizes to multiple namespaces sharing one
-    value type: a parallel two-state graph commits both snapshots from
-    ONE fused materialize, matching the standard path exactly."""
+def test_pandas_commit_multi_namespace_parallel_states(spark):
+    """commit_pandas covers several namespaces in one epoch: a parallel
+    two-state graph commits both snapshots, matching commit exactly."""
     rows = [("a", "b", 10.0), ("b", "c", 5.0)]
 
     def run(checkpoint_every):
@@ -155,19 +156,20 @@ def test_fused_multi_namespace_parallel_states(spark):
         tc = {r["key"]: r["value"] for r in env.store.read("touch_counts").collect()}
         return res.vote_counts(), bal, tc
 
-    v_f, bal_f, tc_f = run(None)  # fused-eligible
-    v_s, bal_s, tc_s = run(2)  # standard path
+    v_f, bal_f, tc_f = run(None)  # commit_pandas
+    v_s, bal_s, tc_s = run(2)  # commit
     assert v_f == v_s
     assert bal_f == bal_s == {"a": 90.0, "b": 105.0, "c": 105.0}
     assert tc_f == tc_s == {"a": 1.0, "b": 2.0, "c": 1.0}
 
 
-def test_fused_preserves_large_tids_exactly(spark):
+def test_pandas_commit_preserves_large_tids_exactly(spark):
     """Stamped tids exceed 2^53 from epoch ~8191 ((epoch+1)<<40 | row).
-    The fused frame must keep _tid int64 end-to-end — a null-bearing
-    Arrow int column degrades to float64, where adjacent huge tids
-    collide and votes merge across transactions. Two adjacent tids just
-    past 2^53, one aborting: the abort must land on the right tid."""
+    The driver close's frames must keep _tid int64 end-to-end — a
+    null-bearing Arrow int column degrades to float64, where adjacent
+    huge tids collide and votes merge across transactions. Two adjacent
+    tids just past 2^53, one aborting: the abort must land on the right
+    tid."""
     base = 1 << 53
     env = TxEnvironment(spark, isolation="PL3")
     env.create_namespace("balances", "double", 100.0, invariant="value >= 0")
