@@ -12,6 +12,14 @@ at that pin, and returns control-plane-sized JSON rows.  Concurrent
 epochs keep committing underneath; the pin guarantees each response is
 one consistent snapshot (SURVEY.md §2.4 Q1/Q2/Q4).
 
+A committed ``keys`` lookup on a small snapshot answers from the
+store's driver-side pandas twin of the pinned epoch
+(``StateStore.read_twin``) and runs no Spark job — as the reference
+reads a shard's in-memory versions at the watermark
+(tgraph/db/Shard.java:186-217).  Large state, ``uncommitted`` reads,
+predicates and SQL run on Spark; for small state their frame is the
+twin's LocalRelation.
+
 In-process use (no socket)::
 
     svc = StateService(env)
@@ -49,6 +57,13 @@ import socket
 import socketserver
 import threading
 from typing import Any
+
+# value types whose twin values convert to the same JSON as a Spark Row's
+# (other types, e.g. arrays or structs, answer key lookups on Spark)
+_TWIN_VALUE_TYPES = frozenset(
+    ("double", "float", "bigint", "long", "int", "integer", "smallint", "tinyint",
+     "string", "boolean")
+)
 
 # leading statement keywords accepted on the NETWORK sql op — queries
 # only, nothing that mutates session state or catalog
@@ -106,6 +121,19 @@ def _is_read_only_sql(query: str, spark=None) -> bool:
     except Exception:  # noqa: BLE001 — parse failure: reject, don't execute
         return False
     return not any(node in tree for node in _MUTATING_NODES)
+
+
+def _twin_rows(twin, keys: list) -> list:
+    """``[[key, value]]`` of the twin rows for ``keys``, ordered by key
+    (Python ``str`` order is code-point order, the order of Spark's
+    UTF-8 byte comparison), values as plain Python objects."""
+    import numpy as np
+
+    sub = twin[twin["key"].isin(keys)].sort_values("key")
+    return [
+        [k, v.item() if isinstance(v, np.generic) else v]
+        for k, v in zip(sub["key"].tolist(), sub["value"].tolist())
+    ]
 
 
 def _keyset_predicate(keyset: dict):
@@ -177,6 +205,10 @@ class StateService:
             return self.max_rows
         return max(0, min(int(limit), self.max_rows))
 
+    def _twin_readable(self, ns: str) -> bool:
+        nso = self.env.namespaces.get(ns)
+        return nso is not None and nso.value_type.strip().lower() in _TWIN_VALUE_TYPES
+
     def _snapshot(self, ns: str, epoch: int | None, freshness: str):
         """(frame, effective_epoch, uncommitted?) for one request.
         ``freshness='uncommitted'`` (round-13): answer from the
@@ -202,7 +234,8 @@ class StateService:
     ) -> dict[str, Any]:
         from pyspark.sql import functions as F
 
-        frame, pin, uncommitted = self._snapshot(ns, epoch, freshness)
+        from t_spoon_spark.tx.env import check_freshness
+
         cap = self._cap(limit)
         # the key list itself bounds the result, but a client can send
         # an arbitrarily long list — cap it like every other payload.
@@ -213,8 +246,27 @@ class StateService:
         keys = list(keys)
         dropped = max(0, len(keys) - cap)
         keys = keys[:cap]
-        rows = frame.filter(F.col("key").isin(keys)).orderBy("key").collect()
-        out = {"epoch": pin, "rows": [[r["key"], r["value"]] for r in rows]}
+        twin = None
+        # a non-string key (JSON null, a number) takes Spark's IN
+        # semantics: NULL never matches, numbers compare after a cast
+        if (
+            not check_freshness(freshness, epoch)
+            and self._twin_readable(ns)
+            and all(isinstance(k, str) for k in keys)
+        ):
+            # one pin for both paths: the Spark fallback reads the same
+            # epoch the twin lookup resolved
+            epoch = self.pin(epoch)
+            twin = self.env.store.read_twin(ns, epoch)
+        if twin is not None:
+            pin, uncommitted, rows = epoch, False, _twin_rows(twin, keys)
+        else:
+            frame, pin, uncommitted = self._snapshot(ns, epoch, freshness)
+            rows = [
+                [r["key"], r["value"]]
+                for r in frame.filter(F.col("key").isin(keys)).orderBy("key").collect()
+            ]
+        out = {"epoch": pin, "rows": rows}
         if uncommitted:
             out["uncommitted"] = True
         if dropped:

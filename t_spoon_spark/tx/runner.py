@@ -1156,8 +1156,7 @@ class GraphRunner:
         results plans are built lazily: an epoch that commits via the
         pandas store twin and is only asked for vote counts never pays
         their construction."""
-        env = self.env
-        store = env.store
+        store = self.env.store
 
         commit_tids = gvotes.filter(F.col("vote") == COMMIT).select("_tid")
         built: dict[str, object] = {}
@@ -1229,12 +1228,18 @@ class GraphRunner:
             and all(store.can_commit_pandas(n) for n in driver_res.finals)
         )
         t0 = _dbg("build_updates", t0)
+        wal = None
+        if store.durable:
+            wal = build_results().select(
+                "_tid", "_ts", "vote", F.to_json(F.col("updates")).alias("updates_json")
+            )
         if pandas_commit:
             # resolved finals already live driver-side (the driver
-            # close) — pandas merge, zero Spark jobs
+            # close) — pandas merge, no Spark job but the durable writes
             store.commit_pandas(
                 epoch,
                 driver_res.finals,
+                wal,
                 batch_id=getattr(self, "_batch_id", None),
                 query_id=getattr(self, "_query_id", None),
             )
@@ -1243,12 +1248,6 @@ class GraphRunner:
             if spus is not None:
                 # single-partition updates run after the epoch's txns
                 spu_results, updates = self._apply_spus(spus, updates)
-            wal = None
-            if env.store.durable:
-                results = build_results()
-                wal = results.select(
-                    "_tid", "_ts", "vote", F.to_json(F.col("updates")).alias("updates_json")
-                )
             store.commit(
                 epoch,
                 updates,

@@ -17,6 +17,22 @@ same guarantee the reference's WAL-then-notify gives
 ``committed_epoch()`` and get snapshot isolation for free
 (tgraph/db/Shard.java:170-184 readCommittedBefore ≘ read at marker).
 
+Both commits keep one order: log files, WAL, marker, compacted base
+(every ``checkpoint_every`` epochs), and only then the in-memory
+publish.  The publish lands every namespace's snapshot under
+``(ns, epoch)`` before the watermark moves, so a reader pinned at an
+older epoch never sees a frame of the epoch being committed.
+
+Small snapshots (under ``SMALL_SNAPSHOT_*``, local session) also keep a
+driver-side pandas twin per retained epoch: the driver close merges
+into it with :meth:`StateStore.commit_pandas` (the durable files are
+written from it), the committed frame is the twin's LocalRelation, and
+key lookups (:meth:`StateStore.read_twin`, used by ``serve.py``) answer
+from it with no Spark job — the reference likewise reads a shard's
+in-memory versions at the watermark (tgraph/db/Shard.java:186-217).
+Large state and cluster sessions stay on :meth:`StateStore.commit`,
+whose snapshots never pass through the driver.
+
 In-memory mode skips the filesystem and keeps the same epoch/versioning
 contract for tests and rate benchmarks.
 """
@@ -30,6 +46,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from t_spoon_spark.tx.namespace import Namespace
 
@@ -42,7 +59,36 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _nan_as_null(pdf):
+    """The driver close's finals in the twin's convention.  The close
+    never emits a NaN value (a NaN chain value makes the epoch take the
+    distributed close), so a NaN there is a NULL pandas coerced to
+    float — it reads as NULL, as the Spark conversion of the frame
+    always made it."""
+    pdf = pdf[["key", "value"]]
+    v = pdf["value"]
+    if v.dtype.kind == "f" and v.isna().any():
+        pdf = pdf.assign(value=v.astype(object).where(v.notna(), None))
+    return pdf
+
+
 class StateStore:
+    # Snapshots estimated under these keep a pandas twin (local session);
+    # above (or on a cluster) the distributed parquet path takes over.
+    # A LocalRelation snapshot is embedded in every downstream job's
+    # task binary, so multi-MB state re-ships with each epoch job — but
+    # since the driver-side cascade + pandas commit landed, a local-mode
+    # epoch runs 1-3 jobs total, and measurements at the loaded-latency
+    # operating point (26k-txn epochs, 100k-key state ≈ 6.5 MB deep)
+    # show the twin saving ~2 s/epoch of spill-commit against ~0.2 s of
+    # extra task-binary shipping.  16 MB covers that point with margin.
+    # Two thresholds because the two estimators measure different
+    # units (pandas deep in-memory bytes vs compressed parquet bytes,
+    # ~6x apart) — a single cutoff oscillates between the paths on
+    # state near the boundary, alternating the commit cost every epoch.
+    SMALL_SNAPSHOT_MEM_BYTES = 16 << 20
+    SMALL_SNAPSHOT_PARQUET_BYTES = 2560 << 10
+
     def __init__(
         self,
         spark: SparkSession,
@@ -89,7 +135,11 @@ class StateStore:
         self.checkpoint_every = checkpoint_every
         self.max_epochs = max_epochs
         self.namespaces: dict[str, Namespace] = {}
+        # newest published snapshot per namespace; a commit rebinds the
+        # whole dict at publish, never mutates a published one
         self._current: dict[str, DataFrame] = {}
+        # every retained epoch's snapshot, the newest included — reads
+        # resolve by (ns, epoch), so a publish in progress cannot tear them
         self._history: dict[tuple[str, int], DataFrame] = {}
         self._committed = -1
         # highest streaming batch_id whose epoch committed — the
@@ -107,14 +157,18 @@ class StateStore:
         # as soon as query B commits — a redelivered A batch would then
         # double-apply. Keyed by query identity (checkpoint location).
         self.batch_frontiers: dict[str, int] = {}
-        # per-namespace size estimate for the non-durable cut:
-        # ("mem", deep-pandas-bytes) or ("parquet", on-disk bytes)
+        # per-namespace snapshot size estimate for the twin/parquet
+        # choice: ("mem", deep-pandas-bytes) or ("parquet", on-disk bytes)
         self._spill_bytes: dict[str, tuple[str, int]] = {}
-        # driver-side pandas twin of small in-memory snapshots — the
-        # driver close's commit_pandas merges state here with ZERO Spark jobs.
-        # Only populated on the pandas materialize path; absent (None)
-        # means the namespace is on the distributed spill path.
+        # driver-side pandas twin of small snapshots — the driver close's
+        # commit_pandas merges state here with no Spark job for the
+        # merge.  Only populated on the pandas materialize path; absent
+        # means the namespace's snapshot is a Spark plan (large state,
+        # a cluster session, or a lazy commit() between cuts).
+        # _current_pdf mirrors _current; _twins mirrors _history.
         self._current_pdf: dict[str, "object"] = {}
+        self._twins: dict[tuple[str, int], "object"] = {}
+        self._schemas: dict[str, StructType] = {}
         # in-flight epoch overlay (round-13 freshness spike): while a
         # commit is underway, (epoch, {ns: resolved updates}) — the
         # PL0-visibility read_uncommitted() answers from it, shrinking
@@ -133,15 +187,20 @@ class StateStore:
     # -- namespace management ------------------------------------------
 
     def register(self, ns: Namespace) -> None:
-        self.namespaces[ns.name] = ns
-        if ns.name not in self._current:
-            self._current[ns.name] = self._empty(ns)
-            if not self.durable:
-                import pandas as pd
+        import pandas as pd
 
-                self._current_pdf[ns.name] = pd.DataFrame(
-                    {"key": pd.Series(dtype="object"), "value": pd.Series(dtype="object")}
-                )
+        self.namespaces[ns.name] = ns
+        frame = self._empty(ns)
+        # parsed once here: _twin_frame builds frames with it every epoch
+        self._schemas[ns.name] = frame.schema
+        if ns.name not in self._current:
+            twin = pd.DataFrame(
+                {"key": pd.Series(dtype="object"), "value": pd.Series(dtype="object")}
+            )
+            self._current[ns.name] = frame
+            self._current_pdf[ns.name] = twin
+            self._history[(ns.name, self._committed)] = frame
+            self._twins[(ns.name, self._committed)] = twin
 
     def _empty(self, ns: Namespace) -> DataFrame:
         return self.spark.createDataFrame([], schema=f"key string, value {ns.value_type}")
@@ -152,7 +211,26 @@ class StateStore:
         return self._committed
 
     def read(self, ns: str, epoch: int | None = None) -> DataFrame:
-        """Committed snapshot of a namespace (at `epoch`, default latest).
+        """Committed snapshot of a namespace (at `epoch`, default latest)."""
+        epoch = self._resolve(ns, epoch)
+        frame = self._history.get((ns, epoch))
+        if frame is not None:
+            return frame
+        if self.durable and ns in self._current:
+            return self._reconstruct(ns, epoch)
+        raise KeyError(f"snapshot {ns}@{epoch} not retained (history={self.history_epochs})")
+
+    def read_twin(self, ns: str, epoch: int | None = None):
+        """The pandas twin of ``read(ns, epoch)``, or None when that
+        snapshot has none (large state, a cluster session, a lazy
+        commit() between cuts, or an epoch outside the history window).
+        Raises exactly where ``read`` does.  The returned frame is never
+        mutated; a NULL value is ``None``, a NaN value is NaN."""
+        return self._twins.get((ns, self._resolve(ns, epoch)))
+
+    def _resolve(self, ns: str, epoch: int | None) -> int:
+        """The epoch a read pinned at ``epoch`` (default: the committed
+        watermark) answers at, after the guards every read shares.
 
         The retention-horizon guard runs BEFORE the in-memory history
         lookup: with ``max_epochs <= history_epochs`` an epoch can sit in
@@ -162,9 +240,10 @@ class StateStore:
         FileNotFoundException instead of the documented loud refusal
         (ADVICE r12). ``max_epochs`` is the retention contract; below it,
         nothing is readable, history-resident or not."""
-        if epoch is None or epoch == self._committed:
-            return self._current[ns]
-        if epoch > self._committed:
+        committed = self._committed  # one read: the guards agree with it
+        if epoch is None or epoch == committed:
+            return committed
+        if epoch > committed:
             # above the watermark sits only not-yet-durable state: a
             # mid-commit epoch's log files (marker not landed) or a
             # crash-orphaned write.  In durable mode _reconstruct would
@@ -173,24 +252,19 @@ class StateStore:
             # is the sole gate on uncommitted visibility (ADVICE r13).
             raise KeyError(
                 f"snapshot {ns}@{epoch} is above the committed watermark "
-                f"({self._committed}); uncommitted visibility requires "
+                f"({committed}); uncommitted visibility requires "
                 f"freshness='uncommitted', not a future epoch pin"
             )
         if (
             self.durable
             and self.max_epochs is not None
-            and epoch < self._committed - self.max_epochs + 1
+            and epoch < committed - self.max_epochs + 1
         ):
             raise KeyError(
                 f"snapshot {ns}@{epoch} outside retention horizon "
-                f"(max_epochs={self.max_epochs}, committed={self._committed})"
+                f"(max_epochs={self.max_epochs}, committed={committed})"
             )
-        key = (ns, epoch)
-        if key in self._history:
-            return self._history[key]
-        if self.durable:
-            return self._reconstruct(ns, epoch)
-        raise KeyError(f"snapshot {ns}@{epoch} not retained (history={self.history_epochs})")
+        return epoch
 
     def read_uncommitted(self, ns: str) -> tuple[DataFrame, int]:
         """PL0-visibility read (round-13 freshness spike): the committed
@@ -233,11 +307,12 @@ class StateStore:
             inflight = self._inflight  # single read: one state for all ns
             committed = self._committed
             out = {}
+            current = self._current
             eff, updates = (committed, {}) if inflight is None else inflight
             for ns in namespaces:
                 upd = updates.get(ns)
                 if upd is None:
-                    out[ns] = self._current[ns]
+                    out[ns] = current[ns]
                     continue
                 if not isinstance(upd, DataFrame):  # pandas twin path
                     nso = self.namespaces.get(ns)
@@ -245,7 +320,7 @@ class StateStore:
                     upd = self.spark.createDataFrame(
                         upd[["key", "value"]], schema=f"key string, value {vt}"
                     )
-                out[ns] = self._upsert(self._current[ns], upd)
+                out[ns] = self._upsert(current[ns], upd)
             if self._inflight is inflight and self._committed == committed:
                 break  # stable pass: no commit transition during capture
         else:
@@ -292,44 +367,27 @@ class StateStore:
         )
         try:
             if self.durable:
-                for name, df in updates.items():
-                    if df is not None:
-                        df.write.mode("overwrite").parquet(self._log_path(name, epoch))
-                if wal is not None:
-                    wal.write.mode("overwrite").parquet(os.path.join(self.root, "wal", f"epoch={epoch}"))
-                self._write_marker(epoch, sorted(updates), batch_id, query_id)
-            # history covers EVERY registered namespace, not only the updated
-            # ones: with multiple TGraphs interleaving epochs on one store, a
-            # namespace untouched this epoch must still be readable at this
-            # epoch boundary (snapshot-consistent reads pin an epoch, not a
-            # graph). For untouched namespaces this is a frame reference,
-            # not a copy — zero cost.
-            for name, cur in self._current.items():
-                self._history[(name, epoch - 1)] = cur
+                self._write_epoch(
+                    epoch,
+                    {n: df for n, df in updates.items() if df is not None},
+                    wal,
+                    sorted(updates),
+                    batch_id,
+                    query_id,
+                )
+            frames, twins = dict(self._current), dict(self._current_pdf)
             for name, df in updates.items():
                 if df is None:
                     continue
-                prev = self._current[name]
-                merged = self._upsert(prev, df)
-                if self.durable and epoch % self.checkpoint_every == 0:
-                    # cut both the DAG lineage and the log-reconstruction
-                    # chain: persist a compacted base.
-                    merged.write.mode("overwrite").parquet(self._base_path(name, epoch))
-                    merged = self.spark.read.parquet(self._base_path(name, epoch))
-                    self._current_pdf.pop(name, None)
-                elif epoch % self.checkpoint_every == 0:
-                    merged = self._nondurable_cut(name, epoch, merged)
-                else:
-                    # lazy merged plan — the pandas twin no longer mirrors it
-                    self._current_pdf.pop(name, None)
-                self._current[name] = merged
-            self._committed = epoch
-            if batch_id is not None:
-                self.last_batch_id = batch_id
-                self.last_query_id = query_id
-                if query_id is not None:
-                    self.batch_frontiers[query_id] = batch_id
-            self._gc_history()
+                merged = self._upsert(frames[name], df)
+                # a lazy merged plan: the twin no longer mirrors it
+                twins.pop(name, None)
+                if epoch % self.checkpoint_every == 0:
+                    merged, twin = self._cut(name, epoch, merged)
+                    if twin is not None:
+                        twins[name] = twin
+                frames[name] = merged
+            self._publish(epoch, frames, twins, batch_id, query_id)
             if self.durable:
                 self._gc_retention(epoch)
         finally:
@@ -337,14 +395,18 @@ class StateStore:
 
     def can_commit_pandas(self, name: str) -> bool:
         """True when the driver-side pandas commit is valid for this
-        namespace: non-durable store, pandas twin present (small
-        in-memory snapshot on the local materialize path), and the cut
-        cadence is per-epoch (the twin mirrors `_current` exactly)."""
-        if self.durable or self.checkpoint_every != 1:
+        namespace: its pandas twin mirrors the committed snapshot (small
+        state on the local materialize path) and the snapshot is still
+        under the size thresholds.  An in-memory store also needs the
+        per-epoch cut cadence (checkpoint_every=1): one asked to cut
+        only every few epochs keeps commit()'s lazy plans between cuts.
+        A durable store's cadence is its compaction cadence, which
+        commit_pandas keeps."""
+        if not self.durable and self.checkpoint_every != 1:
             return False
-        pdf = self._current_pdf.get(name)
-        if pdf is None:
-            return False
+        return name in self._current_pdf and self._is_small(name)
+
+    def _is_small(self, name: str) -> bool:
         kind, est = self._spill_bytes.get(name, ("mem", 0))
         limit = (
             self.SMALL_SNAPSHOT_MEM_BYTES
@@ -357,21 +419,22 @@ class StateStore:
         self,
         epoch: int,
         updates_pdfs: dict,
+        wal: DataFrame | None = None,
         batch_id: int | None = None,
         query_id: str | None = None,
     ) -> None:
         """Driver-close commit: merge the epoch's resolved updates
         ({namespace: pandas frame}, already driver-side via the driver
-        close, tx/driver_cascade.py) into the pandas snapshot twins — ZERO
-        Spark jobs. Semantics identical to commit() + _nondurable_cut
-        on the pandas path: last-writer-wins upsert, per-epoch lineage
-        cut (the new current IS a LocalRelation), full history
-        bookkeeping. Guarded by can_commit_pandas() per namespace;
-        local-mode only by construction (the twin exists only on the
-        pandas materialize path — a cluster session never takes this
-        branch)."""
-        import pandas as pd
-
+        close, tx/driver_cascade.py) into the pandas snapshot twins — no
+        Spark job for the merge, and the new committed frame is the
+        twin's LocalRelation (lineage cut every epoch).  A durable store
+        then writes what commit() writes, in the same order: the log
+        files from the updates, the WAL (``wal``, the lazy results
+        frame), the marker, and every ``checkpoint_every`` epochs the
+        compacted base from the twin; only then does the epoch publish.
+        Guarded by can_commit_pandas() per namespace; local-mode only by
+        construction (the twin exists only on the pandas materialize
+        path — a cluster session never takes this branch)."""
         if epoch != self._committed + 1:
             raise ValueError(f"epoch {epoch} != committed {self._committed} + 1")
         # pandas twins ride the in-flight overlay as-is (zero cost: dict
@@ -380,37 +443,88 @@ class StateStore:
         # uniform across commit paths.
         self._inflight = (epoch, dict(updates_pdfs))
         try:
-            self._commit_pandas_body(epoch, updates_pdfs, batch_id, query_id, pd)
+            self._commit_pandas_body(epoch, updates_pdfs, batch_id, query_id, wal)
         finally:
             self._inflight = None
 
     def _commit_pandas_body(
-        self, epoch: int, updates_pdfs: dict, batch_id, query_id, pd
+        self, epoch: int, updates_pdfs: dict, batch_id, query_id, wal
     ) -> None:
-        for n, cur in self._current.items():
-            self._history[(n, epoch - 1)] = cur
+        import pandas as pd
+
+        frames, twins = dict(self._current), dict(self._current_pdf)
+        updates = {}
         for name, updates_pdf in updates_pdfs.items():
-            prev_pdf = self._current_pdf[name]
-            kept = prev_pdf[~prev_pdf["key"].isin(updates_pdf["key"])]
+            upd = updates[name] = _nan_as_null(updates_pdf)
+            prev = twins[name]
+            kept = prev[~prev["key"].isin(upd["key"])]
             # concat only non-empty frames: an empty (object-dtype) side
             # would both trip pandas' empty-entry dtype FutureWarning and
             # skew the merged dtypes
-            frames = [f for f in (kept, updates_pdf[["key", "value"]]) if len(f)]
-            merged_pdf = (
-                pd.concat(frames, ignore_index=True)
-                if frames
-                else updates_pdf[["key", "value"]]
+            parts = [f for f in (kept, upd) if len(f)]
+            twin = pd.concat(parts, ignore_index=True) if parts else upd
+            self._spill_bytes[name] = ("mem", int(twin.memory_usage(deep=True).sum()))
+            twins[name] = twin
+            frames[name] = self._twin_frame(name, twin)
+        if self.durable:
+            self._write_epoch(
+                epoch,
+                {n: self._twin_frame(n, upd) for n, upd in updates.items()},
+                wal,
+                sorted(updates),
+                batch_id,
+                query_id,
             )
-            self._spill_bytes[name] = (
-                "mem",
-                int(merged_pdf.memory_usage(deep=True).sum()),
-            )
-            self._current_pdf[name] = merged_pdf
-            ns = self.namespaces[name]
-            self._current[name] = self.spark.createDataFrame(
-                merged_pdf, schema=f"key string, value {ns.value_type}"
-            )
-            self._gc_bases(name, epoch)
+            if epoch % self.checkpoint_every == 0:
+                for name in updates:
+                    frames[name].write.mode("overwrite").parquet(self._base_path(name, epoch))
+        else:
+            for name in updates:
+                self._gc_bases(name, epoch)
+        self._publish(epoch, frames, twins, batch_id, query_id)
+        if self.durable:
+            self._gc_retention(epoch)
+
+    def _twin_frame(self, name: str, pdf) -> DataFrame:
+        """LocalRelation of a twin-convention frame.  The value column is
+        built from Arrow with pandas null inference off, so only ``None``
+        becomes NULL and a NaN value stays NaN (``createDataFrame(pdf)``
+        would turn both into NULL).  A key is a string or NULL, and
+        pandas may hold a NULL key as NaN, so the key column keeps
+        pandas null inference."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        schema = self._schemas[name]
+        tbl = pa.table(
+            {
+                "key": pa.array(pdf["key"].to_numpy(), type=pa.string(), from_pandas=True),
+                "value": pa.array(
+                    pdf["value"].to_numpy(),
+                    type=to_arrow_type(schema["value"].dataType),
+                    from_pandas=False,
+                ),
+            }
+        )
+        return self.spark.createDataFrame(tbl, schema=schema)
+
+    def _publish(
+        self, epoch: int, frames: dict, twins: dict, batch_id, query_id
+    ) -> None:
+        """Make ``epoch`` the committed snapshot.  Every namespace's frame
+        and twin land under ``(ns, epoch)`` before the watermark moves, so
+        a reader that resolved an older pin never sees this epoch's state
+        under that pin's label (commit() and commit_pandas() build the
+        new snapshot off to the side; nothing is published per
+        namespace).  ``frames`` holds every registered namespace, not
+        only the updated ones: with several TGraphs interleaving epochs
+        on one store, a namespace untouched this epoch must still be
+        readable at it (a frame reference, not a copy)."""
+        for name, frame in frames.items():
+            self._history[(name, epoch)] = frame
+            if name in twins:
+                self._twins[(name, epoch)] = twins[name]
+        self._current, self._current_pdf = frames, twins
         self._committed = epoch
         if batch_id is not None:
             self.last_batch_id = batch_id
@@ -419,64 +533,41 @@ class StateStore:
                 self.batch_frontiers[query_id] = batch_id
         self._gc_history()
 
-    # snapshots estimated under these stay on the Arrow fast path;
-    # above (or on a cluster) the distributed parquet spill takes over.
-    # A LocalRelation snapshot is embedded in every downstream job's
-    # task binary, so multi-MB state re-ships with each epoch job — but
-    # since the driver-side cascade + pandas commit landed, a local-mode
-    # epoch runs 1-3 jobs total, and measurements at the loaded-latency
-    # operating point (26k-txn epochs, 100k-key state ≈ 6.5 MB deep)
-    # show the twin saving ~2 s/epoch of spill-commit against ~0.2 s of
-    # extra task-binary shipping.  16 MB covers that point with margin;
-    # beyond it (or on any cluster) the distributed spill takes over.
-    # Two thresholds because the two estimators measure different
-    # units (pandas deep in-memory bytes vs compressed parquet bytes,
-    # ~6x apart) — a single cutoff oscillates between the paths on
-    # state near the boundary, alternating the commit cost every epoch.
-    SMALL_SNAPSHOT_MEM_BYTES = int(
-        os.environ.get("TSPOON_SMALL_SNAPSHOT_MEM_MB", "16")
-    ) * (1 << 20)
-    SMALL_SNAPSHOT_PARQUET_BYTES = int(
-        os.environ.get("TSPOON_SMALL_SNAPSHOT_PARQUET_KB", "2560")
-    ) * (1 << 10)
+    def _cut(self, name: str, epoch: int, merged: DataFrame):
+        """Lineage cut for one namespace snapshot at a checkpoint epoch:
+        ``(frame, twin-or-None)``.
 
-    def _nondurable_cut(self, name: str, epoch: int, merged: DataFrame) -> DataFrame:
-        """Non-durable lineage cut for one namespace snapshot.
-
-        Two mechanisms, picked per epoch:
+        A durable store first writes the compacted base (that write is
+        the durability) and sizes it.  Then, per epoch:
         - small snapshot + local session (pandas materialize mode): one
-          Arrow round-trip to a LocalRelation — no filesystem write, no
-          read-back scan, roughly halves the per-epoch commit floor.
-          The pandas size estimate feeds the next epoch's decision, so
-          growing state self-corrects onto the spill path.
-        - otherwise: spill to the store's scratch dir and read back —
-          distributed (executors write/read in parallel), no driver
-          round-trip of the state. Same mechanism as the durable base
-          write, minus WAL/markers. Small snapshots coalesce (per-file
-          overhead dominates a few-MB write; 64 MB/file heuristic).
+          Arrow round-trip to a LocalRelation plus its pandas twin — no
+          scratch write, no read-back scan, and the next epochs can take
+          commit_pandas.  The pandas size estimate feeds the next
+          epoch's decision, so growing state self-corrects onto the
+          parquet path.
+        - otherwise: the parquet read-back of the base; an in-memory
+          store spills to its scratch dir first — distributed
+          (executors write/read in parallel), no driver round-trip of
+          the state.  Small snapshots coalesce (per-file overhead
+          dominates a few-MB write; 64 MB/file heuristic).
         """
         from t_spoon_spark.tx.runner import materialize_mode
 
+        if self.durable:
+            merged.write.mode("overwrite").parquet(self._base_path(name, epoch))
+            self._spill_bytes[name] = ("parquet", _dir_bytes(self._base_path(name, epoch)))
+            merged = self.spark.read.parquet(self._base_path(name, epoch))
+        if self._is_small(name) and materialize_mode(self.spark) == "pandas":
+            if not self.durable:
+                # A namespace that spilled to parquet in an earlier epoch
+                # and shrank back under the threshold must still drop its
+                # stale base dirs — the in-memory frame supersedes them
+                # (ADVICE r4).
+                self._gc_bases(name, epoch)
+            return self._pull_twin(name, merged)
+        if self.durable:
+            return merged, None
         kind, est = self._spill_bytes.get(name, ("mem", 0))
-        small = est < (
-            self.SMALL_SNAPSHOT_MEM_BYTES
-            if kind == "mem"
-            else self.SMALL_SNAPSHOT_PARQUET_BYTES
-        )
-        if small and materialize_mode(self.spark) == "pandas":
-            tbl = merged.toArrow()
-            pdf = tbl.to_pandas()
-            self._spill_bytes[name] = ("mem", int(pdf.memory_usage(deep=True).sum()))
-            self._current_pdf[name] = pdf
-            # A namespace that spilled to parquet in an earlier epoch and
-            # shrank back under the threshold must still drop its stale
-            # base dirs — the in-memory frame supersedes them (ADVICE r4).
-            self._gc_bases(name, epoch)
-            # the snapshot is rebuilt from the Arrow table, not the pandas
-            # twin: pandas holds NULL and NaN alike as NaN, and a NaN
-            # value must stay NaN as it does on the spill path
-            return self.spark.createDataFrame(tbl, schema=merged.schema)
-        self._current_pdf.pop(name, None)
         est_b = est if kind == "parquet" else est // 6  # ~parquet compression
         n_parts = max(1, est_b // (64 << 20) + 1)
         merged.coalesce(n_parts).write.mode("overwrite").parquet(
@@ -488,7 +579,23 @@ class StateStore:
         )
         merged = self.spark.read.parquet(self._base_path(name, epoch))
         self._gc_bases(name, epoch)
-        return merged
+        return merged, None
+
+    def _pull_twin(self, name: str, frame: DataFrame):
+        """One Arrow pull of a small snapshot: ``(LocalRelation, twin)``.
+        The frame is the Arrow table itself, not a second conversion of
+        the twin.  In the twin a NULL value is ``None`` in an object
+        column, so it stays apart from a NaN value (``to_pandas`` turns
+        both into NaN)."""
+        import pandas as pd
+
+        tbl = frame.toArrow()
+        twin = tbl.to_pandas()
+        col = tbl.column("value")
+        if col.null_count:
+            twin["value"] = pd.Series(col.to_pylist(), dtype=object)
+        self._spill_bytes[name] = ("mem", int(twin.memory_usage(deep=True).sum()))
+        return self.spark.createDataFrame(tbl, schema=frame.schema), twin
 
     @staticmethod
     def _upsert(prev: DataFrame, updates: DataFrame) -> DataFrame:
@@ -508,6 +615,18 @@ class StateStore:
 
     def _base_path(self, ns: str, epoch: int) -> str:
         return os.path.join(self.root, ns, "base", f"epoch={epoch}")
+
+    def _write_epoch(
+        self, epoch: int, logs: dict, wal, namespaces: list[str], batch_id, query_id
+    ) -> None:
+        """The durable steps both commits take before any compaction or
+        publish, in order: each namespace's log, the WAL, then the
+        marker that commits the epoch."""
+        for name, df in logs.items():
+            df.write.mode("overwrite").parquet(self._log_path(name, epoch))
+        if wal is not None:
+            wal.write.mode("overwrite").parquet(os.path.join(self.root, "wal", f"epoch={epoch}"))
+        self._write_marker(epoch, namespaces, batch_id, query_id)
 
     def _write_marker(
         self,
@@ -580,8 +699,20 @@ class StateStore:
                 self.batch_frontiers[qid] = max(self.batch_frontiers.get(qid, -1), bid)
         self.last_batch_id = marker.get("batch_id")
         self.last_query_id = marker.get("query_id")
+        from t_spoon_spark.tx.runner import materialize_mode
+
+        local = materialize_mode(self.spark) == "pandas"
+        frames, twins = {}, {}
         for name in list(self.namespaces) or self._disk_namespaces():
-            self._current[name] = self._reconstruct(name, self._committed)
+            frame = self._reconstruct(name, self._committed)
+            self._spill_bytes[name] = (
+                "parquet",
+                sum(_dir_bytes(p) for p, _ in self._snapshot_files(name, self._committed)),
+            )
+            if local and self._is_small(name):
+                frame, twins[name] = self._pull_twin(name, frame)
+            frames[name] = frame
+        self._publish(self._committed, frames, twins, None, None)
 
     def _disk_namespaces(self) -> list[str]:
         return [
@@ -590,9 +721,9 @@ class StateStore:
             if not d.startswith("_") and d != "wal" and os.path.isdir(os.path.join(self.root, d))
         ]
 
-    def _reconstruct(self, ns: str, epoch: int) -> DataFrame:
-        """Snapshot at `epoch` = newest base ≤ epoch + logs after it,
-        latest write per key wins."""
+    def _snapshot_files(self, ns: str, epoch: int) -> list[tuple[str, int]]:
+        """(dir, epoch) of what the snapshot at `epoch` is built from:
+        the newest base ≤ epoch and the logs after it."""
         base_dir = os.path.join(self.root, ns, "base")
         bases = []
         if os.path.isdir(base_dir):
@@ -600,21 +731,24 @@ class StateStore:
                 int(d.split("=")[1]) for d in os.listdir(base_dir) if d.startswith("epoch=")
             )
         base_epoch = max((b for b in bases if b <= epoch), default=None)
-        parts = []
+        out = []
         if base_epoch is not None:
-            parts.append(
-                self.spark.read.parquet(self._base_path(ns, base_epoch)).withColumn(
-                    "__e", F.lit(base_epoch)
-                )
-            )
+            out.append((self._base_path(ns, base_epoch), base_epoch))
         log_dir = os.path.join(self.root, ns, "log")
         if os.path.isdir(log_dir):
             for d in sorted(os.listdir(log_dir)):
                 k = int(d.split("=")[1])
                 if (base_epoch is None or k > base_epoch) and k <= epoch:
-                    parts.append(
-                        self.spark.read.parquet(self._log_path(ns, k)).withColumn("__e", F.lit(k))
-                    )
+                    out.append((self._log_path(ns, k), k))
+        return out
+
+    def _reconstruct(self, ns: str, epoch: int) -> DataFrame:
+        """Snapshot at `epoch` = newest base ≤ epoch + logs after it,
+        latest write per key wins."""
+        parts = [
+            self.spark.read.parquet(path).withColumn("__e", F.lit(k))
+            for path, k in self._snapshot_files(ns, epoch)
+        ]
         if not parts:
             nso = self.namespaces.get(ns)
             return self._empty(nso) if nso else self.spark.createDataFrame([], "key string, value double")
@@ -658,8 +792,9 @@ class StateStore:
 
     def _gc_history(self) -> None:
         cutoff = self._committed - self.history_epochs
-        for k in [k for k in self._history if k[1] < cutoff]:
-            del self._history[k]
+        for table in (self._history, self._twins):
+            for k in [k for k in table if k[1] < cutoff]:
+                del table[k]
 
     # -- durable retention (max_epochs) ----------------------------------
 

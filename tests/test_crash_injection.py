@@ -117,14 +117,8 @@ def _run_child(mode: str, store_dir: str, ckpt_dir: str, stream_dir: str, script
     )
 
 
-def test_sigkill_between_marker_and_checkpoint_advance(spark, tmp_path):
-    script = tmp_path / "crash_child.py"
-    script.write_text(CHILD)
-    store_dir = str(tmp_path / "store")
-    ckpt_dir = str(tmp_path / "ckpt")
-    stream_dir = str(tmp_path / "stream")
-
-    # three single-file micro-batches; order-independent final state
+def _write_batches(spark, tmp_path, stream_dir: str) -> None:
+    """Three single-file micro-batches; order-independent final state."""
     schema = "from_account string, to_account string, amount double, _tid long"
     batches = [
         [("a1", "a2", 10.0, 0), ("a3", "a4", 20.0, 1)],
@@ -137,6 +131,16 @@ def test_sigkill_between_marker_and_checkpoint_advance(spark, tmp_path):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(tmp)
         part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
         os.rename(os.path.join(tmp, part), os.path.join(stream_dir, f"batch_{i}.parquet"))
+
+
+def test_sigkill_between_marker_and_checkpoint_advance(spark, tmp_path):
+    script = tmp_path / "crash_child.py"
+    script.write_text(CHILD)
+    store_dir = str(tmp_path / "store")
+    ckpt_dir = str(tmp_path / "ckpt")
+    stream_dir = str(tmp_path / "stream")
+
+    _write_batches(spark, tmp_path, stream_dir)
     expected = {"a1": 105.0, "a2": 105.0, "a3": 85.0, "a4": 105.0}
 
     crash = _run_child("crash", store_dir, ckpt_dir, stream_dir, script)
@@ -168,3 +172,42 @@ def test_sigkill_between_marker_and_checkpoint_advance(spark, tmp_path):
     assert out["committed"] == 2
     assert out["balances"] == expected
     assert out["frontiers"] == {ckpt_dir: 2}
+
+
+def test_reopen_after_crash_rebuilds_twin(spark, tmp_path):
+    """Reopening the durable store a crash left behind rebuilds the
+    pandas twin of its small snapshot: equal to the reconstruction at
+    the committed epoch, and committed key lookups answer from it."""
+    from t_spoon_spark.serve import StateService
+    from t_spoon_spark.tx import TxEnvironment
+
+    script = tmp_path / "crash_child.py"
+    script.write_text(CHILD)
+    store_dir = str(tmp_path / "store")
+    stream_dir = str(tmp_path / "stream")
+    _write_batches(spark, tmp_path, stream_dir)
+    crash = _run_child("crash", store_dir, str(tmp_path / "ckpt"), stream_dir, script)
+    assert crash.returncode == 42, (crash.returncode, crash.stderr[-2000:])
+
+    env = TxEnvironment(spark, isolation="PL3", durable=True, store_dir=store_dir)
+    env.create_namespace("balances", "double", 100.0)
+    store = env.store
+    # batches 0 and 1 committed before the kill
+    assert store.committed_epoch() == 1
+    want = {"a1": 90.0, "a2": 105.0, "a3": 85.0, "a4": 120.0}
+    twin = store.read_twin("balances")
+    assert twin is not None
+    assert dict(zip(twin["key"], twin["value"])) == want
+    assert {
+        r["key"]: r["value"] for r in store._reconstruct("balances", 1).collect()
+    } == want
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("the key lookup left the twin")
+
+    store.read = no_spark
+    try:
+        out = StateService(env).query_keys("balances", ["a4", "a1"])
+    finally:
+        del store.read
+    assert out == {"epoch": 1, "rows": [["a1", 90.0], ["a4", 120.0]]}

@@ -1,16 +1,26 @@
 """StateStore.commit_pandas against StateStore.commit through the driver
 close: the driver close hands its resolved finals to commit_pandas when
-the store keeps a pandas twin (non-durable, checkpoint_every=1), and to
-the Spark commit otherwise (checkpoint_every=2).  Both must yield the
-same votes and snapshots — with aborts, over several epochs and
-namespaces, with history for time travel, and with int64 tids past 2^53.
+the store keeps a pandas twin (small state; an in-memory store also
+needs checkpoint_every=1), and to the Spark commit otherwise.  Both must
+yield the same votes and snapshots — with aborts, over several epochs
+and namespaces, with history for time travel, with int64 tids past 2^53,
+on a durable store on either side of the size selection, and after
+reopening a durable store from disk.  A pinned read during either
+commit never sees a namespace of the epoch being published.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import threading
 
+import pandas as pd
+import pyspark.sql.functions as F
+import pytest
+
+from t_spoon_spark.serve import StateService
 from t_spoon_spark.tx import TxEnvironment
+from t_spoon_spark.tx.namespace import Namespace
+from t_spoon_spark.tx.store import StateStore
 
 
 def _graph(env, ns="balances"):
@@ -187,3 +197,186 @@ def test_pandas_commit_preserves_large_tids_exactly(spark):
     assert votes[base + 2] == 0  # COMMIT
     snap = {r["key"]: r["value"] for r in env.store.read("balances").collect()}
     assert snap == {"c": 90.0, "d": 110.0}
+
+
+def _snap(frame):
+    return {r["key"]: r["value"] for r in frame.collect()}
+
+
+def _twin_dict(twin):
+    return dict(zip(twin["key"], twin["value"]))
+
+
+def _durable_bank(spark, root, **kw):
+    env = TxEnvironment(
+        spark, isolation="PL3", durable=True, store_dir=root, checkpoint_every=2, **kw
+    )
+    env.create_namespace("balances", "double", 100.0, invariant="value >= 0")
+    return env
+
+
+_DURABLE_BATCHES = [
+    [("a", "b", 10.0), ("c", "d", 500.0)],  # the second overdraws: ABORT
+    [("b", "c", 5.0), ("d", "a", 20.0)],
+    [("a", "e", 1.0)],
+    [("e", "b", 0.5), ("c", "a", 2.0)],
+]
+
+
+def _serve_answers(env, epoch):
+    svc = StateService(env)
+    keys = svc.query_keys("balances", ["a", "b", "c", "d", "e", "zz"], epoch=epoch)
+    pred = svc.query_predicate("balances", "value > 100", epoch=epoch)
+    return keys, pred
+
+
+def test_durable_size_selection_keeps_serve_answers(spark, tmp_path, monkeypatch):
+    """A durable store takes commit_pandas while its snapshot is small;
+    with the thresholds forced low it takes commit() instead.  Votes,
+    on-disk state and every serve answer at every epoch agree."""
+    calls = {"commit": 0, "commit_pandas": 0}
+    for name in calls:
+        orig = getattr(StateStore, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(StateStore, name, counted)
+
+    def run(root):
+        env = _durable_bank(spark, root)
+        runner = env.runner(_graph(env))
+        votes, answers = [], []
+        for i, rows in enumerate(_DURABLE_BATCHES):
+            votes.append(runner.run_epoch(_batch(spark, rows, 10 * i + 1)).vote_counts())
+        for e in range(env.watermark() + 1):
+            answers.append(_serve_answers(env, e))
+        return env, votes, answers
+
+    env_t, votes_t, answers_t = run(str(tmp_path / "twin"))
+    assert calls == {"commit": 0, "commit_pandas": 4}
+    assert env_t.store.read_twin("balances") is not None
+
+    calls.update(commit=0, commit_pandas=0)
+    monkeypatch.setattr(StateStore, "SMALL_SNAPSHOT_MEM_BYTES", 1)
+    monkeypatch.setattr(StateStore, "SMALL_SNAPSHOT_PARQUET_BYTES", 1)
+    env_s, votes_s, answers_s = run(str(tmp_path / "spark"))
+    # the empty twin of a fresh namespace is under any threshold, so the
+    # first epoch still merges in pandas; it sizes the snapshot and every
+    # later epoch takes commit()
+    assert calls == {"commit": 3, "commit_pandas": 1}
+    assert not env_s.store.can_commit_pandas("balances")
+    assert env_s.store.read_twin("balances") is None
+
+    assert votes_t == votes_s
+    assert votes_t[0] == {"COMMIT": 1, "ABORT": 1}
+    assert answers_t == answers_s
+    assert answers_t[-1][0]["rows"] == [
+        ["a", 111.0], ["b", 105.5], ["c", 103.0], ["d", 80.0], ["e", 100.5]
+    ]
+    # both layouts reconstruct the same snapshots from disk
+    for e in range(env_t.watermark() + 1):
+        assert _snap(env_t.store._reconstruct("balances", e)) == _snap(
+            env_s.store._reconstruct("balances", e)
+        )
+
+
+def test_durable_reopen_rebuilds_twin(spark, tmp_path):
+    """Reopening a durable store rebuilds the twin of a small snapshot
+    from disk: it equals the reconstruction at the committed epoch, the
+    committed frame is its LocalRelation, key lookups answer from it and
+    the reopened store keeps committing through commit_pandas."""
+    root = str(tmp_path / "store")
+    env = _durable_bank(spark, root)
+    runner = env.runner(_graph(env))
+    for i, rows in enumerate(_DURABLE_BATCHES[:3]):
+        runner.run_epoch(_batch(spark, rows, 10 * i + 1))
+    committed = env.watermark()
+    before = _snap(env.store.read("balances"))
+
+    env2 = _durable_bank(spark, root)
+    store = env2.store
+    assert store.committed_epoch() == committed
+    twin = store.read_twin("balances")
+    assert twin is not None
+    assert _twin_dict(twin) == _snap(store._reconstruct("balances", committed)) == before
+    assert _snap(store.read("balances")) == before
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("key lookup left the twin")
+
+    store.read = no_spark
+    try:
+        out = StateService(env2).query_keys("balances", ["a", "b"])
+    finally:
+        del store.read
+    assert out == {"epoch": committed, "rows": [["a", before["a"]], ["b", before["b"]]]}
+
+    assert store.can_commit_pandas("balances")
+    runner2 = env2.runner(_graph(env2))
+    runner2.run_epoch(_batch(spark, _DURABLE_BATCHES[3], 31))
+    after = _snap(store.read("balances"))
+    assert after == _snap(store._reconstruct("balances", committed + 1))
+    assert _twin_dict(store.read_twin("balances")) == after
+
+
+@pytest.mark.parametrize("path", ["commit", "commit_pandas"])
+def test_pinned_read_never_sees_half_published_epoch(spark, tmp_path, path):
+    """A checkpoint epoch writes namespace a's base, then b's.  A reader
+    that pins the watermark while b's write is blocked must get a's
+    snapshot at that pin — not a's frame of the epoch still being
+    committed under the old pin's label."""
+    store = StateStore(spark, root=str(tmp_path / "s"), durable=True, checkpoint_every=2)
+    for ns in ("a", "b"):
+        store.register(Namespace(ns, "double", 0.0))
+
+    def commit(e):
+        rows = {"a": [("x", float(e))], "b": [("y", float(e))]}
+        if path == "commit":
+            store.commit(
+                e,
+                {n: spark.createDataFrame(r, "key string, value double") for n, r in rows.items()},
+                None,
+            )
+        else:
+            store.commit_pandas(
+                e, {n: pd.DataFrame(r, columns=["key", "value"]) for n, r in rows.items()}
+            )
+
+    commit(0)
+    commit(1)
+    reached, release = threading.Event(), threading.Event()
+    errors: list[BaseException] = []
+    orig_base_path = store._base_path
+
+    def gated_base_path(ns, epoch):
+        if ns == "b" and epoch == 2 and not reached.is_set():
+            reached.set()
+            release.wait(120)
+        return orig_base_path(ns, epoch)
+
+    def writer():
+        try:
+            commit(2)
+        except BaseException as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+        finally:
+            reached.set()
+
+    store._base_path = gated_base_path
+    t = threading.Thread(target=writer)
+    t.start()
+    try:
+        assert reached.wait(120)
+        pin = store.committed_epoch()
+        assert (pin, _snap(store.read("a", pin))) == (1, {"x": 1.0})
+        twin = store.read_twin("a", pin)
+        assert twin is None or _twin_dict(twin) == {"x": 1.0}
+    finally:
+        release.set()
+        t.join(120)
+    assert not errors, errors
+    assert store.committed_epoch() == 2
+    assert _snap(store.read("a")) == {"x": 2.0}
+    assert _snap(store.read("a", 1)) == {"x": 1.0}

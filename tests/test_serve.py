@@ -5,7 +5,12 @@ pinned committed snapshot, concurrent with epoch commits."""
 
 from __future__ import annotations
 
+import json
+import math
+
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from t_spoon_spark.serve import StateService, query_client
 from t_spoon_spark.tx import TxEnvironment
@@ -574,3 +579,151 @@ def test_sql_keyset_validation(spark):
         ).collect()
     ]
     assert got == oracle and len(got) == 6
+
+
+_PARITY_ROWS = {
+    "double": lambda e: [
+        ("k0", 1.5 + e), ("k1", None), ("k2", float("nan")), ("k3", -2.0 * e), ("k4", 10.0 + e)
+    ],
+    # 2**62 + e is exact in int64 only, not in a float64 detour
+    "bigint": lambda e: [("k0", e), ("k1", None), ("k2", 2**62 + e), ("k3", -7), ("k4", 10 + e)],
+}
+
+
+@pytest.mark.parametrize("route", ["commit_pandas", "commit"])
+@pytest.mark.parametrize("vt", ["double", "bigint"])
+def test_twin_key_lookup_matches_spark_path(spark, tmp_path, vt, route):
+    """A committed ``keys`` response from the store's pandas twin equals
+    the Spark-path response at the same pin: NULL and NaN values, int64
+    precision, absent keys, an over-long key list, a historical pin, and
+    the same errors for a pin below the retention horizon or above the
+    watermark.  The twin is built by commit_pandas's merge, or by
+    commit()'s Arrow cut at a checkpoint epoch."""
+    env = TxEnvironment(
+        spark,
+        isolation="PL3",
+        durable=True,
+        store_dir=str(tmp_path / "store"),
+        checkpoint_every=1 if route == "commit" else 2,
+        max_epochs=2,
+    )
+    env.create_namespace("kv", vt, 0)
+    store = env.store
+    for e in range(4):
+        rows = _PARITY_ROWS[vt](e)
+        if route == "commit":
+            upd = spark.createDataFrame(rows, f"key string, value {vt}")
+            store.commit(e, {"kv": upd}, None)
+        else:
+            upd = pd.DataFrame(
+                {"key": [k for k, _ in rows], "value": pd.Series([v for _, v in rows], dtype=object)}
+            )
+            store.commit_pandas(e, {"kv": upd})
+    assert store.committed_epoch() == 3
+    assert store.read_twin("kv") is not None
+
+    svc = StateService(env, max_rows=4)
+    sc = spark.sparkContext
+
+    def via_twin(req):
+        def no_spark(*_a, **_k):
+            raise AssertionError("the key lookup left the twin")
+
+        store.read = no_spark
+        sc.setJobGroup("twin-lookup", "twin key lookup")
+        try:
+            return svc.handle(req)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            del store.read
+
+    def via_spark(req):
+        svc._twin_readable = lambda ns: False
+        try:
+            return svc.handle(req)
+        finally:
+            del svc._twin_readable
+
+    requests = [
+        {"keys": ["k2", "absent", "k1"]},
+        {"keys": ["k4", "k0", "k1", "k2", "k3"]},  # over the 4-key cap
+        {"keys": ["k0", "k4", "k2"], "epoch": 2},  # historical pin k-1
+        {"keys": []},
+        {"keys": ["k0"], "epoch": 1},  # below the max_epochs=2 horizon
+        {"keys": ["k0"], "epoch": 4},  # above the watermark
+    ]
+    outs = []
+    for req in requests:
+        req = {"op": "keys", "ns": "kv", **req}
+        got, want = via_twin(req), via_spark(req)
+        # json text compares NaN equal to NaN, and tells 1 from 1.0
+        assert json.dumps(got) == json.dumps(want), req
+        outs.append(got)
+    assert list(sc.statusTracker().getJobIdsForGroup("twin-lookup")) == []
+
+    latest, capped, historical, empty, below, above = outs
+    assert latest["ok"] and latest["epoch"] == 3
+    assert latest["rows"][0] == ["k1", None]
+    if vt == "double":
+        assert latest["rows"][1][0] == "k2" and math.isnan(latest["rows"][1][1])
+    else:
+        assert latest["rows"][1] == ["k2", 2**62 + 3]
+    assert capped["truncated"] and capped["keys_dropped"] == 1
+    assert [k for k, _ in capped["rows"]] == ["k0", "k1", "k2", "k4"]
+    assert historical["epoch"] == 2 and historical["rows"][0] == ["k0", _PARITY_ROWS[vt](2)[0][1]]
+    assert empty["ok"] and empty["rows"] == []
+    # a JSON null key matches no row, as in Spark's IN (such a list
+    # is looked up on Spark)
+    null_key = svc.handle({"op": "keys", "ns": "kv", "keys": [None, "k0"]})
+    assert null_key["ok"] and [k for k, _ in null_key["rows"]] == ["k0"]
+    assert not below["ok"] and "retention horizon" in below["error"]
+    assert not above["ok"] and "above the committed watermark" in above["error"]
+
+
+def test_twin_key_lookups_under_durable_commit_load(spark, tmp_path):
+    """Readers (more threads than cores, a short switch interval) look
+    keys up while a writer commits durable epochs that set every key to
+    the epoch number: every response holds exactly its pin's values."""
+    import sys
+    import threading
+
+    env = TxEnvironment(
+        spark, isolation="PL3", durable=True, store_dir=str(tmp_path / "store"),
+        checkpoint_every=2, max_epochs=3,
+    )
+    env.create_namespace("kv", "double", 0.0)
+    keys = [f"k{i}" for i in range(10)]
+
+    def commit(e):
+        env.store.commit_pandas(e, {"kv": pd.DataFrame({"key": keys, "value": float(e)})})
+
+    commit(0)
+    svc = StateService(env)
+    done = threading.Event()
+    errors: list = []
+    seen: set = set()
+
+    def reader():
+        while not done.is_set():
+            out = svc.handle({"op": "keys", "ns": "kv", "keys": keys})
+            if not out["ok"] or out["rows"] != [[k, float(out["epoch"])] for k in keys]:
+                errors.append(out)
+                return
+            seen.add(out["epoch"])
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    readers = [threading.Thread(target=reader, daemon=True) for _ in range(6)]
+    try:
+        for r in readers:
+            r.start()
+        for e in range(1, 9):
+            commit(e)
+    finally:
+        done.set()
+        for r in readers:
+            r.join(timeout=60)
+        sys.setswitchinterval(old)
+    assert not any(r.is_alive() for r in readers)
+    assert not errors, errors[:3]
+    assert len(seen) > 1
