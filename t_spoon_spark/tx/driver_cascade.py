@@ -6,32 +6,27 @@ that read an aborted write (tgraph/state/PL4DependencyTrackingStrategy.java:23-4
 tgraph/twopc/StrictnessEnforcer.java:27-118), with the global vote as a
 MAX lattice over per-key link votes (tgraph/twopc/ReduceVotesFunction.java).
 Only WHERE the fixpoint iterates moves: the reference replays through
-its record-at-a-time 2PC, the distributed path refolds via Spark jobs,
-and this module refolds the same chains in driver pandas.
+its record-at-a-time 2PC, the distributed path refolds via Spark jobs
+(one control job per round), and this module refolds the same chains
+on the driver.  A cluster session NEVER enters here: the runner uses it
+only when the session materializes control frames through pandas
+(single-JVM local) and every state stage has a Python twin.
 
-The abort cascade (runner._close) is control-plane ITERATION: exclude
-the globally-aborted transactions, refold the touched key chains, merge
-votes, repeat until the abort set is stable.  On the distributed path
-each round is a Spark job over control-sized frames — correct anywhere,
-but in local pandas mode a 26k-txn round was measured at ~0.95 s of
-almost pure plan/exchange overhead (BENCHNOTES "round-7 starting map":
-149-node / 22-Exchange refold plans; the chains themselves are
-milliseconds of arithmetic).  Round-6 verdict item #1 asked for exactly
-this: route the cascade through the already-driver-sized control frames.
-
-So: when the session materializes epoch control frames through pandas
-anyway (materialize_mode == "pandas", i.e. single-JVM local — a cluster
-session NEVER enters here), and every state stage's update/invariant has
-a Python twin, the whole fixpoint runs on the driver:
-
-- the per-stage ops and evaluation frames are pulled once (they are
-  bounded by BATCH size, not state size — the same argument that makes
-  pandas materialize mode sound);
-- each cascade round is a pure-Python refold of the affected key chains
-  (cost proportional to the contended key set, zero Spark jobs);
-- the final votes / writes re-enter Spark as LocalRelations, and the
-  resolved per-namespace finals are handed to the store's pandas commit
-  (StateStore.commit_pandas) when its size gates allow.
+- The epoch's one Spark job pulls either the pre-fold ops (the ops
+  fold: every chain is then evaluated by the numpy fold) or the JVM
+  fold's evaluation links; both are bounded by BATCH size, not state
+  size.
+- Each chain stage's links then live in ONE numpy table (_Links),
+  chain-major and coded by tid position.  A cascade round restarts each
+  changed chain at its first link whose txn flipped exclusion status
+  while voting COMMIT, seeded from the chain value before it; all
+  restarted suffixes advance together, one numpy step per chain
+  position (_refold_suffixes).  Stages the numpy twin does not cover
+  refold whole chains with the scalar fold.
+- Votes merge over tid codes in numpy, in full once, then only for the
+  txns a round affected.  Finals are each key's last applied committed
+  link; the vote frame and writes re-enter Spark only where a reader
+  needs them.
 
 Result identity with the distributed close is pinned by tests
 (tests/test_driver_cascade.py): same votes, same balances, same epoch
@@ -45,13 +40,13 @@ is compiled by a tiny whitelisted parser into a Python closure with
 Spark's null semantics (division binds the session's ANSI
 divide-by-zero behavior at compile).  Anything outside the whitelist
 (unknown functions, non-numeric value types, NaN-bearing records) makes
-the stage INELIGIBLE and the runner silently keeps the distributed
-cascade; eligibility never changes results, only where the fixpoint
-runs.
+the stage INELIGIBLE and the runner keeps the distributed cascade;
+eligibility never changes results, only where the fixpoint runs.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import re
 from dataclasses import dataclass, field
@@ -839,13 +834,98 @@ def _pull_pdf(df, key_cols: tuple[str, ...] = ()) -> pd.DataFrame:
         return df.toPandas()
 
 
-def _plain_keys(pdf: pd.DataFrame, col: str) -> pd.DataFrame:
-    """Decode a categorical key column back to object dtype before the
-    frame crosses the module boundary (store twin / createDataFrame).
-    Pointer copies of the already-materialized category strings — cheap."""
-    if isinstance(pdf[col].dtype, pd.CategoricalDtype):
-        pdf[col] = pdf[col].astype(object)
-    return pdf
+
+def _key_codes(col: pd.Series) -> tuple[_np.ndarray, _np.ndarray]:
+    """(int64 code per row, object key per code) of a key column.  A
+    NULL key is a key of its own, as in the SQL fold's groupBy."""
+    if isinstance(col.dtype, pd.CategoricalDtype):
+        codes = col.cat.codes.to_numpy().astype(_np.int64)
+        keys = _np.asarray(col.cat.categories, dtype=object)
+        null = codes < 0
+        if null.any():
+            codes[null] = len(keys)
+            keys = _np.append(keys, _np.asarray([_np.nan], dtype=object))
+        return codes, keys
+    codes, uniques = pd.factorize(col, use_na_sentinel=False)
+    return codes.astype(_np.int64, copy=False), _np.asarray(uniques, dtype=object)
+
+
+def _tid_codes(tid_index: pd.Index, tids) -> _np.ndarray:
+    """Each link's position in the epoch's tids.  Every link belongs to
+    one of the epoch's txns; a tid outside them would code as -1 and the
+    vote merge would write its vote into the LAST txn's slot, so it
+    fails here instead."""
+    tids = _np.asarray(tids, dtype=_np.int64)
+    codes = tid_index.get_indexer(tids)
+    if codes.size and codes.min() < 0:
+        bad = int(tids[_np.argmax(codes < 0)])
+        raise ValueError(f"link tid {bad} is not one of the epoch's {len(tid_index)} tids")
+    return codes.astype(_np.int64, copy=False)
+
+
+def _layout(key_code: _np.ndarray, n_keys: int) -> tuple[_np.ndarray, _np.ndarray]:
+    """(start, lens) per key code of a chain-major (key-sorted) column."""
+    lens = _np.bincount(key_code, minlength=n_keys).astype(_np.int64)
+    return _np.cumsum(lens) - lens, lens
+
+
+def _gather_ranges(lo: _np.ndarray, n: _np.ndarray) -> _np.ndarray:
+    """Concatenation of ``arange(lo[i], lo[i] + n[i])`` over i."""
+    ends = _np.cumsum(n)
+    return _np.repeat(lo - (ends - n), n) + _np.arange(int(ends[-1]) if len(n) else 0)
+
+
+def _fold_votes(vote, anyc, codes, votes) -> None:
+    """Merge links into the per-txn vote arrays: the global vote is the
+    MAX over a txn's links (tgraph/twopc/ReduceVotesFunction.java),
+    ``anyc`` flags a txn holding at least one COMMIT link."""
+    _np.maximum.at(vote, codes, votes)
+    anyc[codes[votes == COMMIT]] = 1
+
+
+@dataclass
+class _Links:
+    """A chain stage's links for one epoch: the cascade's round state.
+
+    Chain-major: key code k's chain is rows ``start[k] : start[k] +
+    lens[k]`` in chain-position order, so a refold overwrites its
+    chain's rows in place.  ``tid_code`` is a position in the epoch's
+    tids (the vote merge's domain); ``by_tid`` lists the rows of each
+    tid between ``tid_ptr[c]`` and ``tid_ptr[c + 1]`` (CSR), which the
+    per-round delta merge reads."""
+
+    keys: Any  # object ndarray: the key of each key code
+    start: Any  # int64 per key code
+    lens: Any  # int64 per key code
+    key_code: Any  # int64 per link
+    tid_code: Any  # int64 per link
+    ord: Any  # int64 per link: chain position
+    vote: Any  # int32 per link
+    # per link: float64 on vec stages; the pulled dtype otherwise, object
+    # once a scalar refold wrote Python values into it
+    value: Any
+    wr: Any  # bool per link: applied (chain-committed, txn not excluded)
+    # float64 chain value after each link (what a suffix refold seeds
+    # from), or None when the pulled values cannot seed the numpy fold
+    acc_after: Any
+    by_tid: Any
+    tid_ptr: Any
+
+    @classmethod
+    def build(cls, keys, key_code, tid_code, n_tids, vote, value, wr, acc_after):
+        start, lens = _layout(key_code, len(keys))
+        by_tid = _np.argsort(tid_code, kind="stable")
+        tid_ptr = _np.zeros(n_tids + 1, _np.int64)
+        _np.cumsum(_np.bincount(tid_code, minlength=n_tids), out=tid_ptr[1:])
+        ordv = _gather_ranges(_np.zeros_like(lens), lens)
+        return cls(
+            keys, start, lens, key_code, tid_code, ordv, vote, value, wr, acc_after, by_tid, tid_ptr
+        )
+
+    def rows_of(self, codes: _np.ndarray) -> _np.ndarray:
+        """The rows of the txns with tid codes ``codes``."""
+        lo = self.tid_ptr[codes]
+        return self.by_tid[_gather_ranges(lo, self.tid_ptr[codes + 1] - lo)]
 
 
 @dataclass
@@ -855,27 +935,19 @@ class _StageState:
     # raw per-op frame: _tid, __key, (+ _path, value cols) — for chain
     # kinds pre-combined per (tid, key) when the stage pre-combines
     ops_pdf: Any = None
-    # original evaluation (chain kinds): key, _tid, value, vote, _ord, __wr
-    eval_pdf: Any = None
+    # the evaluated pull (key, _tid, value, vote, _ord, __wr) until
+    # _load_links codes it into ``links``
+    pulled: Any = None
+    links: _Links | None = None
+    # epoch_combine stages: each op's tid code, and which txns have one
+    ec_tid_code: Any = None
+    ec_has: Any = None
     v0: dict = field(default_factory=dict)
     v0_ready: bool = False
-    # lazily-built per-key chains: key -> [(tid, rec)] in fold order
+    # lazily-built per-key chains for the scalar refold: key -> [(tid, rec)]
     chains: dict = field(default_factory=dict)
-    # per-key refold results superseding eval_pdf rows.  Scalar mode:
-    # key -> [(tid, vote, value, ord, wr)].  Vec mode: key -> None (the
-    # dict is the KEY-MEMBERSHIP container both modes share; the link
-    # data lives flat in ov_flat)
-    overrides: dict = field(default_factory=dict)
-    # flat (key, _tid, vote) frame of the CURRENT override links —
-    # maintained incrementally so a cascade round's vote merge reads
-    # override votes without iterating the whole overrides dict
-    ov_links: Any = None
-    # vec mode only: the flat override table (key, _tid, vote, value,
-    # _ord, wr) the position-wise refold writes and the writes assembly
-    # reads; ov_links aliases it (extra columns are harmless there)
-    ov_flat: Any = None
-    # packed fold state built once per epoch by _vec_init: None = not
-    # yet decided, False = stage not vec-eligible, dict = eligible
+    # packed ops for the numpy refold, row-aligned with ``links``: None =
+    # not yet decided, False = the stage refolds with the scalar fold
     vec: Any = None
     # True when the RAW pulled ops carried a NULL __key (the pandas
     # pre-combine groupby drops those rows; the ops-fold path must see
@@ -886,9 +958,14 @@ class _StageState:
 @dataclass
 class CascadeResult:
     gv_pdf: pd.DataFrame  # _tid, vote, any_commit
-    writes: dict[str, list[pd.DataFrame]]  # ns -> per-stage writes pdfs
     finals: dict[str, pd.DataFrame]  # ns -> resolved (key, value)
     rounds: int
+    build_writes: Callable[[], dict]
+
+    @functools.cached_property
+    def writes(self) -> dict[str, list[pd.DataFrame]]:
+        """ns -> per-stage applied links, built on first use."""
+        return self.build_writes()
 
 
 class DriverCascade:
@@ -897,8 +974,11 @@ class DriverCascade:
     Control-frame sizes here are bounded by BATCH size (ops and links
     are one row per key-touch of the epoch), never by state size — the
     same invariant that justifies the pandas materialize mode itself.
-    All per-round set algebra is vectorized pandas; the only Python
-    loops run over the REFOLDED chains (the contended-key subset)."""
+    Each chain stage's links live in one numpy table (_Links); rounds
+    refold the changed chain suffixes into it in place and merge only
+    the affected txns' votes.  The only Python loops are the numpy
+    refold's one step per chain position and the scalar fold of
+    stages the numpy twin does not cover."""
 
     def __init__(
         self,
@@ -911,17 +991,13 @@ class DriverCascade:
         self.states = [_StageState(ctx=c, comp=k) for c, k in zip(ctxs, compiled)]
         self._pulled_eval = False
         self._pulled_ops = False
+        self._tids = _np.empty(0, dtype=_np.int64)  # the epoch's tids
         # runner-selected hot path (round-12 unloaded-latency floor):
-        # the epoch's ONE Spark job is the pre-fold ops projection
-        # (scan -> graph -> 3-column select: no chain shuffle, no
-        # multi-KB fold expression for Catalyst to re-analyze per
-        # epoch), and the initial evaluation of EVERY chain runs
-        # through the vectorized numpy fold — the exact machinery
-        # cascade rounds already use for overrides, applied from round
-        # 0 with an empty exclusion set. The runner engages it only
-        # when every stage is statically vec-eligible and the previous
-        # epoch was small (driver-resident control frames by
-        # construction).
+        # the epoch's ONE Spark job is the pre-fold ops projection (no
+        # chain shuffle, no multi-KB fold expression for Catalyst to
+        # re-analyze per epoch) and every chain's initial evaluation is
+        # the numpy fold.  Engaged only when every stage is statically
+        # vec-eligible and the previous epoch was small.
         self.ops_fold = ops_fold
 
     # -- data pulls -----------------------------------------------------
@@ -939,7 +1015,7 @@ class DriverCascade:
                 self._pull_stage_ops(st)
                 self._ensure_v0(store, st)
             else:
-                st.eval_pdf = _pull_pdf(
+                st.pulled = _pull_pdf(
                     ctx.evaluated.select(
                         "key", "_tid", "value", "vote", "_ord", "__wr"
                     ),
@@ -955,9 +1031,12 @@ class DriverCascade:
         Job launches dominate control-frame pulls locally (~0.1-0.2 s
         each), so three pulls into one job is a direct latency cut.
 
-        Returns the tid Series, or None when the graph shape doesn't
-        fit one union frame (non-chain stages, multi-column records,
-        value-type mismatches) — callers then use the per-frame pulls."""
+        ``tids_df`` is None when the links cover the tids, else a
+        zero-arg callable returning the Spark ``_tid`` frame (built only
+        when the union uses it).  Returns the tid Series, or None when
+        the graph shape doesn't fit one union frame (non-chain stages,
+        multi-column records, value-type mismatches) — callers then use
+        the per-frame pulls."""
         import pyspark.sql.functions as F
 
         if self._pulled_eval:
@@ -1011,7 +1090,7 @@ class DriverCascade:
         # links below — one fewer source scan, batch-size fewer rows.
         u = None
         if tids_df is not None:
-            u = tids_df.select(
+            u = tids_df().select(
                 *row(
                     0, -1, F.col("_tid"), F.lit(""), F.lit(0), F.lit(-1),
                     F.lit(-1), F.lit(False), F.lit(0),
@@ -1038,13 +1117,12 @@ class DriverCascade:
             # build the eval/ops frames as COLUMN-SHARING views of the
             # pulled frame (dict-of-Series with copy=False is zero-copy;
             # every later mutation in this module is a whole-column
-            # replacement, never an in-place write) — round-9 verdict
-            # next-round #2's links_only copy elision
+            # replacement, never an in-place write)
             stage_rows = (
                 pdf if links_only else
                 pdf[(pdf["stage"] == i) & (pdf["part"] == 1)].reset_index(drop=True)
             )
-            st.eval_pdf = pd.DataFrame(
+            st.pulled = pd.DataFrame(
                 {
                     "key": stage_rows["key"],
                     "_tid": stage_rows["_tid"],
@@ -1075,17 +1153,14 @@ class DriverCascade:
         return tids_pdf
 
     def _pull_ops_fold(self, store, tids_series, tids_covered: bool):
-        """Ops-pull + full driver-side fold (the runner's ops_fold hot
-        path): pull each chain stage's PRE-FOLD ops (a trivial
-        projection plan — the per-epoch Catalyst cost of the fold
-        expression disappears), take v0 from the store's pandas twin,
-        and evaluate every chain with ``_refold_keys_vec`` over an empty
-        exclusion set — bit-identical semantics to the SQL fold by the
-        same pinning that makes cascade overrides exact
-        (tests/test_refold_vec.py).  Populates eval state exactly like a
-        cascade round that refolded every key: eval_pdf empty, all keys
-        overridden, links in ov_flat — every downstream consumer (vote
-        merge, cascade rounds, writes assembly) reads that shape today.
+        """Ops-pull for the runner's ops_fold hot path: pull each chain
+        stage's PRE-FOLD ops (a trivial projection plan — the per-epoch
+        Catalyst cost of the fold expression disappears), take v0 from
+        the store's pandas twin and pack the ops for the numpy fold.
+        ``_load_links`` then evaluates every chain with
+        ``_refold_suffixes`` from position 0 with nothing excluded —
+        bit-identical semantics to the SQL fold by the same pinning that
+        makes cascade refolds exact (tests/test_refold_vec.py).
 
         Returns the epoch's tid Series, or None when a stage's DATA is
         not vec-eligible this epoch (NaN record values etc.) — the
@@ -1108,48 +1183,30 @@ class DriverCascade:
                 # keys, no links — nothing to fold, nothing to vec-init
                 continue
             # the SQL fold groups NULL keys as a group of their own;
-            # the pandas pre-combine dropped those rows (and factorize
-            # would code them -1), so a null-key epoch takes the
-            # standard path instead — flag recorded on the RAW frame
-            # in _pull_stage_ops, before the groupby could hide it
+            # the pandas pre-combine dropped those rows, so a null-key
+            # epoch takes the standard path instead — flag recorded on
+            # the RAW frame in _pull_stage_ops, before the groupby could
+            # hide it
             if st.ops_null_keys or bool(st.ops_pdf["__key"].isna().any()):
                 return None
-            if st.vec is None:
-                st.vec = self._vec_init(st)
+            st.vec = self._vec_init(st)
             if not st.vec:
                 return None
-            # the vectorized fold costs one numpy step per chain
-            # POSITION: a pathological single-hot-key epoch (chain ~
-            # epoch size) would turn the step loop into a Python loop
-            # over the whole batch — the JVM fold handles that shape in
-            # one sequential task at JVM speed, so fall back.  The
-            # contended operating points (chains of a few hundred) stay
-            # far under the cap.
-            if len(st.vec["lens"]) and int(st.vec["lens"].max()) > OPS_FOLD_MAX_CHAIN:
+            # the numpy fold costs one step per chain POSITION: a
+            # pathological single-hot-key epoch (chain ~ epoch size)
+            # would turn the step loop into a Python loop over the whole
+            # batch — the JVM fold handles that shape in one sequential
+            # task at JVM speed, so fall back.  The contended operating
+            # points (chains of a few hundred) stay far under the cap.
+            if int(st.vec["lens"].max()) > OPS_FOLD_MAX_CHAIN:
                 return None
-        no_excl = _np.empty(0, dtype=_np.int64)
-        tid_arrs = []
-        for st in self.states:
-            st.eval_pdf = pd.DataFrame(
-                {
-                    "key": pd.Series(dtype=object),
-                    "_tid": pd.Series(dtype="int64"),
-                    "value": pd.Series(dtype="float64"),
-                    "vote": pd.Series(dtype="int32"),
-                    "_ord": pd.Series(dtype="int64"),
-                    "__wr": pd.Series(dtype=bool),
-                }
-            )
-            if isinstance(st.vec, dict):
-                all_keys = _np.asarray(st.vec["kindex"], dtype=object)
-                if len(all_keys):
-                    self._refold_keys_vec(st, all_keys, no_excl)
-            tid_arrs.append(
-                st.ops_pdf["_tid"].to_numpy().astype(_np.int64, copy=False)
-            )
         self._pulled_eval = True
         if tids_series is not None:
             return pd.Series(tids_series, dtype="int64")
+        tid_arrs = [
+            st.ops_pdf["_tid"].to_numpy().astype(_np.int64, copy=False)
+            for st in self.states
+        ]
         return pd.Series(
             _np.unique(_np.concatenate(tid_arrs)) if tid_arrs else [],
             dtype="int64",
@@ -1236,21 +1293,21 @@ class DriverCascade:
         import pyspark.sql.functions as F
 
         vt = re.sub(r"\s", "", st.ctx.ns.value_type.lower())
-        col = st.eval_pdf["value"]
+        col = st.pulled["value"]
         if col.dtype.kind != "f":
             return
         has_na = bool(col.isna().any())
         if vt in _INT_VTS:
             if has_na:
                 raise Ineligible("NULL chain values with integer value type")
-            st.eval_pdf["value"] = col.astype("int64")
+            st.pulled["value"] = col.astype("int64")
         elif has_na:
             if (
                 st.ctx.evaluated.filter(F.isnan(F.col("value"))).limit(1).count()
                 > 0
             ):
                 raise Ineligible("NaN chain values")
-            st.eval_pdf["value"] = col.astype(object).where(col.notna(), None)
+            st.pulled["value"] = col.astype(object).where(col.notna(), None)
 
     def _ensure_v0(self, store, st: _StageState) -> None:
         """v0: committed snapshot values for the touched keys — from the
@@ -1384,13 +1441,70 @@ class DriverCascade:
                     acc = cand
         return out
 
-    # -- vectorized refold (position-wise over packed chains) ------------
+    # -- the link table --------------------------------------------------
 
-    def _vec_init(self, st: _StageState):
-        """Packed-array fold state for the position-wise vectorized
-        refold, or False when the stage must keep the scalar per-key
-        fold.  Eligibility (stricter than driver-cascade eligibility —
-        failing it costs speed, never correctness):
+    def _load_links(self, st: _StageState, tid_index: pd.Index) -> None:
+        """Code one stage's links against the epoch's tids, once per
+        epoch: from the evaluated pull, or — ops fold — by folding every
+        packed chain from position 0 with nothing excluded."""
+        n_tids = len(tid_index)
+        if st.ctx.kind == "epoch_combine":
+            st.ec_tid_code = _tid_codes(tid_index, st.ops_pdf["_tid"].to_numpy())
+            st.ec_has = _np.zeros(n_tids, bool)
+            st.ec_has[st.ec_tid_code] = True
+            return
+        if st.pulled is None:  # ops fold (an empty stage packs nothing)
+            none = _np.empty(0, _np.int64)
+            P = st.vec or {"keys": _np.empty(0, object), "lens": none, "tids": none}
+            n = len(P["tids"])
+            st.links = _Links.build(
+                P["keys"],
+                _np.repeat(_np.arange(len(P["lens"])), P["lens"]),
+                _tid_codes(tid_index, P["tids"]),
+                n_tids,
+                _np.empty(n, _np.int32),
+                _np.empty(n, _np.float64),
+                _np.empty(n, bool),
+                _np.empty(n, _np.float64),
+            )
+            ks = _np.flatnonzero(P["lens"])
+            if ks.size:
+                self._refold_suffixes(
+                    st, ks, _np.zeros(ks.size, _np.int64), _np.zeros(n_tids, bool)
+                )
+            return
+        pdf, st.pulled = st.pulled, None
+        codes, keys = _key_codes(pdf["key"])
+        ordv = pdf["_ord"].to_numpy().astype(_np.int64, copy=False)
+        o = _np.lexsort((ordv, codes))
+        value = pdf["value"].to_numpy()[o]
+        lk = _Links.build(
+            keys,
+            codes[o],
+            _tid_codes(tid_index, pdf["_tid"].to_numpy()[o]),
+            n_tids,
+            pdf["vote"].to_numpy()[o].astype(_np.int32, copy=False),
+            value,
+            pdf["__wr"].to_numpy()[o].astype(bool, copy=False),
+            # an evaluated link never has an excluded txn, so the chain
+            # value after it IS its value (the candidate if it passed,
+            # the unchanged chain value if not); only exact float64
+            # values can seed the numpy fold
+            value.copy() if value.dtype == _np.float64 else None,
+        )
+        # refolds write a chain's links by position: the pulled _ord
+        # must be exactly 0..len-1 per key
+        if not _np.array_equal(lk.ord, ordv[o]):
+            raise Ineligible("evaluated chain positions are not contiguous")
+        st.links = lk
+
+    # -- refold -----------------------------------------------------------
+
+    def _vec_init(self, st: _StageState, lk: _Links | None = None):
+        """Packed ops for the numpy refold, or False when the stage must
+        keep the scalar per-key fold.  Eligibility (stricter than
+        driver-cascade eligibility — failing it costs speed, never
+        correctness):
 
         - chain_expr with a pre_combine (chains sort by tid alone, so
           ONE global lexsort by (key, tid) packs every chain) and a
@@ -1402,16 +1516,12 @@ class DriverCascade:
         - null-free record values (a NaN in the pulled frame is SQL
           NULL — the scalar fold's _nan_none semantics would be needed).
 
-        The packed layout: chains live as contiguous slices of the
-        (key, tid)-sorted arrays; starts/lens index them, acc0 carries
-        each key's committed v0.  One refold round then costs
-        O(max_chain_len) numpy steps over ALL touched keys instead of
-        one Python loop per key (round-9 verdict next-round #3)."""
+        Without ``lk`` (ops fold) the link table is later laid out from
+        the packing.  With ``lk`` (evaluated pull) the packed ops must
+        line up with its rows — chain lengths and tids — and its values
+        must seed the fold (``acc_after``), or the scalar fold runs."""
         ctx, comp = st.ctx, st.comp
         if st.ops_pdf is None or len(st.ops_pdf) == 0:
-            # nothing to pack: factorize/starts index math below assumes
-            # at least one row (an empty epoch crashed here, round 12) —
-            # the scalar path handles the degenerate case for free
             return False
         if (
             ctx.kind != "chain_expr"
@@ -1423,96 +1533,117 @@ class DriverCascade:
             # a None namespace default cannot live in the float64 acc0
             # array; the scalar fold's None semantics apply — fall back
             or ctx.ns.default is None
+            or (lk is not None and lk.acc_after is None)
         ):
             return False
         col = ctx.value_cols[0]
         vals = st.ops_pdf[col].to_numpy()
-        if vals.dtype.kind == "f":
-            if bool(_np.isnan(vals).any()):
-                return False  # NULL-as-NaN: scalar null semantics needed
-            vals = vals.astype(_np.float64, copy=False)
-        else:
-            # integer record columns are NOT vec-eligible even under
-            # 2^53: Spark (and the scalar fold) evaluate record-only
-            # integer sub-expressions (e.g. x.delta * x.delta) in exact
-            # int64 and round ONCE at the double cast, while the numpy
-            # twin would round after every float64 op — e.g.
-            # delta=190000003 diverges the committed value for
-            # delta*delta + delta.  Falling back costs speed only.
+        if vals.dtype.kind != "f" or bool(_np.isnan(vals).any()):
+            # NaN = SQL NULL: scalar null semantics needed.  Integer
+            # record columns are NOT vec-eligible even under 2^53: Spark
+            # (and the scalar fold) evaluate record-only integer
+            # sub-expressions (e.g. x.delta * x.delta) in exact int64
+            # and round ONCE at the double cast, while the numpy twin
+            # would round after every float64 op — e.g. delta=190000003
+            # diverges the committed value for delta*delta + delta.
             return False
-        key_col = st.ops_pdf["__key"]
-        if isinstance(key_col.dtype, pd.CategoricalDtype):
-            codes = key_col.cat.codes.to_numpy().astype(_np.int64, copy=False)
-            cats = _np.asarray(key_col.cat.categories, dtype=object)
-        else:
-            codes, uniques = pd.factorize(key_col)
-            codes = codes.astype(_np.int64, copy=False)
-            cats = _np.asarray(uniques, dtype=object)
+        vals = vals.astype(_np.float64, copy=False)
+        codes, keys = _key_codes(st.ops_pdf["__key"])
+        if lk is not None:
+            remap = pd.Index(lk.keys).get_indexer(keys)
+            if remap.size and remap.min() < 0:
+                return False
+            codes, keys = remap[codes], lk.keys
         tids = st.ops_pdf["_tid"].to_numpy().astype(_np.int64, copy=False)
         order = _np.lexsort((tids, codes))
-        codes_s = codes[order]
-        tids_s = tids[order]
-        vals_s = vals[order]
-        starts = _np.flatnonzero(_np.r_[True, codes_s[1:] != codes_s[:-1]])
-        lens = _np.diff(_np.r_[starts, codes_s.size])
-        gkeys = cats[codes_s[starts]]
+        _start, lens = _layout(codes[order], len(keys))
+        if lk is not None and not (
+            _np.array_equal(lens, lk.lens)
+            and _np.array_equal(tids[order], self._tids[lk.tid_code])
+        ):
+            return False
         default = float(ctx.ns.default)
         # vectorized v0 lookup: a missing key OR a NULL committed value
         # both coalesce to the namespace default (the same contract as
         # the scalar fold's _nan_none + default)
         if st.v0:
-            acc0 = (
-                pd.Series(st.v0).reindex(gkeys).to_numpy(dtype=_np.float64)
-            )
+            acc0 = pd.Series(st.v0).reindex(keys).to_numpy(dtype=_np.float64)
             _np.copyto(acc0, default, where=_np.isnan(acc0))
         else:
-            acc0 = _np.full(len(starts), default, _np.float64)
+            acc0 = _np.full(len(keys), default, _np.float64)
         return {
-            "tids": tids_s,
-            "vals": vals_s,
-            "starts": starts,
+            "tids": tids[order],
+            "vals": vals[order],
             "lens": lens,
-            "kindex": pd.Index(gkeys),
+            "keys": keys,
             "acc0": acc0,
             "col": col,
         }
 
-    def _refold_keys_vec(self, st: _StageState, touched, excl_arr) -> _np.ndarray:
-        """Refold ALL touched keys' chains at once: one numpy step per
-        chain POSITION (update + invariant + exclusion over every active
-        chain simultaneously), semantics identical to _refold_key's
-        chain_expr branch.  Results replace the keys' rows in the flat
-        override table; returns the refolded links' tids (the affected
-        set for the delta vote merge)."""
-        P = st.vec
-        comp = st.comp
-        tkeys = _np.asarray(touched, dtype=object)
-        # every touched key HAS ops rows (its eval links came from the
-        # same pre-combined rows), so the indexer is total
-        grp = P["kindex"].get_indexer(tkeys)
-        S = P["starts"][grp]
-        L = P["lens"][grp]
-        acc = P["acc0"][grp].copy()
-        total = int(L.sum())
-        o_starts = _np.concatenate(([0], _np.cumsum(L)))[:-1]
-        out_tid = _np.empty(total, _np.int64)
-        out_vote = _np.empty(total, _np.int32)
-        out_val = _np.empty(total, _np.float64)
-        out_pos = _np.empty(total, _np.int64)
-        out_wr = _np.empty(total, bool)
-        tids_s, vals_s, col = P["tids"], P["vals"], P["col"]
-        # membership against the exclusion set is tested per step over
-        # the ACTIVE slices only (total = the touched chains' links),
-        # not precomputed over every link in the epoch — rounds that
-        # touch few keys pay for few keys (round-10 review finding)
-        has_excl = bool(excl_arr.size)
+    def _refold_round(self, st: _StageState, changed: _np.ndarray, ex: _np.ndarray):
+        """One cascade round on one chain stage.  ``changed`` holds the
+        tid codes whose exclusion status flipped, ``ex`` is the new
+        exclusion mask.  A chain changes only from its first link whose
+        txn flipped AND whose current vote is COMMIT — that link's write
+        is (or becomes) applied.  A flipped txn's local ABORT never
+        applied there and still won't, and the links before it read
+        the same chain values, so the prefix stands (influence flows
+        strictly forward in tid order).  Returns the refolded links'
+        tid codes, or None when no chain changes."""
+        lk = st.links
+        rows = lk.rows_of(changed)
+        rows = _np.sort(rows[lk.vote[rows] == COMMIT])
+        if not rows.size:
+            return None
+        keys_t, first = _np.unique(lk.key_code[rows], return_index=True)
+        if st.vec is None:
+            st.vec = self._vec_init(st, lk)
+        if st.vec:
+            return self._refold_suffixes(st, keys_t, rows[first] - lk.start[keys_t], ex)
+        return self._refold_keys(st, keys_t, ex)
+
+    def _refold_suffixes(self, st: _StageState, keys_t, restart, ex) -> _np.ndarray:
+        """Refold the chains ``keys_t`` from positions ``restart`` on,
+        all at once: one numpy step per chain POSITION over every chain
+        still active, with _refold_key's chain_expr semantics.
+
+        The suffixes are sorted by remaining length and gathered once
+        into position-major buffers, so step s works on the contiguous
+        slice ``off[s]:off[s + 1]`` and the active accumulators are
+        ``acc[:n_s]``.  Each chain is seeded from the chain value after
+        its link before the restart (or its committed v0).  Results
+        are scattered back into the table once; returns the refolded
+        links' tid codes."""
+        lk, P, comp = st.links, st.vec, st.comp
+        rem = lk.lens[keys_t] - restart
+        o = _np.argsort(-rem, kind="stable")
+        keys_t, restart, rem = keys_t[o], restart[o], rem[o]
+        base = lk.start[keys_t] + restart
+        acc = _np.where(restart > 0, lk.acc_after[base - 1], P["acc0"][keys_t])
+        steps = int(rem[0])
+        active = len(rem) - _np.cumsum(_np.bincount(rem, minlength=steps + 1))[:steps]
+        off = _np.zeros(steps + 1, _np.int64)
+        _np.cumsum(active, out=off[1:])
+        # position-major gather: chain j's link at step s lands in slot
+        # off[s] + j (chains are sorted longest first)
+        chain = _np.repeat(_np.arange(len(rem)), rem)
+        s = _gather_ranges(_np.zeros_like(rem), rem)
+        g = _np.empty(s.size, _np.int64)
+        g[off[s] + chain] = base[chain] + s
+        tid_g = lk.tid_code[g]
+        keep_g = ~ex[tid_g]
+        val_g = P["vals"][g]
+        col = P["col"]
         upd, inv = comp.update_vec, comp.invariant_vec
-        for step in range(int(L.max()) if len(L) else 0):
-            sel = _np.flatnonzero(L > step)
-            idx = S[sel] + step
-            o = o_starts[sel] + step
-            a = acc[sel]
-            rec = {col: vals_s[idx]}
+        n_out = g.size
+        out_vote = _np.empty(n_out, _np.int32)
+        out_val = _np.empty(n_out, _np.float64)
+        out_wr = _np.empty(n_out, bool)
+        out_acc = _np.empty(n_out, _np.float64)
+        for step in range(steps):
+            lo, hi = int(off[step]), int(off[step + 1])
+            a = acc[: hi - lo]
+            rec = {col: val_g[lo:hi]}
             # mirrors _refold_key chain_expr: candidate cast to the
             # (float) value type, invariant sees the cast candidate,
             # value recorded = candidate if ok else prior acc, chain
@@ -1522,144 +1653,77 @@ class DriverCascade:
                 ok = _np.asarray(inv(cand, rec), dtype=bool)
             else:
                 ok = _np.ones(cand.shape, dtype=bool)
-            if has_excl:
-                wr = ok & ~_np.isin(tids_s[idx], excl_arr)
-            else:
-                wr = ok
-            out_tid[o] = tids_s[idx]
-            out_pos[o] = step
-            out_vote[o] = _np.where(ok, COMMIT, ABORT)
-            out_val[o] = _np.where(ok, cand, a)
-            out_wr[o] = wr
-            acc[sel] = _np.where(wr, cand, a)
-        new = pd.DataFrame(
-            {
-                "key": _np.repeat(tkeys, L),
-                "_tid": out_tid,
-                "vote": out_vote,
-                "value": out_val,
-                "_ord": out_pos,
-                "wr": out_wr,
-            },
-            copy=False,
-        )
-        ov = st.ov_flat
-        if ov is not None and len(ov):
-            keep = ov[~ov["key"].isin(set(tkeys))]
-            new = pd.concat([keep, new], ignore_index=True) if len(keep) else new
-        st.ov_flat = new
-        st.ov_links = new
-        for k in tkeys:
-            st.overrides[k] = None
-        return _np.unique(out_tid)
+            wr = ok & keep_g[lo:hi]
+            out_vote[lo:hi] = _np.where(ok, COMMIT, ABORT)
+            out_val[lo:hi] = _np.where(ok, cand, a)
+            out_wr[lo:hi] = wr
+            nxt = _np.where(wr, cand, a)
+            out_acc[lo:hi] = nxt
+            acc[: hi - lo] = nxt
+        lk.vote[g] = out_vote
+        lk.value[g] = out_val
+        lk.wr[g] = out_wr
+        lk.acc_after[g] = out_acc
+        return tid_g
 
-    # -- vote merge (vectorized) ----------------------------------------
+    def _refold_keys(self, st: _StageState, keys_t, ex) -> _np.ndarray:
+        """Scalar refold of whole chains (stages the numpy twin does not
+        cover), written into the link table by position; returns the
+        refolded links' tid codes."""
+        lk, cast = st.links, st.comp.cast
+        excluded = set(self._tids[ex].tolist())
+        self._ensure_chains(st, lk.keys[keys_t])
+        if lk.value.dtype != object:
+            lk.value = lk.value.astype(object)
+        parts = []
+        for k in keys_t:
+            out = self._refold_key(st, lk.keys[k], excluded)
+            sl = slice(int(lk.start[k]), int(lk.start[k] + lk.lens[k]))
+            if [t for t, *_ in out] != self._tids[lk.tid_code[sl]].tolist():
+                # the pulled ops do not rebuild the evaluated chain (a
+                # NULL key the pre-combine dropped, say): leave the
+                # driver close rather than drop or misplace links
+                raise Ineligible("refold chain does not match the evaluated links")
+            for i, (_t, vote, val, _pos, wr) in enumerate(out, sl.start):
+                lk.vote[i] = vote
+                lk.value[i] = cast(val)
+                lk.wr[i] = wr
+            parts.append(lk.tid_code[sl])
+        return _np.concatenate(parts)
 
-    def _merge_votes(self, all_tids: pd.Series) -> pd.DataFrame:
-        parts: list[pd.DataFrame] = []
+    # -- vote merge -------------------------------------------------------
+
+    def _merge_votes(self) -> tuple[_np.ndarray, _np.ndarray]:
+        """(vote, any_commit) per tid code from every stage's links.  A
+        txn without links wrote nothing: it commits and cannot
+        contaminate."""
+        n = len(self._tids)
+        vote = _np.full(n, COMMIT, _np.int32)
+        anyc = _np.zeros(n, _np.int32)
         for st in self.states:
             if st.ctx.kind == "epoch_combine":
-                # every op row votes COMMIT (no invariant can fail here;
-                # an excluded txn's combine link would also pass, so its
-                # global vote is decided entirely by the chain stages)
-                t = st.ops_pdf["_tid"]
-                parts.append(pd.DataFrame({"_tid": t, "vote": COMMIT}))
-                continue
-            ep = st.eval_pdf
-            if st.overrides:
-                base = ep[~ep["key"].isin(st.overrides)][["_tid", "vote"]]
-                parts.append(base)
-                # ov_links mirrors the overrides' current link set in
-                # BOTH storage modes (scalar _update_ov_links / vec
-                # ov_flat alias) — one read path for the full merge
-                ov = st.ov_links
-                if ov is not None and len(ov):
-                    parts.append(ov[["_tid", "vote"]])
+                # every combine link votes COMMIT (no invariant can fail
+                # here; an excluded txn's combine link would also pass,
+                # so its global vote is decided by the chain stages)
+                anyc[st.ec_has] = 1
             else:
-                parts.append(ep[["_tid", "vote"]])
-        links = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        gb = links.groupby("_tid", sort=False)["vote"]
-        merged = pd.DataFrame(
-            {"vote": gb.max(), "any_commit": (gb.min() == COMMIT).astype("int32")}
-        ).reset_index()
-        gv = pd.DataFrame({"_tid": all_tids}).merge(merged, on="_tid", how="left")
-        gv["vote"] = gv["vote"].fillna(COMMIT).astype("int32")
-        gv["any_commit"] = gv["any_commit"].fillna(0).astype("int32")
-        return gv
+                _fold_votes(vote, anyc, st.links.tid_code, st.links.vote)
+        return vote, anyc
 
-    def _update_ov_links(self, st: _StageState, touched: set) -> None:
-        """Fold this round's refolded keys into the stage's flat
-        override-link frame (replace-then-append: a key refolded in an
-        earlier round can be re-touched by a later exclusion)."""
-        if not touched:
-            return
-        rows = [
-            (key, tid, vote)
-            for key in touched
-            for tid, vote, _v, _o, _w in st.overrides[key]
-        ]
-        new = pd.DataFrame(rows, columns=["key", "_tid", "vote"])
-        ov = st.ov_links
-        if ov is not None and len(ov):
-            ov = ov[~ov["key"].isin(touched)]
-            st.ov_links = pd.concat([ov, new], ignore_index=True)
-        else:
-            st.ov_links = new
-
-    def _merge_votes_delta(
-        self, gv: pd.DataFrame, tid_index: pd.Index, affected
-    ) -> pd.DataFrame:
-        """Per-round vote merge over ONLY the affected tids.
-
-        A cascade round changes the links of exactly the keys it
-        refolded, so only tids with a link on those keys (the touched
-        keys' chain members) plus the tids whose exclusion status
-        changed can change their global vote — the full concat+groupby
-        over every stage's link frame (measured ~0.16 s/round at the
-        144k-txn operating point) re-derived votes that could not have
-        moved.  Same MAX-lattice + any-commit semantics as
-        `_merge_votes`, updated in place on the gv frame (rows stay in
-        all_tids order).  ``affected`` is a set (scalar rounds) or a
-        sorted-unique int64 ndarray (vec rounds hand their tids over
-        without a 100k-element Python set round-trip)."""
-        if isinstance(affected, (set, frozenset)):
-            A_arr = _np.fromiter(affected, dtype=_np.int64, count=len(affected))
-            A_arr.sort()
-        else:
-            A_arr = affected
-        A = pd.Index(A_arr)
-        parts: list[pd.DataFrame] = []
+    def _merge_votes_delta(self, vote, anyc, affected: _np.ndarray) -> None:
+        """Re-merge, in place, only the ``affected`` tid codes: a round
+        changes the links of the chains it refolded, so only their txns
+        (and the txns whose exclusion flipped) can change their global
+        vote.  Same semantics as _merge_votes."""
+        vote[affected] = COMMIT
+        anyc[affected] = 0
         for st in self.states:
             if st.ctx.kind == "epoch_combine":
-                t = st.ops_pdf["_tid"]
-                kept = t[t.isin(A)]
-                parts.append(pd.DataFrame({"_tid": kept, "vote": COMMIT}))
-                continue
-            ep = st.eval_pdf
-            sub = ep.loc[ep["_tid"].isin(A), ["_tid", "vote", "key"]]
-            parts.append(sub.loc[~sub["key"].isin(st.overrides), ["_tid", "vote"]])
-            ov = st.ov_links
-            if ov is not None and len(ov):
-                parts.append(ov.loc[ov["_tid"].isin(A), ["_tid", "vote"]])
-        links = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        gb = links.groupby("_tid", sort=False)["vote"]
-        merged = pd.DataFrame(
-            {"vote": gb.max(), "any_commit": (gb.min() == COMMIT).astype("int32")}
-        )
-        m = merged.reindex(A)
-        # explicit numpy fill: Series.fillna on a reindex of an EMPTY
-        # merge yields object dtype and a deprecated silent downcast
-        miss = m["vote"].isna().to_numpy()
-        vote = _np.where(miss, COMMIT, m["vote"].to_numpy()).astype("int32")
-        anyc = _np.where(miss, 0, m["any_commit"].to_numpy()).astype("int32")
-        pos = tid_index.get_indexer(A)
-        gvv = gv["vote"].to_numpy(copy=True)
-        gva = gv["any_commit"].to_numpy(copy=True)
-        gvv[pos] = vote
-        gva[pos] = anyc
-        gv["vote"] = gvv
-        gv["any_commit"] = gva
-        return gv
+                anyc[affected[st.ec_has[affected]]] = 1
+            else:
+                lk = st.links
+                rows = lk.rows_of(affected)
+                _fold_votes(vote, anyc, lk.tid_code[rows], lk.vote[rows])
 
     # -- the driver close: merge + fixpoint + finals --------------------
 
@@ -1672,21 +1736,20 @@ class DriverCascade:
         tids_covered: bool = False,
     ) -> CascadeResult:
         """Full driver-side vote resolution for one epoch: initial merge
-        from the pulled evaluation links, the abort-cascade fixpoint
-        (PL3/PL4), and the writes/finals assembly — all pandas.  The
-        fixpoint's control flow is identical to the distributed loop in
-        runner._close (same exits, same evaluate-without-apply replay
-        of excluded txns).
+        from the loaded links, the abort-cascade fixpoint (PL3/PL4), and
+        the finals.  The fixpoint's control flow is identical to the
+        distributed loop in runner._close (same exits, same
+        evaluate-without-apply replay of excluded txns).
 
         ``tids`` is either a pandas Series (the source's driver twin —
-        free) or a Spark DataFrame of ``_tid`` — then the fused one-job
-        pull covers it together with the evaluation links and refold
-        ops when the graph shape allows, and falls back to separate
-        pulls otherwise.  With ``tids_covered`` (every txn provably has
-        a state link — graph.links_cover_tids) the fused pull skips the
-        tid-set union branch entirely and derives the tid set from the
-        pulled links: one fewer source scan and ~batch-size fewer rows
-        through Arrow."""
+        free) or a zero-arg callable returning the Spark ``_tid`` frame
+        — then the fused one-job pull covers it together with the
+        evaluation links and refold ops when the graph shape allows, and
+        falls back to separate pulls otherwise.  With ``tids_covered``
+        (every txn provably has a state link — graph.links_cover_tids)
+        the fused pull skips the tid-set union branch entirely and
+        derives the tid set from the pulled links: one fewer source scan
+        and ~batch-size fewer rows through Arrow."""
         if self.ops_fold:
             tids_pdf = self._pull_ops_fold(
                 store, tids if isinstance(tids, pd.Series) else None, tids_covered
@@ -1704,18 +1767,14 @@ class DriverCascade:
             tids_pdf = self._pull_fused(store, None if tids_covered else tids)
             if tids_pdf is None:
                 self._pull_eval(store)
-                tids_pdf = tids.toPandas()["_tid"]
-        all_tids = pd.Series(tids_pdf, dtype="int64").reset_index(drop=True)
-        gv = self._merge_votes(all_tids)
-        tid_index = pd.Index(all_tids)
-        # the fixpoint's set algebra runs on SORTED int64 arrays (the
-        # per-round Python-set form boxed ~100k ints per round at the
-        # loaded operating point); the scalar refold path materializes
-        # a real set lazily, only in rounds where a non-vec stage
-        # actually refolds
-        excluded = _np.empty(0, dtype=_np.int64)
+                tids_pdf = tids().toPandas()["_tid"]
+        self._tids = _np.asarray(tids_pdf, dtype=_np.int64)
+        tid_index = pd.Index(self._tids)
+        for st in self.states:
+            self._load_links(st, tid_index)
+        vote, anyc = self._merge_votes()
+        ex = _np.zeros(len(self._tids), bool)  # the excluded txns
         rounds = 0  # refold rounds actually executed
-        guard = 0
         # Fixpoint: E' = {txns with a failing link when chains apply
         # the writes of exactly the non-E txns}.  Influence flows
         # strictly forward in tid order (a link only reads upstream
@@ -1726,173 +1785,108 @@ class DriverCascade:
         # of the k-th smallest tid is stable from round k, so rounds are
         # bounded by the longest dependency chain in the epoch.
         while run_cascade:
-            ab = gv["vote"] == ABORT
-            ab_arr = _np.sort(gv.loc[ab, "_tid"].to_numpy())
-            if _np.array_equal(ab_arr, excluded):
+            ab = vote == ABORT
+            changed = _np.flatnonzero(ab != ex)
+            if not changed.size:
                 break
-            guard += 1
-            if guard > 100_000:  # pragma: no cover - same bug trap as Spark loop
+            if rounds >= 100_000:  # pragma: no cover - same bug trap as Spark loop
                 raise RuntimeError("driver cascade failed to converge")
-            new_ab = _np.setdiff1d(ab_arr, excluded, assume_unique=True)
-            replays = _np.setdiff1d(excluded, ab_arr, assume_unique=True)
-            if not has_ec and not replays.size:
+            if not has_ec and not (ex & ~ab).any():
                 # early exit: if no NEWLY aborted txn applied a single
                 # link write, excluding it changes no chain — the votes
                 # are already the fixpoint.  (Replayed txns always force
                 # a refold: their writes must re-enter the chains.)
-                new_mask = ab & gv["_tid"].isin(new_ab)
-                if not bool((gv.loc[new_mask, "any_commit"] == 1).any()):
+                if not anyc[changed].any():
                     break
             self._pull_refold(store)
             rounds += 1
-            changed = _np.concatenate((new_ab, replays))
-            excluded = ab_arr
-            excluded_set = None  # built on demand by the scalar path
-            # only tids with a link on a refolded key (or with changed
-            # exclusion status) can change their global vote this round
-            affected_arrs: list = [changed]
+            ex = ab
+            affected = [changed]
             for st in self.states:
-                if st.ctx.kind == "epoch_combine":
-                    continue  # every combine link votes COMMIT regardless
-                # refold ONLY keys where a status-changed txn's link is
-                # (or would become) APPLIED — its current vote is
-                # COMMIT.  A changed txn whose link on a key is a local
-                # ABORT never applied there and still won't, so that
-                # key's fold is bit-identical under the new exclusion
-                # set and its previous evaluation (original or an
-                # earlier round's override) stands.  This is the
-                # per-key form of the any_commit contamination test —
-                # a key-locality refinement over refolding every key
-                # the changed txns touch.
-                ep = st.eval_pdf
-                cm = ep.loc[
-                    ep["_tid"].isin(changed) & (ep["vote"] == COMMIT), "key"
-                ]
-                if st.overrides:
-                    cm = cm[~cm.isin(st.overrides)]
-                    ov = st.ov_links
-                    if ov is not None and len(ov):
-                        ov_cm = ov.loc[
-                            ov["_tid"].isin(changed) & (ov["vote"] == COMMIT),
-                            "key",
-                        ]
-                        # concat only non-empty pieces: pandas deprecates
-                        # empty-entry dtype inference in concat, and a
-                        # future release changing it would silently shift
-                        # the key dtype here
-                        if len(ov_cm):
-                            cm = pd.concat([cm, ov_cm]) if len(cm) else ov_cm
-                touched = cm.unique()
-                if len(touched) == 0:
-                    continue
-                if st.vec is None:
-                    st.vec = self._vec_init(st)
-                if st.vec:
-                    affected_arrs.append(
-                        self._refold_keys_vec(
-                            st, _np.asarray(touched, dtype=object), excluded
-                        )
-                    )
-                    continue
-                if excluded_set is None:
-                    excluded_set = set(map(int, excluded))
-                self._ensure_chains(st, touched)
-                tset: set = set()
-                aff_sc: set = set()
-                for key in touched:
-                    st.overrides[key] = self._refold_key(st, key, excluded_set)
-                    tset.add(key)
-                    for tid, _rec in st.chains[key]:
-                        aff_sc.add(tid)
-                self._update_ov_links(st, tset)
-                affected_arrs.append(
-                    _np.fromiter(aff_sc, dtype=_np.int64, count=len(aff_sc))
-                )
-            aff = _np.unique(_np.concatenate(affected_arrs))
-            gv = self._merge_votes_delta(gv, tid_index, aff)
+                if st.ctx.kind != "epoch_combine":  # combine links always COMMIT
+                    aff = self._refold_round(st, changed, ex)
+                    if aff is not None:
+                        affected.append(aff)
+            self._merge_votes_delta(vote, anyc, _np.unique(_np.concatenate(affected)))
 
-        gv_out = pd.DataFrame(
-            {
-                "_tid": all_tids,
-                "vote": gv["vote"].astype("int32"),
-                "any_commit": gv["any_commit"].astype("int32"),
-            }
+        gv_pdf = pd.DataFrame({"_tid": self._tids, "vote": vote, "any_commit": anyc})
+        return CascadeResult(
+            gv_pdf=gv_pdf,
+            finals=self._finals(vote == COMMIT, ex),
+            rounds=rounds,
+            build_writes=lambda: self._writes(ex),
         )
-        commit_arr = gv.loc[gv["vote"] == COMMIT, "_tid"].to_numpy()
+
+    def _combined(self, st: _StageState, ex) -> pd.DataFrame:
+        """An epoch_combine stage's per-key result over the txns not
+        excluded: (key, value, _tid=-1, _ord=0)."""
+        ctx, comp = st.ctx, st.comp
+        pre = ctx.stage.pre_combine
+        p = st.ops_pdf
+        kept = p[~ex[st.ec_tid_code]] if ex.any() else p
+        gb = kept.groupby("__key", sort=False, observed=True)
+        combined = pd.DataFrame({c: _pd_agg(gb, c, h) for c, h in pre.items()}).reset_index()
+        rows = []
+        cols = list(pre)
+        for key, *vals in zip(combined["__key"], *[combined[c] for c in cols]):
+            rec = {c: _nan_none(v) for c, v in zip(cols, vals)}
+            raw_v0 = st.v0.get(key, ctx.ns.default)
+            v0 = comp.cast(
+                _nan_none(raw_v0) if _nan_none(raw_v0) is not None else ctx.ns.default
+            )
+            rows.append((key, comp.cast(comp.update(v0, rec)), -1, 0))
+        return pd.DataFrame(rows, columns=["key", "value", "_tid", "_ord"])
+
+    @staticmethod
+    def _values(v: _np.ndarray) -> pd.Series:
+        # a scalar refold leaves Python values in an object column; give
+        # them back the dtype a typed pull would have
+        return pd.Series(v).infer_objects() if v.dtype == object else pd.Series(v)
+
+    def _finals(self, committed: _np.ndarray, ex) -> dict[str, pd.DataFrame]:
+        """ns -> (key, value) after the epoch: per key, the last applied
+        link of a committed txn in the last stage writing it (the pandas
+        twin of the distributed close's row_number window over
+        (_stage, _ord))."""
+        parts: dict[str, list[pd.DataFrame]] = {}
+        for st in self.states:
+            if st.ctx.kind == "epoch_combine":
+                part = self._combined(st, ex)[["key", "value"]]
+            else:
+                lk = st.links
+                rows = _np.flatnonzero(lk.wr & committed[lk.tid_code])
+                kc = lk.key_code[rows]
+                last = rows[_np.r_[kc[1:] != kc[:-1], True]] if rows.size else rows
+                part = pd.DataFrame(
+                    {"key": lk.keys[lk.key_code[last]], "value": self._values(lk.value[last])}
+                )
+            parts.setdefault(st.ctx.ns.name, []).append(part)
+        return {
+            ns: (
+                pd.concat(ps, ignore_index=True).drop_duplicates("key", keep="last")
+                .reset_index(drop=True)
+                if len(ps) > 1 else ps[0]
+            )
+            for ns, ps in parts.items()
+        }
+
+    def _writes(self, ex) -> dict[str, list[pd.DataFrame]]:
+        """ns -> per-stage applied links (key, value, _tid, _ord, _stage)."""
         writes: dict[str, list[pd.DataFrame]] = {}
         for st in self.states:
-            ctx = st.ctx
-            if ctx.kind == "epoch_combine":
-                pre = ctx.stage.pre_combine
-                p = st.ops_pdf
-                kept = p[~p["_tid"].isin(excluded)] if excluded.size else p
-                gb = kept.groupby("__key", sort=False, observed=True)
-                agg = {c: _pd_agg(gb, c, h) for c, h in pre.items()}
-                combined = pd.DataFrame(agg).reset_index()
-                rows = []
-                cols = list(pre)
-                for key, *vals in zip(combined["__key"], *[combined[c] for c in cols]):
-                    rec = {c: _nan_none(v) for c, v in zip(cols, vals)}
-                    raw_v0 = st.v0.get(key, ctx.ns.default)
-                    v0 = st.comp.cast(
-                        _nan_none(raw_v0)
-                        if _nan_none(raw_v0) is not None
-                        else ctx.ns.default
-                    )
-                    rows.append((key, st.comp.cast(st.comp.update(v0, rec)), -1, 0))
-                wdf = pd.DataFrame(rows, columns=["key", "value", "_tid", "_ord"])
+            if st.ctx.kind == "epoch_combine":
+                wdf = self._combined(st, ex)
             else:
-                ep = st.eval_pdf
-                base = ep[ep["__wr"]]
-                if st.overrides:
-                    base = base[~base["key"].isin(st.overrides)]
-                frames = [base[["key", "value", "_tid", "_ord"]]]
-                if st.ov_flat is not None:
-                    # vec mode: override values were cast (float64)
-                    # during the fold — project the applied links flat
-                    ow = st.ov_flat[st.ov_flat["wr"]]
-                    if len(ow):
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "key": ow["key"],
-                                    "value": ow["value"],
-                                    "_tid": ow["_tid"],
-                                    "_ord": ow["_ord"],
-                                },
-                                copy=False,
-                            ).reset_index(drop=True)
-                        )
-                else:
-                    ov_rows = [
-                        (key, st.comp.cast(val), tid, ordv)
-                        for key, links in st.overrides.items()
-                        for tid, _vote, val, ordv, wr in links
-                        if wr
-                    ]
-                    if ov_rows:
-                        frames.append(
-                            pd.DataFrame(
-                                ov_rows, columns=["key", "value", "_tid", "_ord"]
-                            )
-                        )
-                wdf = (
-                    pd.concat(frames, ignore_index=True)
-                    if len(frames) > 1
-                    else frames[0].reset_index(drop=True)
+                lk = st.links
+                rows = _np.flatnonzero(lk.wr)
+                wdf = pd.DataFrame(
+                    {
+                        "key": lk.keys[lk.key_code[rows]],
+                        "value": self._values(lk.value[rows]),
+                        "_tid": self._tids[lk.tid_code[rows]],
+                        "_ord": lk.ord[rows],
+                    }
                 )
-                wdf = _plain_keys(wdf, "key")
-            wdf["_stage"] = ctx.stage_idx
-            writes.setdefault(ctx.ns.name, []).append(wdf)
-
-        finals: dict[str, pd.DataFrame] = {}
-        for ns_name, parts in writes.items():
-            allw = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            wc = allw[(allw["_tid"] < 0) | allw["_tid"].isin(commit_arr)]
-            # last writer per key: max (_stage, _ord) — the pandas twin
-            # of the close's row_number window
-            wc = wc.sort_values(["_stage", "_ord"], kind="mergesort")
-            finals[ns_name] = wc.drop_duplicates("key", keep="last")[
-                ["key", "value"]
-            ].reset_index(drop=True)
-        return CascadeResult(gv_pdf=gv_out, writes=writes, finals=finals, rounds=rounds)
+            wdf["_stage"] = st.ctx.stage_idx
+            writes.setdefault(st.ctx.ns.name, []).append(wdf)
+        return writes

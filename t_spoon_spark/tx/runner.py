@@ -35,6 +35,7 @@ Isolation semantics (SURVEY.md §4.3, tgraph/state/PL*Strategy.java):
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import time
@@ -178,7 +179,15 @@ class EpochResult:
     LAZILY on first access — the plan construction (unions + to_json
     over every namespace) costs ~0.3 s of driver time per epoch, pure
     overhead for throughput/latency paths that only read vote_counts()
-    off the materialized vote frame."""
+    off the materialized vote frame.  ``votes`` is lazy the same way
+    when the driver close resolved the votes in pandas.
+
+    How the epoch closed: ``close_path`` is ``"ops_fold"`` or
+    ``"evaluated_pull"`` (the driver close, tx/driver_cascade.py) or
+    ``"distributed"``; ``cascade_rounds`` counts the abort-cascade
+    refold rounds; ``close_fallback`` is None, or why the epoch left
+    the driver close it would have taken (an ops-fold retry or an
+    Ineligible reason)."""
 
     def __init__(
         self,
@@ -187,7 +196,11 @@ class EpochResult:
         stream: DataFrame,
         spu_results: DataFrame | None,
         n_replay: int,
-        votes: DataFrame,
+        votes,  # DataFrame or zero-arg thunk returning one
+        votes_pdf: pd.DataFrame | None = None,
+        close_path: str = "distributed",
+        cascade_rounds: int = 0,
+        close_fallback: str | None = None,
     ):
         self.epoch = epoch
         self._results = results
@@ -196,9 +209,11 @@ class EpochResult:
         self.stream = stream
         self.spu_results = spu_results
         self.n_replay = n_replay
-        # materialized (_tid, vote:int) frame — lets vote accounting run
-        # off the small control frame instead of the results plan
-        self.votes = votes
+        self._votes = votes
+        self._votes_pdf = votes_pdf
+        self.close_path = close_path
+        self.cascade_rounds = cascade_rounds
+        self.close_fallback = close_fallback
 
     @property
     def results(self) -> DataFrame:
@@ -206,8 +221,18 @@ class EpochResult:
             self._results = self._results()
         return self._results
 
+    @property
+    def votes(self) -> DataFrame:
+        """(_tid, vote:int) frame — lets vote accounting run off the
+        small control frame instead of the results plan."""
+        if callable(self._votes):
+            self._votes = self._votes()
+        return self._votes
+
     def vote_counts(self) -> dict[str, int]:
-        pdf = getattr(self.votes, "_tspoon_pdf", None)
+        pdf = self._votes_pdf
+        if pdf is None:
+            pdf = getattr(self.votes, "_tspoon_pdf", None)
         if pdf is not None:  # driver twin: zero Spark jobs
             from t_spoon_spark.tx.vote import VOTE_NAMES
 
@@ -246,6 +271,11 @@ class GraphRunner:
         self._of_static: bool | None = None
         self._last_txns: int | None = None
         self._of_retry = False
+        # why the driver close is off for good (compile or pull-time
+        # Ineligible), and why THIS epoch left the close it would have
+        # taken (EpochResult.close_fallback)
+        self._dc_ineligible: str | None = None
+        self._fallback: str | None = None
 
     # ------------------------------------------------------------------
 
@@ -266,14 +296,14 @@ class GraphRunner:
         with self.env.epoch_lock:
             self.last_lock_wait_s = time.time() - t_lock
             saved_replay = self._replay
+            self._fallback = None
             try:
                 return self._run_epoch_locked(batch, spus, batch_id, query_id)
             except _OpsFoldRetry as e:
                 # ops-fold pull hit a data-dependent ineligibility:
                 # nothing committed — restore the consumed replay queue
                 # and run the SAME epoch once on the standard path
-                if _DEBUG:
-                    print(f"    [tspoon] ops-fold retry: {e}", flush=True)
+                self._fallback = f"ops-fold retry: {e}"
                 self._replay = saved_replay
                 self._of_retry = True
                 try:
@@ -878,8 +908,7 @@ class GraphRunner:
                     for c in self._stage_ctxs
                 ]
             except dcm.Ineligible as e:
-                if _DEBUG:
-                    print(f"    [tspoon] driver cascade ineligible: {e}", flush=True)
+                self._dc_ineligible = str(e)
                 self._dc_compiled = False
                 return None
             # static ops-fold eligibility, once per runner: the mirror
@@ -954,14 +983,13 @@ class GraphRunner:
     ) -> EpochResult:
         env = self.env
         t0 = time.time()
-        tids = src.select("_tid")
         votes_parts, writes_parts = exec_states(None)
-        spark = tids.sparkSession
+        spark = src.sparkSession
 
         # Driver close (pandas materialize mode + compiled python twins,
         # tx/driver_cascade.py): as few as ONE Spark job per epoch — the
         # ops-fold projection or the evaluation pull — then vote merge,
-        # abort-cascade fixpoint and finals resolution all in pandas
+        # abort-cascade fixpoint and finals resolution all on the driver
         # over batch-sized control frames.  Cluster sessions and graphs
         # the compile refuses take the distributed close below.
         dc = self._driver_cascade_or_none(spark) if n_state > 0 else None
@@ -969,7 +997,7 @@ class GraphRunner:
             from t_spoon_spark.tx.driver_cascade import Ineligible
 
             try:
-                return self._driver_close(epoch, src, stream, tids, spus, dc, t0)
+                return self._driver_close(epoch, src, stream, spus, dc, t0)
             except Ineligible as e:
                 if self._ops_fold_epoch:
                     # the ops-fold epoch never built the evaluation
@@ -982,12 +1010,12 @@ class GraphRunner:
                 # compile gate cannot see) falls back to the distributed
                 # close below — nothing was committed yet, and the
                 # exec_states frames are untouched
-                if _DEBUG:
-                    print(f"    [tspoon] driver close fell back: {e}", flush=True)
+                self._dc_ineligible = str(e)
                 self._dc_compiled = False
 
         # Distributed close: the cluster's path (materialize 'reliable')
         # and the local fallback for graphs the driver compile refuses.
+        tids = src.select("_tid")
         gvotes = materialize(self._merge_votes(tids, votes_parts))
         t0 = _dbg("gvotes", t0)
 
@@ -1010,6 +1038,7 @@ class GraphRunner:
         # from round k and the loop terminates in at most
         # longest-dependency-chain rounds. Cost: one control job when
         # nothing aborts.
+        rounds = 0
         if n_state > 0 and env.isolation in ("PL3", "PL4"):
             # epoch_combine folds every txn unconditionally, so its sums
             # must always be re-derived when something aborts — the
@@ -1018,7 +1047,6 @@ class GraphRunner:
                 isinstance(s, G.StateStage) and s.epoch_combine for s in self.graph.stages
             )
             prev_df: DataFrame | None = None
-            rounds = 0
             while True:
                 # ONE control job per round (optimization r15: each
                 # count()/limit(1).count() was a full job dispatch on
@@ -1080,8 +1108,15 @@ class GraphRunner:
                 t0 = _dbg(f"cascade_round {rounds} aborted={n_aborted}", t0)
             t0 = _dbg("abort_cascade", t0)
 
+        reasons = [self._fallback]
+        if self._dc_compiled is False and materialize_mode(spark) == "pandas":
+            reasons.append(self._dc_ineligible)
         return self._finish_close(
-            epoch, src, stream, gvotes, lambda: writes_parts, spus, None, t0
+            epoch, src, stream, lambda: gvotes, None, lambda: writes_parts, spus,
+            None, t0,
+            close_path="distributed",
+            cascade_rounds=rounds,
+            close_fallback="; ".join(r for r in reasons if r) or None,
         )
 
     def _driver_close(
@@ -1089,25 +1124,24 @@ class GraphRunner:
         epoch: int,
         src: DataFrame,
         stream: DataFrame,
-        tids: DataFrame,
         spus: DataFrame | None,
         dc,
         t0: float,
     ) -> EpochResult:
         """Pandas-mode close via the driver cascade module: pull the
         evaluation links (the epoch's one real Spark job per stage),
-        resolve votes/cascade/finals in pandas, re-enter Spark as
-        LocalRelations."""
+        resolve votes/cascade/finals on the driver, re-enter Spark as
+        LocalRelations only where something reads them."""
         env = self.env
         store = env.store
-        spark = tids.sparkSession
+        spark = src.sparkSession
         has_ec = any(
             isinstance(s, G.StateStage) and s.epoch_combine for s in self.graph.stages
         )
         src_pdf = getattr(src, "_tspoon_pdf", None)
         out = dc.close(
             store,
-            src_pdf["_tid"] if src_pdf is not None else tids,
+            src_pdf["_tid"] if src_pdf is not None else (lambda: src.select("_tid")),
             has_ec,
             run_cascade=env.isolation in ("PL3", "PL4"),
             tids_covered=bool(self._tids_covered),
@@ -1115,10 +1149,14 @@ class GraphRunner:
         # small-epoch regime signal for the next epoch's ops-fold
         # decision (the hot path must never engage on a loaded epoch)
         self._last_txns = len(out.gv_pdf)
-        gvotes = spark.createDataFrame(
-            out.gv_pdf, schema="_tid long, vote int, any_commit int"
-        )
-        gvotes._tspoon_pdf = out.gv_pdf
+
+        @functools.cache
+        def gvotes() -> DataFrame:
+            df = spark.createDataFrame(
+                out.gv_pdf, schema="_tid long, vote int, any_commit int"
+            )
+            df._tspoon_pdf = out.gv_pdf
+            return df
 
         def writes_supplier() -> dict[str, list[DataFrame]]:
             return {
@@ -1137,7 +1175,10 @@ class GraphRunner:
 
         t0 = _dbg(f"driver_close rounds={out.rounds}", t0)
         return self._finish_close(
-            epoch, src, stream, gvotes, writes_supplier, spus, out, t0
+            epoch, src, stream, gvotes, out.gv_pdf, writes_supplier, spus, out, t0,
+            close_path="ops_fold" if dc.ops_fold else "evaluated_pull",
+            cascade_rounds=out.rounds,
+            close_fallback=self._fallback,
         )
 
     def _finish_close(
@@ -1145,20 +1186,22 @@ class GraphRunner:
         epoch: int,
         src: DataFrame,
         stream: DataFrame,
-        gvotes: DataFrame,
+        gvotes,
+        gv_pdf: pd.DataFrame | None,
         writes_supplier,
         spus: DataFrame | None,
         driver_res,
         t0: float,
+        **close_info,
     ) -> EpochResult:
         """Post-cascade close: resolve finals, commit, build results —
-        shared by the distributed and driver paths.  The updates /
-        results plans are built lazily: an epoch that commits via the
-        pandas store twin and is only asked for vote counts never pays
-        their construction."""
+        shared by the distributed and driver paths.  ``gvotes`` returns
+        the vote frame (``gv_pdf`` is its driver twin, when the driver
+        close resolved it).  The vote / updates / results plans are
+        built lazily: an epoch that commits via the pandas store twin
+        and is only asked for vote counts never pays their
+        construction."""
         store = self.env.store
-
-        commit_tids = gvotes.filter(F.col("vote") == COMMIT).select("_tid")
         built: dict[str, object] = {}
 
         def updates_and_rows() -> tuple[dict[str, DataFrame], list[DataFrame]]:
@@ -1168,6 +1211,7 @@ class GraphRunner:
                 return built["u"]  # type: ignore[return-value]
             updates: dict[str, DataFrame] = {}
             upd_rows: list[DataFrame] = []
+            commit_tids = gvotes().filter(F.col("vote") == COMMIT).select("_tid")
             for ns_name, parts in writes_supplier().items():
                 w = parts[0]
                 for p in parts[1:]:
@@ -1208,7 +1252,7 @@ class GraphRunner:
                 )
             else:
                 upd_agg = None
-            results = src.join(gvotes.select("_tid", "vote"), "_tid").select(
+            results = src.join(gvotes().select("_tid", "vote"), "_tid").select(
                 "*", F.col("_tid").alias("_ts")
             ).withColumn("vote", vote_name(F.col("vote")))
             if upd_agg is not None:
@@ -1265,12 +1309,14 @@ class GraphRunner:
         # only arise from explicitly replay-voting user stages (none of
         # the built-in paths emit them any more) — check cheaply on the
         # materialized vote frame before touching src.
-        replay_tids = gvotes.filter(F.col("vote") == REPLAY).select("_tid")
-        gpdf = getattr(gvotes, "_tspoon_pdf", None)
-        n_replay = (
-            int((gpdf["vote"] == REPLAY).sum()) if gpdf is not None else replay_tids.count()
-        )
+        if gv_pdf is None:
+            gv_pdf = getattr(gvotes(), "_tspoon_pdf", None)
+        if gv_pdf is not None:
+            n_replay = int((gv_pdf["vote"] == REPLAY).sum())
+        else:
+            n_replay = gvotes().filter(F.col("vote") == REPLAY).count()
         if n_replay:
+            replay_tids = gvotes().filter(F.col("vote") == REPLAY).select("_tid")
             self._replay = materialize(src.join(replay_tids, "_tid"))
         else:
             self._replay = None
@@ -1287,6 +1333,8 @@ class GraphRunner:
             spu_results=spu_results,
             n_replay=n_replay,
             votes=gvotes,
+            votes_pdf=gv_pdf,
+            **close_info,
         )
 
     # -- SPU ------------------------------------------------------------

@@ -1,12 +1,12 @@
 """Property parity for the incremental cascade vote merge.
 
-`_merge_votes_delta` updates the global-vote frame for only the tids
-affected by a round's refolded keys; `_merge_votes` recomputes it from
-every stage's full link set.  They must agree EXACTLY after every round
-of any cascade — this pins the delta path's correctness independent of
-the end-to-end runner parity tests (which only exercise the workloads
-they run).  Pure pandas: no Spark session, so the whole property sweep
-is milliseconds per example.
+`_merge_votes_delta` re-merges, in place, only the tids affected by a
+round's refolded chains; `_merge_votes` recomputes every tid's vote from
+every stage's link table.  They must agree EXACTLY after every round of
+any cascade — this pins the delta path's correctness independent of the
+end-to-end runner parity tests (which only exercise the workloads they
+run).  Pure numpy: no Spark session, so the whole property sweep is
+milliseconds per example.
 
 Reference semantics being preserved: the global vote is a MAX lattice
 over per-key link votes (tgraph/twopc/ReduceVotesFunction.java), with
@@ -19,10 +19,19 @@ from __future__ import annotations
 import random
 from types import SimpleNamespace
 
+import numpy as np
 import pandas as pd
+import pytest
 
-from t_spoon_spark.tx.driver_cascade import DriverCascade, _StageState
+from t_spoon_spark.tx.driver_cascade import DriverCascade, _Compiled, _StageState
 from t_spoon_spark.tx.vote import ABORT, COMMIT
+
+
+def _pulled(rows) -> pd.DataFrame:
+    """An evaluated pull: chain positions are each key's link order."""
+    ep = pd.DataFrame(rows, columns=["key", "_tid", "value", "vote", "__wr"])
+    ep["_ord"] = ep.groupby("key").cumcount()
+    return ep
 
 
 def _mk_stage(rng, tids, keys, kind="chain_expr"):
@@ -31,17 +40,9 @@ def _mk_stage(rng, tids, keys, kind="chain_expr"):
     for tid in tids:
         for key in rng.sample(keys, rng.randint(1, min(3, len(keys)))):
             rows.append((key, tid, float(rng.randint(0, 9)),
-                         rng.choice([COMMIT, ABORT]), 0, True))
-    ep = pd.DataFrame(
-        rows, columns=["key", "_tid", "value", "vote", "_ord", "__wr"]
-    )
+                         rng.choice([COMMIT, ABORT]), True))
     st = _StageState(ctx=SimpleNamespace(kind=kind), comp=None)
-    st.eval_pdf = ep
-    # chains: fold order per key over the tids that touched it
-    chains: dict = {}
-    for key, tid in zip(ep["key"], ep["_tid"]):
-        chains.setdefault(key, []).append((int(tid), {"delta": 1.0}))
-    st.chains = chains
+    st.pulled = _pulled(rows)
     return st
 
 
@@ -54,9 +55,12 @@ def _mk_ec_stage(rng, tids):
     return st
 
 
-def _dc(states):
+def _dc(states, tids):
     dc = DriverCascade.__new__(DriverCascade)
     dc.states = states
+    dc._tids = np.asarray(tids, dtype=np.int64)
+    for st in states:
+        dc._load_links(st, pd.Index(dc._tids))
     return dc
 
 
@@ -70,11 +74,9 @@ def _simulate(seed: int, with_ec: bool):
     ]
     if with_ec:
         states.append(_mk_ec_stage(rng, tids))
-    dc = _dc(states)
+    dc = _dc(states, tids)
 
-    all_tids = pd.Series(tids, dtype="int64")
-    tid_index = pd.Index(all_tids)
-    gv = dc._merge_votes(all_tids)
+    vote, anyc = dc._merge_votes()
     excluded: set = set()
     for _round in range(rng.randint(1, 4)):
         # flip the exclusion status of a random slice of tids — since
@@ -89,30 +91,24 @@ def _simulate(seed: int, with_ec: bool):
         for st in dc.states:
             if st.ctx.kind == "epoch_combine":
                 continue
-            ep = st.eval_pdf
-            touched = ep.loc[ep["_tid"].isin(changed), "key"].unique()
-            tset = set()
-            for key in touched:
+            lk = st.links
+            touched = np.unique(lk.key_code[np.isin(dc._tids[lk.tid_code], list(changed))])
+            for k in touched:
                 # refold: EVERY chain member re-votes (excluded links
                 # evaluate without applying — their wr is False); any
                 # votes are legal — the merge must be exact for ALL
                 # link contents
-                st.overrides[key] = [
-                    (tid, rng.choice([COMMIT, ABORT]), 1.0, pos,
-                     tid not in excluded and rng.random() < 0.8)
-                    for pos, (tid, _rec) in enumerate(st.chains[key])
-                ]
-                tset.add(key)
-                for tid, _rec in st.chains[key]:
+                sl = slice(lk.start[k], lk.start[k] + lk.lens[k])
+                for i in range(sl.start, sl.stop):
+                    tid = int(dc._tids[lk.tid_code[i]])
+                    lk.vote[i] = rng.choice([COMMIT, ABORT])
+                    lk.wr[i] = tid not in excluded and rng.random() < 0.8
                     affected.add(tid)
-            dc._update_ov_links(st, tset)
-        gv = dc._merge_votes_delta(gv, tid_index, affected)
-        full = dc._merge_votes(all_tids)
-        pd.testing.assert_frame_equal(
-            gv[["_tid", "vote", "any_commit"]].reset_index(drop=True),
-            full[["_tid", "vote", "any_commit"]].reset_index(drop=True),
-            check_dtype=False,
-        )
+        codes = pd.Index(dc._tids).get_indexer(sorted(affected))
+        dc._merge_votes_delta(vote, anyc, codes)
+        full_vote, full_anyc = dc._merge_votes()
+        np.testing.assert_array_equal(vote, full_vote)
+        np.testing.assert_array_equal(anyc, full_anyc)
 
 
 def test_delta_merge_matches_full_merge_chain_only():
@@ -125,17 +121,48 @@ def test_delta_merge_matches_full_merge_with_epoch_combine():
         _simulate(seed + 1000, with_ec=True)
 
 
-def test_ov_links_replace_then_append():
-    """A key re-touched in a later round must have its earlier override
-    links REPLACED, not duplicated, in the flat frame."""
-    st = _StageState(ctx=SimpleNamespace(kind="chain_expr"), comp=None)
-    dc = _dc([st])
-    st.overrides["a"] = [(1, COMMIT, 1.0, 0, True), (2, ABORT, 1.0, 1, True)]
-    dc._update_ov_links(st, {"a"})
-    assert len(st.ov_links) == 2
-    st.overrides["a"] = [(1, COMMIT, 1.0, 0, True)]
-    st.overrides["b"] = [(3, COMMIT, 1.0, 0, True)]
-    dc._update_ov_links(st, {"a", "b"})
-    assert sorted(zip(st.ov_links["key"], st.ov_links["_tid"])) == [
-        ("a", 1), ("b", 3)
+def test_retouched_key_overwrites_rows_in_place():
+    """A key refolded again in a later round has its links OVERWRITTEN
+    in the table — one row per link, holding the latest round — never
+    duplicated; other keys' rows are untouched."""
+    ns = SimpleNamespace(default=0.0)
+    ctx = SimpleNamespace(kind="chain_expr", ns=ns, stage=SimpleNamespace(pre_combine=None))
+    comp = _Compiled(
+        update=lambda acc, rec: acc + rec["delta"],
+        invariant=lambda v, rec: v >= 0,
+        cast=float,
+    )
+    st = _StageState(ctx=ctx, comp=comp)
+    st.pulled = _pulled(
+        [("a", 1, 5.0, COMMIT, True), ("a", 2, 1.0, COMMIT, True),
+         ("b", 3, 2.0, COMMIT, True)]
+    )
+    st.chains = {"a": [(1, {"delta": 5.0}), (2, {"delta": -4.0})], "b": [(3, {"delta": 2.0})]}
+    dc = _dc([st], [1, 2, 3])
+    lk = st.links
+    code_a = int(pd.Index(lk.keys).get_loc("a"))
+    # round 1: txn 1 excluded -> txn 2's link reads 0 and aborts
+    aff = dc._refold_keys(st, np.asarray([code_a]), np.array([True, False, False]))
+    assert sorted(dc._tids[aff].tolist()) == [1, 2]
+    assert len(lk.vote) == 3
+    # round 2: txn 1 replays -> txn 2 commits again on 5
+    dc._refold_keys(st, np.asarray([code_a]), np.array([False, False, False]))
+    rows = sorted(
+        (lk.keys[k], int(dc._tids[t]), int(v), float(x), bool(w))
+        for k, t, v, x, w in zip(lk.key_code, lk.tid_code, lk.vote, lk.value, lk.wr)
+    )
+    assert rows == [
+        ("a", 1, COMMIT, 5.0, True),
+        ("a", 2, COMMIT, 1.0, True),
+        ("b", 3, COMMIT, 2.0, True),
     ]
+
+
+def test_foreign_link_tid_fails_loudly():
+    """A link whose tid is not one of the epoch's would code as -1 and
+    the merge would overwrite the LAST txn's vote; loading it raises,
+    naming the tid."""
+    st = _StageState(ctx=SimpleNamespace(kind="chain_expr"), comp=None)
+    st.pulled = _pulled([("a", 1, 1.0, COMMIT, True), ("a", 99, 1.0, ABORT, True)])
+    with pytest.raises(ValueError, match="99"):
+        _dc([st], [1, 2, 3])
