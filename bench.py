@@ -587,12 +587,11 @@ def bench_extra(spark, sf_dir, compact: dict, details: dict) -> None:
     except ImportError:
         pass
 
-    # queryable-state serving latency (round-13 verdict #6): promoted
-    # from tools/query_latency_probe.py to committed artifact rows —
-    # the closest analogue to the reference's per-query latency metric
-    # (its evaluation issues 1-10-key queries against live state,
-    # launch_scripts/parse_results.py:31-38).  Runs in the live txn
-    # session BEFORE the cluster pins stop it.
+    # queryable-state serving latency (round-13 verdict #6) as
+    # committed artifact rows — the closest analogue to the reference's
+    # per-query latency metric (its evaluation issues 1-10-key queries
+    # against live state, launch_scripts/parse_results.py:31-38).  Runs
+    # in the live txn session BEFORE the cluster pins stop it.
     try:
         from t_spoon_spark.bench_txn import serve_query_latency
 
@@ -608,7 +607,7 @@ def bench_extra(spark, sf_dir, compact: dict, details: dict) -> None:
         details["serve_key_query_latency_ms"] = {
             **sl,
             "protocol": (
-                "query_latency_probe protocol: TCP round-trip of `keys` "
+                "TCP round-trip of `keys` "
                 "ops sizes cycling 1..10 over a 100k keyspace, 60 "
                 "queries per mode, 1 unmeasured warm pass; modes = idle "
                 "committed / under continuous commits / under commits "

@@ -790,8 +790,9 @@ def bank_transfer_tps_pl4_contended(spark: SparkSession, sf_dir: str) -> float:
 def serve_query_latency(
     spark: SparkSession, n_keys: int = 100_000, n_queries: int = 60
 ) -> dict:
-    """Queryable-state serving latency (round-13 verdict #6 — promoted
-    from tools/query_latency_probe.py to a committed bench row).
+    """Queryable-state serving latency (round-13 verdict #6, a
+    committed bench row; perfbench ``serve_durable`` is the compared
+    serve benchmark).
     Reference parity metric: its evaluation issues 1-10-key queries
     against live state and reports per-query latency
     (evaluation/EvalConfig.java:60-97, launch_scripts/

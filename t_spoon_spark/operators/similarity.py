@@ -37,9 +37,21 @@ def _plane(j: int) -> list[int]:
 PLANES = [_plane(j) for j in range(N_PLANES)]
 
 
-def int_embedding(col: Column | str, scale: int = 1000) -> Column:
+def _f32(v) -> Column:
+    return F.lit(v).cast("float")
+
+
+def int_embedding(col: Column | str, scale: int = 1000, in_double: bool = False) -> Column:
+    """Fixed-point embedding, ``floor(x * scale + 0.5)`` per component.
+    The oracles' ``x * 1000 + 0.5`` over DuckDB's FLOAT column stays in
+    float32, so this scales in float32 too: in double, a component
+    within float32 error of a tie (``-0.0135f * 1000``) floors one lower.
+    ``in_double=True`` matches the oracles that ``CAST(x AS DOUBLE)``
+    first (queries/clustering._DD_EI)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
+    if in_double:
+        return F.transform(c, lambda x: F.floor(x * scale + F.lit(0.5)).cast("long"))
+    return F.transform(c, lambda x: F.floor(x.cast("float") * _f32(scale) + _f32(0.5)).cast("long"))
 
 
 def dot_int(a: Column, b: Column) -> Column:
@@ -352,12 +364,15 @@ def sq8_encode(col: Column | str, scale: int = 254) -> Column:
     idea): round(x*scale) clamped to [-127, 127]. 64-dim float32
     vectors compress 4x to 64 bytes; at 100 TB the code column replaces
     the float column for the scan side of ANN, and distance arithmetic
-    becomes exact integer math (no cross-engine float divergence)."""
+    becomes exact integer math (no cross-engine float divergence).  The
+    product stays in float32, as in the oracle's ``ROUND(x * 254)``
+    over a FLOAT column (see int_embedding)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(
         c,
         lambda x: F.greatest(
-            F.lit(-127), F.least(F.lit(127), F.round(x * scale).cast("long"))
+            F.lit(-127),
+            F.least(F.lit(127), F.round(x.cast("float") * _f32(scale)).cast("long")),
         ),
     )
 

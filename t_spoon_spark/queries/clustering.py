@@ -25,9 +25,9 @@ KM_DIM = 64
 
 # CAST(x AS DOUBLE) before scaling: the parquet column is float32 and
 # DuckDB otherwise multiplies IN float32, where e.g. -0.2345f * 1000
-# rounds to exactly -234.5 and floors to -234 — while Spark (and the
-# operators' int_embedding) compute the product in double, where it is
-# -234.0000006 and floors to -235.  Boundary components exist at sf0.1
+# rounds to exactly -234.5 and floors to -234 — while Spark's
+# int_embedding(in_double=True) computes the product in double, where it
+# is -234.0000006 and floors to -235.  Boundary components exist at sf0.1
 # (vec 1687 dim 39, vec 1879 dim 17) and diverged the kmeans inertia
 # until round 10; tests/test_fixed_point_boundaries.py keeps the other
 # embedding-oracle strings honest at the gate SFs.
@@ -158,7 +158,7 @@ def clustering_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     from t_spoon_spark.operators.similarity import int_embedding
 
-    base = emb.select("vec_id", int_embedding("embedding").alias("ei"))
+    base = emb.select("vec_id", int_embedding("embedding", in_double=True).alias("ei"))
     cents = base.filter(F.col("vec_id") < KM_K).select(
         F.col("vec_id").alias("cid"), F.col("ei").alias("ce")
     )

@@ -137,7 +137,7 @@ def semdedup_members_and_dups(spark: SparkSession, sf_dir: str) -> tuple[DataFra
     from t_spoon_spark.queries.clustering import _assign
 
     emb = t(spark, sf_dir, "embeddings")
-    base = emb.select("vec_id", int_embedding("embedding").alias("ei"))
+    base = emb.select("vec_id", int_embedding("embedding", in_double=True).alias("ei"))
     cents = base.filter(F.col("vec_id") < SD_K).select(
         F.col("vec_id").alias("cid"), F.col("ei").alias("ce")
     )

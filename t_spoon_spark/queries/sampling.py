@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from t_spoon_spark.operators.similarity import int_embedding
 from t_spoon_spark.operators.text import dd_md5_long, md5_long, tokens
 from t_spoon_spark.queries.relational import t
 from t_spoon_spark.registry import register
@@ -374,12 +375,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo's operators avoid (CC uses pointer-jumping rounds, k-means a
     fixed iteration budget, BFS a frontier)."""
     emb = t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.floor(x * 1000 + F.lit(0.5)).cast("long")
-        ).alias("ei"),
-    ).localCheckpoint(eager=True)
+    base = emb.select("vec_id", int_embedding("embedding").alias("ei")).localCheckpoint(eager=True)
 
     def dist2_to(center_ei: list[int]):
         lit = F.array(*[F.lit(int(v)).cast("long") for v in center_ei])

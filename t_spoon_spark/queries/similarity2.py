@@ -46,7 +46,7 @@ def _subs(emb_df, m_parts: int = TOK_M, dims: int = TOK_D):
     frame — shared by the PQ encoder/probe (16 x 4) and the MaxSim
     token view (8 x 8); one definition, so the fixed-point slicing
     cannot drift between the entries or their oracles."""
-    base = emb_df.select("vec_id", int_embedding("embedding").alias("ei"))
+    base = emb_df.select("vec_id", int_embedding("embedding", in_double=True).alias("ei"))
     return base.select(
         "vec_id",
         F.explode(
@@ -191,7 +191,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "c_id")
     )
     normed = with_norm(
-        emb.select("vec_id", int_embedding("embedding").alias("ei"))
+        emb.select("vec_id", int_embedding("embedding", in_double=True).alias("ei"))
     )
     qn = normed.select(
         F.col("vec_id").alias("q_id"),

@@ -12,13 +12,20 @@ at that pin, and returns control-plane-sized JSON rows.  Concurrent
 epochs keep committing underneath; the pin guarantees each response is
 one consistent snapshot (SURVEY.md §2.4 Q1/Q2/Q4).
 
-A committed ``keys`` lookup on a small snapshot answers from the
-store's driver-side pandas twin of the pinned epoch
+A committed ``keys`` lookup or ``predicate`` on a small snapshot
+answers from the store's driver-side pandas twin of the pinned epoch
 (``StateStore.read_twin``) and runs no Spark job — as the reference
 reads a shard's in-memory versions at the watermark
-(tgraph/db/Shard.java:186-217).  Large state, ``uncommitted`` reads,
-predicates and SQL run on Spark; for small state their frame is the
-twin's LocalRelation.
+(tgraph/db/Shard.java:186-217, tgraph/query/PredicateQuery.java).  A
+predicate is filtered in numpy by the driver cascade's vec compiler in
+predicate mode, which accepts only what it evaluates exactly as Spark
+does.  Spark answers the rest: large state, ``uncommitted`` reads, SQL,
+a non-numeric value type, a snapshot holding a NULL key or a NULL or
+NaN value, and a predicate outside that whitelist (``key`` references,
+string/NULL/boolean literals, division, arithmetic on a float or
+integer value, ...); for small state its frame is the twin's
+LocalRelation.  ``{"op": "stats"}`` counts which path answered each
+request and why a request fell back.
 
 In-process use (no socket)::
 
@@ -51,11 +58,14 @@ session object there.
 
 from __future__ import annotations
 
+import bisect
+import functools
 import json
 import re
 import socket
 import socketserver
 import threading
+from collections import Counter
 from typing import Any
 
 # value types whose twin values convert to the same JSON as a Spark Row's
@@ -64,6 +74,10 @@ _TWIN_VALUE_TYPES = frozenset(
     ("double", "float", "bigint", "long", "int", "integer", "smallint", "tinyint",
      "string", "boolean")
 )
+
+# pinned (ns, epoch) twins whose predicate index a service keeps: the
+# watermark and a few pins paging behind it
+_PREDICATE_INDEXES = 8
 
 # leading statement keywords accepted on the NETWORK sql op — queries
 # only, nothing that mutates session state or catalog
@@ -123,17 +137,65 @@ def _is_read_only_sql(query: str, spark=None) -> bool:
     return not any(node in tree for node in _MUTATING_NODES)
 
 
-def _twin_rows(twin, keys: list) -> list:
+def _twin_rows(twin, keys: list, value_type: str) -> list:
     """``[[key, value]]`` of the twin rows for ``keys``, ordered by key
     (Python ``str`` order is code-point order, the order of Spark's
-    UTF-8 byte comparison), values as plain Python objects."""
+    UTF-8 byte comparison), values as plain Python objects.  A float
+    value reads as Spark's float: a commit_pandas twin may hold it
+    unrounded as a double."""
     import numpy as np
 
     sub = twin[twin["key"].isin(keys)].sort_values("key")
-    return [
-        [k, v.item() if isinstance(v, np.generic) else v]
-        for k, v in zip(sub["key"].tolist(), sub["value"].tolist())
-    ]
+    f32 = value_type in ("float", "real")
+    rows = []
+    for k, v in zip(sub["key"].tolist(), sub["value"].tolist()):
+        v = v.item() if isinstance(v, np.generic) else v
+        rows.append([k, float(np.float32(v)) if f32 and v is not None else v])
+    return rows
+
+
+@functools.lru_cache(maxsize=256)
+def _compile_predicate(predicate_sql: str, value_type: str):
+    """``fn(values) -> mask`` equal to Spark's filter, or None when the
+    predicate stays on Spark (tx/driver_cascade.py predicate mode)."""
+    from t_spoon_spark.tx.driver_cascade import Ineligible, compile_fragment
+
+    try:
+        run = compile_fragment(predicate_sql, [], vec=True, forbid_acc=True, predicate=value_type)
+    except Ineligible:
+        return None
+    return lambda values: run(None, None, values)
+
+
+def _predicate_index(twin, kind: str):
+    """``(keys, values)`` of a twin sorted by key, values as a predicate
+    of ``kind`` (driver_cascade.PREDICATE_KINDS) evaluates them: int64,
+    or float64 with a float value rounded to float32 first, as Spark
+    stores it.  Or the reason Spark must answer: a NULL key or value
+    (``None``), a NaN value (Spark's NaN sorts above every number and
+    equals itself), or values of another type."""
+    import numpy as np
+
+    keys, vals = twin["key"], twin["value"]
+    if keys.isna().any():
+        return "null"
+    vals = vals.to_numpy()
+    if vals.dtype == object:
+        if any(v is None for v in vals):
+            return "null"
+        vals = np.asarray(vals.tolist())
+    if vals.dtype.kind not in ("i" if kind == "int" else "fi"):
+        return "type"
+    if kind == "int":
+        vals = vals.astype(np.int64)
+    else:
+        vals = vals.astype(np.float32 if kind == "float" else np.float64).astype(np.float64)
+        if np.isnan(vals).any():
+            return "nan"
+    # Python str order is Spark's UTF-8 byte order (code points)
+    keys = keys.to_numpy()
+    order = np.argsort(keys, kind="stable")
+    return keys[order].tolist(), vals[order]
 
 
 def _keyset_predicate(keyset: dict):
@@ -188,6 +250,12 @@ class StateService:
         # concurrent sql requests would race the view rebind, so the
         # sql path is serialized (control-plane rate, not a bottleneck)
         self._sql_lock = threading.Lock()
+        # the stats op's counters and the predicate index cache; no
+        # commit ever takes this lock
+        self._lock = threading.Lock()
+        self._answers: Counter = Counter()  # (op, "twin" | "spark")
+        self._fallbacks: Counter = Counter()  # (op, reason)
+        self._indexes: dict[tuple[str, int], tuple[Any, Any]] = {}
 
     # -- in-process API (each call = one pinned consistent snapshot) ----
 
@@ -205,9 +273,30 @@ class StateService:
             return self.max_rows
         return max(0, min(int(limit), self.max_rows))
 
-    def _twin_readable(self, ns: str) -> bool:
+    def _value_type(self, ns: str) -> str | None:
         nso = self.env.namespaces.get(ns)
-        return nso is not None and nso.value_type.strip().lower() in _TWIN_VALUE_TYPES
+        return None if nso is None else nso.value_type.strip().lower()
+
+    def _twin_readable(self, ns: str) -> bool:
+        return self._value_type(ns) in _TWIN_VALUE_TYPES
+
+    def _count(self, op: str, fallback: str | None) -> None:
+        with self._lock:
+            self._answers[op, "spark" if fallback else "twin"] += 1
+            if fallback:
+                self._fallbacks[op, fallback] += 1
+
+    def stats(self) -> dict[str, Any]:
+        """Answers per op and path (``twin`` ran no Spark job) and the
+        reasons requests fell back to Spark, since the service started."""
+        with self._lock:
+            answers, fallbacks = dict(self._answers), dict(self._fallbacks)
+        out: dict[str, Any] = {"answers": {}, "fallbacks": {}}
+        for (op, path), n in sorted(answers.items()):
+            out["answers"].setdefault(op, {})[path] = n
+        for (op, reason), n in sorted(fallbacks.items()):
+            out["fallbacks"].setdefault(op, {})[reason] = n
+        return out
 
     def _snapshot(self, ns: str, epoch: int | None, freshness: str):
         """(frame, effective_epoch, uncommitted?) for one request.
@@ -249,17 +338,21 @@ class StateService:
         twin = None
         # a non-string key (JSON null, a number) takes Spark's IN
         # semantics: NULL never matches, numbers compare after a cast
-        if (
-            not check_freshness(freshness, epoch)
-            and self._twin_readable(ns)
-            and all(isinstance(k, str) for k in keys)
-        ):
+        if check_freshness(freshness, epoch):
+            fallback = "uncommitted"
+        elif not self._twin_readable(ns):
+            fallback = "no_twin"
+        elif not all(isinstance(k, str) for k in keys):
+            fallback = "type"
+        else:
             # one pin for both paths: the Spark fallback reads the same
             # epoch the twin lookup resolved
             epoch = self.pin(epoch)
             twin = self.env.store.read_twin(ns, epoch)
+            fallback = None if twin is not None else "no_twin"
+        self._count("keys", fallback)
         if twin is not None:
-            pin, uncommitted, rows = epoch, False, _twin_rows(twin, keys)
+            pin, uncommitted, rows = epoch, False, _twin_rows(twin, keys, self._value_type(ns))
         else:
             frame, pin, uncommitted = self._snapshot(ns, epoch, freshness)
             rows = [
@@ -294,30 +387,83 @@ class StateService:
         deep paging costs O(pages), not the O(pages^2) an offset rescan
         would.  Uncommitted reads never emit cursors: the overlay has no
         stable pin to page against (freshness is a hot-read mode, not a
-        paging mode)."""
+        paging mode).
+
+        A committed read of a small numeric snapshot filters the pinned
+        twin in numpy (:meth:`_twin_predicate`) and runs no Spark job;
+        its rows, truncation and cursor are the Spark path's."""
         from pyspark.sql import functions as F
 
-        frame, pin, uncommitted = self._snapshot(ns, epoch, freshness)
+        from t_spoon_spark.tx.env import check_freshness
+
         cap = self._cap(limit)
-        df = frame.filter(F.expr(predicate_sql))
-        if after_key is not None:
-            df = df.filter(F.col("key") > F.lit(after_key))
-        # orderBy + limit compiles to TakeOrderedAndProject: the top-k
-        # runs executor-side and at most cap+1 rows reach the driver
-        rows = df.orderBy("key").limit(cap + 1).collect()
-        out = {"epoch": pin, "rows": [[r["key"], r["value"]] for r in rows[:cap]]}
+        if check_freshness(freshness, epoch):
+            rows, fallback = None, "uncommitted"
+        else:
+            # one pin for both paths, as in query_keys
+            epoch = self.pin(epoch)
+            rows, fallback = self._twin_predicate(ns, predicate_sql, epoch, cap, after_key)
+        self._count("predicate", fallback)
+        if rows is not None:
+            pin, uncommitted = epoch, False
+        else:
+            frame, pin, uncommitted = self._snapshot(ns, epoch, freshness)
+            df = frame.filter(F.expr(predicate_sql))
+            if after_key is not None:
+                df = df.filter(F.col("key") > F.lit(after_key))
+            # orderBy + limit compiles to TakeOrderedAndProject: the
+            # top-k runs executor-side and at most cap+1 rows reach the
+            # driver
+            rows = [[r["key"], r["value"]] for r in df.orderBy("key").limit(cap + 1).collect()]
+        out = {"epoch": pin, "rows": rows[:cap]}
         if uncommitted:
             out["uncommitted"] = True
         if len(rows) > cap:
             out["truncated"] = True
             if cap > 0 and not uncommitted:
-                out["cursor"] = {"epoch": pin, "after_key": rows[cap - 1]["key"]}
+                out["cursor"] = {"epoch": pin, "after_key": rows[cap - 1][0]}
             if uncommitted:
                 # machine-readable "no cursor is coming": the overlay has
                 # no stable pin, so a paging loop must fall back to a
                 # committed read instead of KeyError-ing on the cursor
                 out["paging_unavailable"] = True
         return out
+
+    def _twin_predicate(self, ns, predicate_sql, pin, cap, after_key):
+        """``(rows, None)``: the first ``cap + 1`` ``[key, value]`` hits
+        after ``after_key`` at ``pin``, ordered by key, from the pinned
+        twin; or ``(None, reason)`` when Spark must answer.  Raises the
+        Spark path's KeyError for a pin outside the retained window."""
+        import numpy as np
+
+        from t_spoon_spark.tx.driver_cascade import PREDICATE_KINDS
+
+        vt = self._value_type(ns)
+        twin = self.env.store.read_twin(ns, pin) if self._twin_readable(ns) else None
+        if twin is None:
+            return None, "no_twin"
+        kind = PREDICATE_KINDS.get(vt)
+        if kind is None or not isinstance(after_key, (str, type(None))):
+            return None, "type"
+        match = _compile_predicate(predicate_sql, vt)
+        if match is None:
+            return None, "ineligible_expr"
+        cached = self._indexes.get((ns, pin))
+        if cached is None or cached[0] is not twin:
+            cached = (twin, _predicate_index(twin, kind))
+            with self._lock:
+                self._indexes[ns, pin] = cached
+                while len(self._indexes) > _PREDICATE_INDEXES:
+                    del self._indexes[next(iter(self._indexes))]
+        index = cached[1]
+        if isinstance(index, str):
+            return None, index
+        keys, vals = index
+        start = 0 if after_key is None else bisect.bisect_right(keys, after_key)
+        with np.errstate(all="ignore"):  # inf - inf is NaN here as in Spark
+            mask = match(vals[start:])
+        hits = np.flatnonzero(mask)[: cap + 1] + start
+        return [[keys[i], vals[i].item()] for i in hits], None
 
     def sql(
         self,
@@ -446,6 +592,8 @@ class StateService:
             freshness = request.get("freshness", "committed")
             if op == "watermark":
                 out: dict[str, Any] = {"epoch": self.env.watermark()}
+            elif op == "stats":
+                out = self.stats()
             elif op == "keys":
                 out = self.query_keys(
                     request["ns"], request["keys"], epoch, limit, freshness=freshness

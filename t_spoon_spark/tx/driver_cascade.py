@@ -222,6 +222,24 @@ def _vcompare(op: str, a, b):
     return a <= b
 
 
+def _vcompare_nan(op: str, a, b):
+    """_vcompare under Spark's NaN semantics: NaN equals NaN and sorts
+    above every number (numpy says False to both).  A double predicate
+    needs it even over NaN-free values: ``inf - inf`` is NaN."""
+    an, bn = _np.isnan(a), _np.isnan(b)
+    if op in ("=", "=="):
+        return (a == b) | (an & bn)
+    if op in ("!=", "<>"):
+        return (a != b) & ~(an & bn)
+    if op == ">":
+        return (a > b) | (an & ~bn)
+    if op == ">=":
+        return (a >= b) | an
+    if op == "<":
+        return (a < b) | (~an & bn)
+    return (a <= b) | bn
+
+
 def _to_int(v):
     return None if v is None else int(v)  # Spark CAST truncates toward zero
 
@@ -250,6 +268,37 @@ CASTS: dict[str, Callable[[Any], Any]] = {
     "boolean": _to_bool,
 }
 
+# predicate mode: value type -> how numpy evaluates it exactly as Spark
+# does ('double' with arithmetic; 'float' upcast to double and 'int'
+# widened to int64, both without arithmetic)
+PREDICATE_KINDS = {
+    "double": "double",
+    "float": "float",
+    "real": "float",
+    **{t: "int" for t in ("bigint", "long", "int", "integer", "smallint", "tinyint")},
+}
+
+
+def _decimal_to_double(text: str) -> float:
+    """A decimal literal as Spark's cast to double reads it, or
+    Ineligible where that cast could round differently from Python's
+    ``float``: Spark either divides the unscaled long by 10^scale or
+    asks BigDecimal, and both are exact only for small operands.  An
+    exactly representable value reads the same either way.  Precision
+    past 38 is a Spark parse error."""
+    from decimal import Decimal
+    from fractions import Fraction
+
+    d = Decimal(text)
+    _sign, digits, exp = d.as_tuple()
+    if len(digits) > 38:
+        raise Ineligible(f"decimal literal {text!r} past precision 38")
+    val = float(d)
+    unscaled = int("".join(map(str, digits)))
+    if (unscaled < 2**53 and -exp <= 22) or Fraction(d) == Fraction(val):
+        return val
+    raise Ineligible(f"decimal literal {text!r} may round apart from Spark's")
+
 
 class _Parser:
     """Pratt parser over the token stream; builds closures fn(scope)
@@ -261,7 +310,17 @@ class _Parser:
     semantics need NULLs or error channels raise Ineligible at compile
     so the caller falls back to the scalar fold.  ``forbid_acc`` rejects
     ``acc.value`` references — the invariant scope has no accumulator
-    (the scalar twin passes None there, which vec arrays cannot)."""
+    (the scalar twin passes None there, which vec arrays cannot).
+
+    ``predicate`` (a value type, with ``vec=True``) compiles a row filter
+    over ``value`` arrays that must keep Spark's answer exactly.  Every
+    node then carries a kind: 'bool'; 'val', a number typed by the value
+    column; or 'const', a number typed by its literals alone.  What
+    Spark would type by its literals (a comparison or arithmetic with no
+    'val' side: int or decimal math), what it rejects at analysis
+    (``value > true``, ``NOT value``) and what numpy cannot follow
+    (arithmetic outside a double value, a literal that converts apart)
+    is Ineligible, so Spark answers it, or raises."""
 
     def __init__(
         self,
@@ -270,6 +329,7 @@ class _Parser:
         ansi: bool = True,
         vec: bool = False,
         forbid_acc: bool = False,
+        predicate: str | None = None,
     ):
         self.toks = tokens
         self.i = 0
@@ -277,6 +337,66 @@ class _Parser:
         self.ansi = ansi
         self.vec = vec
         self.forbid_acc = forbid_acc
+        self.pred = None
+        if predicate is not None:
+            if not vec:
+                raise ValueError("predicate mode compiles numpy closures: pass vec=True")
+            self.pred = PREDICATE_KINDS.get(re.sub(r"\s", "", predicate.lower()))
+            if self.pred is None:
+                raise Ineligible(f"predicate over a {predicate!r} value")
+
+    # -- predicate-mode kinds (no-ops otherwise) --------------------------
+
+    def _kind(self, fn, kind: str):
+        if self.pred is not None:
+            fn.kind = kind
+        return fn
+
+    def _want(self, what: str, args, kinds, need_val: bool = False) -> None:
+        if self.pred is None:
+            return
+        got = [getattr(a, "kind", None) for a in args]
+        if any(g not in kinds for g in got) or (need_val and "val" not in got):
+            raise Ineligible(f"{what} over {got} in a predicate")
+
+    def _want_arith(self, what: str, args) -> None:
+        if self.pred is not None and self.pred != "double":
+            raise Ineligible(f"arithmetic on a {self.pred} value")
+        self._want(what, args, _NUM, need_val=True)
+
+    def _negate(self, what: str, inner, fn):
+        """Negation keeps a literal a literal; of a value it is exact
+        except on integers (Spark raises on -Long.MinValue)."""
+        self._want(what, (inner,), _NUM)
+        kind = getattr(inner, "kind", None)
+        if kind == "val" and self.pred == "int":
+            raise Ineligible(f"{what} of an int value")
+        return self._kind(fn, kind)
+
+    def _literal(self, text: str, suffix: str):
+        """A numeric literal converted the way Spark coerces it against
+        the value column's type."""
+        suffix = suffix.lower()
+        double = suffix == "d" or "e" in text.lower()
+        if suffix == "f" or (suffix == "l" and ("." in text or double)):
+            raise Ineligible(f"literal {text}{suffix} in a predicate")
+        if (double or "." in text) and self.pred == "int":
+            raise Ineligible(f"fractional literal {text} against an int value")
+        if double:
+            val = float(text)
+            if not math.isfinite(val):  # Spark: out of double range
+                raise Ineligible(f"literal {text} out of range")
+            return val
+        if "." in text:
+            return _decimal_to_double(text)
+        n = int(text)
+        if self.pred == "int":
+            if n >= 2**63:  # decimal in Spark
+                raise Ineligible(f"literal {n} past bigint")
+            return n
+        if self.pred == "float" and n > 2**24:  # cast to float in Spark
+            raise Ineligible(f"literal {n} inexact as float")
+        return float(n) if n < 2**63 else _decimal_to_double(text)
 
     def _peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else (None, None)
@@ -297,6 +417,7 @@ class _Parser:
         e = self._or()
         if self.i != len(self.toks):
             raise Ineligible(f"trailing tokens: {self.toks[self.i:]}")
+        self._want("predicate", (e,), ("bool",))
         return e
 
     def _or(self):
@@ -304,10 +425,12 @@ class _Parser:
         while self._peek() == ("kw", "or"):
             self._next()
             right = self._and()
+            self._want("OR", (left, right), ("bool",))
             if self.vec:
                 left = (lambda l, r: lambda s: _np.logical_or(l(s), r(s)))(left, right)
             else:
                 left = (lambda l, r: lambda s: _or(l(s), r(s)))(left, right)
+            left = self._kind(left, "bool")
         return left
 
     def _and(self):
@@ -315,18 +438,21 @@ class _Parser:
         while self._peek() == ("kw", "and"):
             self._next()
             right = self._not()
+            self._want("AND", (left, right), ("bool",))
             if self.vec:
                 left = (lambda l, r: lambda s: _np.logical_and(l(s), r(s)))(left, right)
             else:
                 left = (lambda l, r: lambda s: _and(l(s), r(s)))(left, right)
+            left = self._kind(left, "bool")
         return left
 
     def _not(self):
         if self._peek() == ("kw", "not"):
             self._next()
             inner = self._not()
+            self._want("NOT", (inner,), ("bool",))
             if self.vec:
-                return (lambda _i: lambda s: _np.logical_not(_i(s)))(inner)
+                return self._kind((lambda _i: lambda s: _np.logical_not(_i(s)))(inner), "bool")
 
             def neg(s, _i=inner):
                 v = _i(s)
@@ -342,7 +468,7 @@ class _Parser:
             self._next()
             right = self._add()
             if self.vec:
-                return (lambda l, r, o: lambda s: _vcompare(o, l(s), r(s)))(left, right, v)
+                return self._vcmp(v, left, right)
             return (lambda l, r, o: lambda s: _compare(o, l(s), r(s)))(left, right, v)
         if self._peek() == ("kw", "is"):  # IS [NOT] NULL
             if self.vec:
@@ -363,7 +489,9 @@ class _Parser:
             if k == "op" and v in ("+", "-"):
                 self._next()
                 right = self._mul()
+                self._want_arith(v, (left, right))
                 left = (lambda l, r, o: lambda s: _arith(o, l(s), r(s)))(left, right, v)
+                left = self._kind(left, "val")
             else:
                 return left
 
@@ -374,7 +502,9 @@ class _Parser:
             if k == "op" and v == "*":
                 self._next()
                 right = self._unary()
+                self._want_arith("*", (left, right))
                 left = (lambda l, r: lambda s: _arith("*", l(s), r(s)))(left, right)
+                left = self._kind(left, "val")
             elif k == "op" and v == "/":
                 if self.vec:
                     raise Ineligible("division in vec mode")
@@ -404,11 +534,18 @@ class _Parser:
                 val = _i(s)
                 return None if val is None else -val
 
-            return neg
+            return self._negate("unary minus", inner, neg)
         if k == "op" and v == "+":
             self._next()
-            return self._unary()
+            inner = self._unary()
+            self._want("unary plus", (inner,), _NUM)
+            return inner
         return self._primary()
+
+    def _vcmp(self, op: str, a, b):
+        self._want(op, (a, b), _NUM, need_val=True)
+        cmp = _vcompare_nan if self.pred == "double" else _vcompare
+        return self._kind((lambda a, b, o, c: lambda s: c(o, a(s), b(s)))(a, b, op, cmp), "bool")
 
     def _fn_call(self, name: str):
         self._expect("op", "(")
@@ -421,7 +558,8 @@ class _Parser:
         self._expect("op", ")")
         if name in ("+", "-", "*") and len(args) == 2:
             a, b = args
-            return (lambda a, b, o: lambda s: _arith(o, a(s), b(s)))(a, b, name)
+            self._want_arith(name, args)
+            return self._kind((lambda a, b, o: lambda s: _arith(o, a(s), b(s)))(a, b, name), "val")
         if name == "/" and len(args) == 2:
             if self.vec:
                 raise Ineligible("division in vec mode")
@@ -437,7 +575,7 @@ class _Parser:
         if name in (">", ">=", "<", "<=", "=", "==", "!=", "<>") and len(args) == 2:
             a, b = args
             if self.vec:
-                return (lambda a, b, o: lambda s: _vcompare(o, a(s), b(s)))(a, b, name)
+                return self._vcmp(name, a, b)
             return (lambda a, b, o: lambda s: _compare(o, a(s), b(s)))(a, b, name)
         if name == "negative" and len(args) == 1:
             a = args[0]
@@ -446,39 +584,46 @@ class _Parser:
                 v = _a(s)
                 return None if v is None else -v
 
-            return negf
+            return self._negate("negative", a, negf)
         if name == "abs" and len(args) == 1:
             a = args[0]
+            self._want("abs", args, ("val",))
+            if self.pred == "int":
+                raise Ineligible("abs of an int value")  # Spark raises on Long.MinValue
 
             def absf(s, _a=a):
                 v = _a(s)
                 return None if v is None else abs(v)
 
-            return absf
-        if name == "greatest":
-            if self.vec:
-                # pairwise (not .reduce over a list): the args mix
-                # arrays and scalar literals, which numpy cannot stack
-                def vgreatest(s, _args=args):
-                    out = _args[0](s)
-                    for a in _args[1:]:
-                        out = _np.maximum(out, a(s))
-                    return out
+            return self._kind(absf, "val")
+        if name in ("greatest", "least") and self.vec:
+            self._want(name, args, _NUM, need_val=True)
+            if len(args) < 2:
+                raise Ineligible(f"{name} needs two arguments")
+            step = _np.maximum if name == "greatest" else _np.minimum
+            if self.pred is not None and name == "least":
+                step = _np.fmin  # Spark's least skips NaN (it sorts above every number)
 
-                return vgreatest
+            # pairwise (not .reduce over a list): the args mix arrays
+            # and scalar literals, which numpy cannot stack
+            def pick(s, _args=args, _step=step):
+                out = _args[0](s)
+                for a in _args[1:]:
+                    out = _step(out, a(s))
+                return out
+
+            return self._kind(pick, "val")
+        if name == "greatest":
             return lambda s: _greatest(*[a(s) for a in args])
         if name == "least":
-            if self.vec:
-                def vleast(s, _args=args):
-                    out = _args[0](s)
-                    for a in _args[1:]:
-                        out = _np.minimum(out, a(s))
-                    return out
-
-                return vleast
             return lambda s: _least(*[a(s) for a in args])
         if name == "coalesce":
             if self.vec:
+                if not args:
+                    raise Ineligible("coalesce without arguments")
+                kinds = {getattr(a, "kind", None) for a in args}
+                if self.pred is not None and kinds != {"bool"} and not kinds <= set(_NUM):
+                    raise Ineligible(f"coalesce over {kinds} in a predicate")
                 # vec inputs are provably non-null, so coalesce IS its
                 # first argument (nothing upstream can produce a null)
                 return args[0]
@@ -491,13 +636,15 @@ class _Parser:
             return co
         if name == "and" and len(args) == 2:
             a, b = args
+            self._want("and", args, ("bool",))
             if self.vec:
-                return lambda s: _np.logical_and(a(s), b(s))
+                return self._kind(lambda s: _np.logical_and(a(s), b(s)), "bool")
             return lambda s: _and(a(s), b(s))
         if name == "or" and len(args) == 2:
             a, b = args
+            self._want("or", args, ("bool",))
             if self.vec:
-                return lambda s: _np.logical_or(a(s), b(s))
+                return self._kind(lambda s: _np.logical_or(a(s), b(s)), "bool")
             return lambda s: _or(a(s), b(s))
         raise Ineligible(f"function {name!r} not whitelisted")
 
@@ -508,6 +655,8 @@ class _Parser:
             suffix = text[-1] if text[-1] in "DdLlFf" else ""
             if suffix:
                 text = text[:-1]
+            if self.pred is not None:
+                return self._kind((lambda _v: lambda s: _v)(self._literal(text, suffix)), "const")
             if suffix in "DdFf" or "." in text or "e" in text or "E" in text:
                 val = float(text)
             else:
@@ -520,6 +669,8 @@ class _Parser:
         if k == "fn":  # backquoted operator-named function
             return self._fn_call(v)
         if k == "kw":
+            if v in ("true", "false") and self.pred is not None:
+                raise Ineligible("boolean literal in a predicate")  # Spark: value > true fails
             if v == "true":
                 return lambda s: True
             if v == "false":
@@ -543,7 +694,13 @@ class _Parser:
                     # value position) — others keep the scalar fold
                     if cast is not _to_float:
                         raise Ineligible(f"cast to {tv!r} in vec mode")
-                    return (lambda i: lambda s: _np.asarray(i(s), dtype=_np.float64))(inner)
+                    if self.pred is not None:
+                        # float32 rounding and int widening stay on Spark
+                        self._want("cast", (inner,), ("val",))
+                        if tv.lower() != "double" or self.pred == "int":
+                            raise Ineligible(f"cast to {tv!r} in a predicate")
+                    cast_fn = (lambda i: lambda s: _np.asarray(i(s), dtype=_np.float64))(inner)
+                    return self._kind(cast_fn, "val")
                 return (lambda i, c: lambda s: c(i(s)))(inner, cast)
             if v == "case":
                 whens = []
@@ -560,9 +717,15 @@ class _Parser:
                 self._expect("kw", "end")
 
                 if self.vec:
-                    if default is None:
+                    if default is None or not whens:
                         # no ELSE -> a non-matching row is NULL
-                        raise Ineligible("CASE without ELSE in vec mode")
+                        raise Ineligible("CASE without WHEN or ELSE in vec mode")
+                    self._want("CASE WHEN", [c for c, _ in whens], ("bool",))
+                    branches = [val for _, val in whens] + [default]
+                    kinds = {getattr(b, "kind", None) for b in branches}
+                    if self.pred is not None and kinds != {"bool"}:
+                        self._want("CASE branches", branches, _NUM)
+                        kinds = {"val"} if "val" in kinds else {"const"}
 
                     def vcase(s, _whens=whens, _default=default):
                         out = _default(s)
@@ -570,7 +733,7 @@ class _Parser:
                             out = _np.where(c(s), val(s), out)
                         return out
 
-                    return vcase
+                    return self._kind(vcase, kinds.pop())
 
                 def case(s, _whens=whens, _default=default):
                     for c, val in _whens:
@@ -593,7 +756,7 @@ class _Parser:
                     raise Ineligible("acc reference in invariant scope")
                 return lambda s: s[0]
             if low == "value":
-                return lambda s: s[2]
+                return self._kind(lambda s: s[2], "val")
             if low.startswith("x."):
                 col = v[2:]
                 if col not in self.cols:
@@ -607,6 +770,9 @@ class _Parser:
                 return lambda s, _c=v: _nan_none(s[1].get(_c))
             raise Ineligible(f"unknown reference {v!r}")
         raise Ineligible(f"unexpected token {k} {v}")
+
+
+_NUM = ("val", "const")
 
 
 def _nan_none(v):
@@ -626,6 +792,7 @@ def compile_fragment(
     ansi: bool = True,
     vec: bool = False,
     forbid_acc: bool = False,
+    predicate: str | None = None,
 ) -> Callable:
     """Compile a rendered Spark SQL fragment to fn(acc, rec, value).
 
@@ -635,8 +802,12 @@ def compile_fragment(
     ``ansi`` binds the divide-by-zero behavior (raise vs NULL) to the
     session's `spark.sql.ansi.enabled` at compile time.  ``vec=True``
     compiles to numpy-array closures for the position-wise refold (a
-    stricter whitelist — see _Parser)."""
-    fn = _Parser(_tokenize(sql), set(cols), ansi, vec=vec, forbid_acc=forbid_acc).parse()
+    stricter whitelist — see _Parser).  ``predicate`` names the value
+    type of a row filter over ``value`` (serve.py's twin predicates): the
+    closure returns a boolean mask equal to Spark's filter."""
+    fn = _Parser(
+        _tokenize(sql), set(cols), ansi, vec=vec, forbid_acc=forbid_acc, predicate=predicate
+    ).parse()
 
     def run(acc, rec, value=None):
         return fn((acc, rec, value))

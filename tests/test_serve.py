@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import math
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 import pytest
@@ -727,3 +728,280 @@ def test_twin_key_lookups_under_durable_commit_load(spark, tmp_path):
     assert not any(r.is_alive() for r in readers)
     assert not errors, errors[:3]
     assert len(seen) > 1
+
+
+# twin predicate parity: ±inf, a float32-rounded 110.1, int64-only
+# values past 2^53, and keys whose code-point order differs from a
+# locale's ("Z" < "a" < "k0" < "é" < "日本")
+_PRED_ROWS = {
+    "double": lambda e: [
+        ("a", 110.5 + e), ("b", 5.0), ("Z", float("inf")), ("é", float("-inf")),
+        ("日本", 100.0), ("k0", 0.0), ("k1", 3.5), ("k2", 111.0 + e), ("k3", 110.1),
+    ],
+    "bigint": lambda e: [
+        ("a", 2**62 + e), ("b", 5), ("Z", 110), ("é", -(2**62)),
+        ("日本", 100), ("k0", 0), ("k1", 3), ("k2", 111 + e), ("k3", 2**53 + 1),
+    ],
+}
+_PRED_ROWS["float"] = _PRED_ROWS["double"]
+_ALL = {"double", "float", "bigint"}
+# (predicate, value types the twin answers; the rest fall back to Spark)
+_PRED_CASES = [
+    ("value > 110", _ALL),
+    ("value >= 110.1", {"double", "float"}),  # float: 110.1f < 110.1
+    ("NOT (value < 5) AND value <= 100", _ALL),
+    ("abs(value - 3) < 2", {"double"}),
+    ("greatest(value, 0) = 0", _ALL),
+    ("CASE WHEN value > 100 THEN value - 100 ELSE -value END > 0", {"double"}),
+    ("CASE WHEN value > 100 THEN value ELSE 0 END > 0", _ALL),
+    ("value - value >= 0", {"double"}),  # inf - inf is NaN, and NaN >= 0
+    (f"value >= {2**62 + 2}", {"double", "bigint"}),
+    (f"value > {2**62}.5", set()),
+    ("key = 'k0' AND value > 0", set()),
+    ("value > true", set()),  # Spark rejects it at analysis
+    ("value >", set()),
+]
+
+
+@pytest.mark.parametrize(
+    "vt, route",
+    [
+        ("double", "commit_pandas"),
+        ("double", "commit"),
+        ("bigint", "commit_pandas"),
+        ("bigint", "commit"),
+        # a commit_pandas float twin holds unrounded doubles; commit()'s
+        # Arrow cut holds float32 already
+        ("float", "commit_pandas"),
+    ],
+)
+def test_twin_predicate_matches_spark_path(spark, tmp_path, vt, route):
+    """A committed ``predicate`` response from the pinned twin equals the
+    Spark-path response at the same pin, and runs no Spark job: float
+    coercion, ±inf, int64 precision, non-ASCII key order, a zero limit,
+    keyset paging, a historical pin, and the same errors for a
+    predicate Spark rejects and for a pin below the retention horizon
+    or above the watermark.  NULL and NaN values (commit_pandas twins)
+    fall back, and the stats op says which path answered and why."""
+    env = TxEnvironment(
+        spark,
+        isolation="PL3",
+        durable=True,
+        store_dir=str(tmp_path / "store"),
+        checkpoint_every=1 if route == "commit" else 2,
+        max_epochs=2,
+    )
+    dirty = {} if route == "commit" else {"nul": None} if vt == "bigint" else {"nul": None, "nan": float("nan")}
+    for ns in ("kv", *dirty):
+        env.create_namespace(ns, vt, 0)
+    store = env.store
+    one = 1 if vt == "bigint" else 1.0
+    for e in range(3):
+        rows = {"kv": _PRED_ROWS[vt](e)}
+        if e == 2:
+            rows.update({ns: [("k0", one), ("k1", v)] for ns, v in dirty.items()})
+        if route == "commit":
+            store.commit(e, {ns: spark.createDataFrame(r, f"key string, value {vt}") for ns, r in rows.items()}, None)
+        else:
+            store.commit_pandas(e, {
+                ns: pd.DataFrame({"key": [k for k, _ in r], "value": pd.Series([v for _, v in r], dtype=object)})
+                for ns, r in rows.items()
+            })
+    assert store.read_twin("kv") is not None
+
+    svc = StateService(env, max_rows=4)
+    sc = spark.sparkContext
+    seen: list = []
+
+    def call(req, path, reason=None):
+        """The twin-enabled response, checked against the Spark path and
+        against the path the stats op reports."""
+        before = svc.stats()
+        group = f"twin-predicate-{vt}-{route}-{len(seen)}"
+        seen.append(req)
+        sc.setJobGroup(group, "twin predicate")
+        try:
+            got = svc.handle(req)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        after = svc.stats()
+        op = req["op"]
+        delta = {
+            k: n - before["answers"].get(op, {}).get(k, 0)
+            for k, n in after["answers"].get(op, {}).items()
+        }
+        svc._twin_readable = lambda ns: False
+        try:
+            want = svc.handle(req)
+        finally:
+            del svc._twin_readable
+        # json text compares NaN equal to NaN, and tells 1 from 1.0
+        assert json.dumps(got) == json.dumps(want), req
+        if path == "twin":
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], req
+        if got["ok"]:
+            assert delta.get(path) == 1, (req, delta)
+            if reason:
+                fb = after["fallbacks"]["predicate"].get(reason, 0)
+                assert fb == before["fallbacks"].get("predicate", {}).get(reason, 0) + 1, req
+        return got
+
+    for pred, twin_types in _PRED_CASES:
+        path = "twin" if vt in twin_types else "spark"
+        call({"op": "predicate", "ns": "kv", "predicate": pred}, path, None if path == "twin" else "ineligible_expr")
+
+    base = {"op": "predicate", "ns": "kv", "predicate": "value > -1"}
+    first = call({**base, "limit": 2}, "twin")
+    assert first["truncated"] and [k for k, _ in first["rows"]] == ["Z", "a"]
+    got, page = list(first["rows"]), first
+    while page.get("truncated"):
+        page = call({**base, "limit": 2, "cursor": page["cursor"]}, "twin")
+        assert page["epoch"] == first["epoch"]
+        got.extend(page["rows"])
+    assert [k for k, _ in got] == ["Z", "a", "b", "k0", "k1", "k2", "k3", "日本"]
+    zero = call({**base, "limit": 0}, "twin")
+    assert zero["rows"] == [] and zero["truncated"] and "cursor" not in zero
+    historical = call({**base, "epoch": 1}, "twin")
+    assert historical["epoch"] == 1 and ["a", _PRED_ROWS[vt](1)[0][1]] in historical["rows"]
+    below = call({**base, "epoch": 0}, "twin")
+    assert not below["ok"] and "retention horizon" in below["error"]
+    above = call({**base, "epoch": 3}, "twin")
+    assert not above["ok"] and "above the committed watermark" in above["error"]
+    if vt == "float":
+        # 110.1 reads back as the float Spark stores, from either path
+        keys = call({"op": "keys", "ns": "kv", "keys": ["k3"]}, "twin")
+        assert keys["rows"] == [["k3", float(np.float32(110.1))]]
+    for ns in dirty:
+        call({"op": "predicate", "ns": ns, "predicate": "value > 0"}, "spark", ns if ns == "nan" else "null")
+
+
+def test_stats_op_counts_answer_paths_and_fallbacks(spark):
+    """Each fallback a request can take is counted under its reason, a
+    twin answer under ``twin``, and the network stats op returns the
+    same counts."""
+    env = TxEnvironment(spark, isolation="PL3", checkpoint_every=2)
+    env.create_namespace("kv", "double", 0.0)
+    env.create_namespace("s", "string", "")
+    store = env.store
+    store.commit_pandas(0, {
+        "kv": pd.DataFrame({"key": ["a", "b"], "value": [1.0, 2.0]}),
+        "s": pd.DataFrame({"key": ["a"], "value": ["x"]}),
+    })
+    pred = {"op": "predicate", "ns": "kv", "predicate": "value > 1"}
+    svc = StateService(env)
+    assert svc.handle(pred)["rows"] == [["b", 2.0]]
+    assert svc.handle({**pred, "freshness": "uncommitted"})["rows"] == [["b", 2.0]]
+    assert svc.handle({**pred, "predicate": "key = 'b'"})["rows"] == [["b", 2.0]]
+    assert svc.handle({"op": "predicate", "ns": "s", "predicate": "value = 'x'"})["rows"] == [["a", "x"]]
+    assert svc.handle({"op": "keys", "ns": "kv", "keys": ["a"]})["rows"] == [["a", 1.0]]
+    assert svc.handle({"op": "keys", "ns": "kv", "keys": [None, "a"]})["rows"] == [["a", 1.0]]
+    # an uncut commit() epoch keeps a lazy Spark plan and no twin
+    store.commit(1, {"kv": spark.createDataFrame([("c", 3.0)], "key string, value double")}, None)
+    assert store.read_twin("kv") is None
+    assert svc.handle(pred)["rows"] == [["b", 2.0], ["c", 3.0]]
+    want = {
+        "answers": {"keys": {"spark": 1, "twin": 1}, "predicate": {"spark": 4, "twin": 1}},
+        "fallbacks": {
+            "keys": {"type": 1},
+            "predicate": {"ineligible_expr": 1, "no_twin": 1, "type": 1, "uncommitted": 1},
+        },
+    }
+    assert svc.stats() == want
+    with svc.serve():
+        call = query_client(*svc.address)
+        try:
+            assert call({"op": "stats"}) == {**want, "ok": True}
+        finally:
+            call.close()
+
+
+def test_twin_predicate_cursor_pages_under_durable_commit_load(spark, tmp_path):
+    """Readers page ``value > 20`` through cursors while a max_epochs=2
+    durable writer commits: every page equals the Spark path's page at
+    its pin (or, when retention prunes the pin before Spark reads it,
+    both refuse it), and a cursor whose pin is pruned mid-paging gets
+    the clean retention-horizon error, never a torn page.  More readers
+    than cores and a short switch interval: the stats counters lose no
+    answer."""
+    import sys
+    import threading
+
+    env = TxEnvironment(
+        spark, isolation="PL3", durable=True, store_dir=str(tmp_path / "store"),
+        checkpoint_every=2, max_epochs=2,
+    )
+    env.create_namespace("kv", "double", 0.0)
+    keys = [f"k{i:02d}" for i in range(40)]
+
+    def values(e):
+        return [float((7 * i + e) % 40) for i in range(len(keys))]
+
+    def commit(e):
+        env.store.commit_pandas(e, {"kv": pd.DataFrame({"key": keys, "value": values(e)})})
+
+    commit(0)
+    svc, spark_svc = StateService(env, max_rows=3), StateService(env, max_rows=3)
+    spark_svc._twin_readable = lambda ns: False
+    req = {"op": "predicate", "ns": "kv", "predicate": "value > 20"}
+    done = threading.Event()
+    errors: list = []
+    pruned: list = []
+    pages: list = []
+    answered: list = []
+
+    def reader():
+        while not done.is_set():
+            page = svc.handle(req)
+            answered.append(page["ok"])
+            got = list(page["rows"])
+            while page.get("ok") and page.get("truncated"):
+                nxt = {**req, "cursor": page["cursor"]}
+                page = svc.handle(nxt)
+                answered.append(page["ok"])
+                if not page["ok"]:
+                    if "outside retention horizon" not in page["error"]:
+                        errors.append(page)
+                    pruned.append(nxt["cursor"]["epoch"])
+                    break
+                spark_page = spark_svc.handle(nxt)
+                if spark_page != page and not (
+                    not spark_page["ok"] and "outside retention horizon" in spark_page["error"]
+                ):
+                    errors.append((page, spark_page))
+                pages.append(page["epoch"])
+                got.extend(page["rows"])
+            else:
+                if not page["ok"]:
+                    errors.append(page)
+                    return
+                e = page["epoch"]
+                want = sorted(k for k, v in zip(keys, values(e)) if v > 20)
+                if [k for k, _ in got] != want or any(v <= 20 for _, v in got):
+                    errors.append((e, got))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    readers = [threading.Thread(target=reader, daemon=True) for _ in range(6)]
+    try:
+        for r in readers:
+            r.start()
+        for e in range(1, 7):
+            commit(e)
+    finally:
+        done.set()
+        for r in readers:
+            r.join(timeout=120)
+        sys.setswitchinterval(old)
+    assert not any(r.is_alive() for r in readers)
+    assert not errors, errors[:3]
+    assert len(set(pages)) > 1
+    assert svc.stats()["answers"]["predicate"] == {"twin": sum(answered)}
+    # deterministic prune: a cursor taken at the watermark, then two
+    # more commits move the max_epochs=2 horizon past its pin
+    first = svc.handle(req)
+    assert first["truncated"]
+    commit(7)
+    commit(8)
+    resumed = svc.handle({**req, "cursor": first["cursor"]})
+    assert not resumed["ok"] and "outside retention horizon" in resumed["error"], resumed
+    assert svc.stats()["answers"]["predicate"].get("spark", 0) == 0
