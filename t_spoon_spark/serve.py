@@ -59,7 +59,6 @@ session object there.
 from __future__ import annotations
 
 import bisect
-import functools
 import json
 import re
 import socket
@@ -74,10 +73,6 @@ _TWIN_VALUE_TYPES = frozenset(
     ("double", "float", "bigint", "long", "int", "integer", "smallint", "tinyint",
      "string", "boolean")
 )
-
-# pinned (ns, epoch) twins whose predicate index a service keeps: the
-# watermark and a few pins paging behind it
-_PREDICATE_INDEXES = 8
 
 # leading statement keywords accepted on the NETWORK sql op — queries
 # only, nothing that mutates session state or catalog
@@ -154,15 +149,16 @@ def _twin_rows(twin, keys: list, value_type: str) -> list:
     return rows
 
 
-@functools.lru_cache(maxsize=256)
 def _compile_predicate(predicate_sql: str, value_type: str):
     """``fn(values) -> mask`` equal to Spark's filter, or None when the
-    predicate stays on Spark (tx/driver_cascade.py predicate mode)."""
+    predicate stays on Spark (tx/driver_cascade.py predicate mode).  A
+    predicate nested past the recursive parser's stack, or an integer
+    literal past Python's int() digit limit, stays on Spark too."""
     from t_spoon_spark.tx.driver_cascade import Ineligible, compile_fragment
 
     try:
         run = compile_fragment(predicate_sql, [], vec=True, forbid_acc=True, predicate=value_type)
-    except Ineligible:
+    except (Ineligible, RecursionError, ValueError):
         return None
     return lambda values: run(None, None, values)
 
@@ -250,12 +246,14 @@ class StateService:
         # concurrent sql requests would race the view rebind, so the
         # sql path is serialized (control-plane rate, not a bottleneck)
         self._sql_lock = threading.Lock()
-        # the stats op's counters and the predicate index cache; no
-        # commit ever takes this lock
+        # the stats op's counters; no commit ever takes this lock
         self._lock = threading.Lock()
         self._answers: Counter = Counter()  # (op, "twin" | "spark")
         self._fallbacks: Counter = Counter()  # (op, reason)
-        self._indexes: dict[tuple[str, int], tuple[Any, Any]] = {}
+        # ns -> (twin, its predicate index), rebuilt when the pinned twin
+        # is another object (a commit_pandas epoch that leaves a
+        # namespace untouched keeps its twin object)
+        self._indexes: dict[str, tuple[Any, Any]] = {}
 
     # -- in-process API (each call = one pinned consistent snapshot) ----
 
@@ -288,7 +286,8 @@ class StateService:
 
     def stats(self) -> dict[str, Any]:
         """Answers per op and path (``twin`` ran no Spark job) and the
-        reasons requests fell back to Spark, since the service started."""
+        reasons answered requests fell back to Spark, since the service
+        started.  A request that ends in an error counts nowhere."""
         with self._lock:
             answers, fallbacks = dict(self._answers), dict(self._fallbacks)
         out: dict[str, Any] = {"answers": {}, "fallbacks": {}}
@@ -350,7 +349,6 @@ class StateService:
             epoch = self.pin(epoch)
             twin = self.env.store.read_twin(ns, epoch)
             fallback = None if twin is not None else "no_twin"
-        self._count("keys", fallback)
         if twin is not None:
             pin, uncommitted, rows = epoch, False, _twin_rows(twin, keys, self._value_type(ns))
         else:
@@ -359,6 +357,7 @@ class StateService:
                 [r["key"], r["value"]]
                 for r in frame.filter(F.col("key").isin(keys)).orderBy("key").collect()
             ]
+        self._count("keys", fallback)
         out = {"epoch": pin, "rows": rows}
         if uncommitted:
             out["uncommitted"] = True
@@ -403,7 +402,6 @@ class StateService:
             # one pin for both paths, as in query_keys
             epoch = self.pin(epoch)
             rows, fallback = self._twin_predicate(ns, predicate_sql, epoch, cap, after_key)
-        self._count("predicate", fallback)
         if rows is not None:
             pin, uncommitted = epoch, False
         else:
@@ -415,6 +413,7 @@ class StateService:
             # top-k runs executor-side and at most cap+1 rows reach the
             # driver
             rows = [[r["key"], r["value"]] for r in df.orderBy("key").limit(cap + 1).collect()]
+        self._count("predicate", fallback)
         out = {"epoch": pin, "rows": rows[:cap]}
         if uncommitted:
             out["uncommitted"] = True
@@ -448,20 +447,19 @@ class StateService:
         match = _compile_predicate(predicate_sql, vt)
         if match is None:
             return None, "ineligible_expr"
-        cached = self._indexes.get((ns, pin))
+        cached = self._indexes.get(ns)
         if cached is None or cached[0] is not twin:
-            cached = (twin, _predicate_index(twin, kind))
-            with self._lock:
-                self._indexes[ns, pin] = cached
-                while len(self._indexes) > _PREDICATE_INDEXES:
-                    del self._indexes[next(iter(self._indexes))]
+            cached = self._indexes[ns] = (twin, _predicate_index(twin, kind))
         index = cached[1]
         if isinstance(index, str):
             return None, index
         keys, vals = index
         start = 0 if after_key is None else bisect.bisect_right(keys, after_key)
-        with np.errstate(all="ignore"):  # inf - inf is NaN here as in Spark
-            mask = match(vals[start:])
+        try:
+            with np.errstate(all="ignore"):  # inf - inf is NaN here as in Spark
+                mask = match(vals[start:])
+        except RecursionError:  # a long operator chain nests one call per link
+            return None, "ineligible_expr"
         hits = np.flatnonzero(mask)[: cap + 1] + start
         return [[keys[i], vals[i].item()] for i in hits], None
 

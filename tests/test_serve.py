@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import math
+import sys
 
 import numpy as np
 import pandas as pd
@@ -760,6 +761,10 @@ _PRED_CASES = [
     ("key = 'k0' AND value > 0", set()),
     ("value > true", set()),  # Spark rejects it at analysis
     ("value >", set()),
+    # past the driver compiler's recursion limit or int()'s digit limit:
+    # Spark answers, or rejects, as it always did
+    ("(" * 300 + "value > 110" + ")" * 300, set()),
+    ("value > " + "9" * 5000, set()),
 ]
 
 
@@ -839,16 +844,26 @@ def test_twin_predicate_matches_spark_path(spark, tmp_path, vt, route):
         assert json.dumps(got) == json.dumps(want), req
         if path == "twin":
             assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], req
-        if got["ok"]:
+        if not got["ok"]:
+            assert after == before, req  # an error is no answer
+        else:
             assert delta.get(path) == 1, (req, delta)
             if reason:
                 fb = after["fallbacks"]["predicate"].get(reason, 0)
                 assert fb == before["fallbacks"].get("predicate", {}).get(reason, 0) + 1, req
         return got
 
-    for pred, twin_types in _PRED_CASES:
-        path = "twin" if vt in twin_types else "spark"
-        call({"op": "predicate", "ns": "kv", "predicate": pred}, path, None if path == "twin" else "ineligible_expr")
+    # the nested case overflows the driver compiler's stack at Python's
+    # default recursion limit; a Spark call may raise the limit (an
+    # import of jedi sets 3000), so it is reset before each request
+    limit = sys.getrecursionlimit()
+    try:
+        for pred, twin_types in _PRED_CASES:
+            sys.setrecursionlimit(1000)
+            path = "twin" if vt in twin_types else "spark"
+            call({"op": "predicate", "ns": "kv", "predicate": pred}, path, None if path == "twin" else "ineligible_expr")
+    finally:
+        sys.setrecursionlimit(limit)
 
     base = {"op": "predicate", "ns": "kv", "predicate": "value > -1"}
     first = call({**base, "limit": 2}, "twin")
@@ -895,6 +910,10 @@ def test_stats_op_counts_answer_paths_and_fallbacks(spark):
     assert svc.handle({"op": "predicate", "ns": "s", "predicate": "value = 'x'"})["rows"] == [["a", "x"]]
     assert svc.handle({"op": "keys", "ns": "kv", "keys": ["a"]})["rows"] == [["a", 1.0]]
     assert svc.handle({"op": "keys", "ns": "kv", "keys": [None, "a"]})["rows"] == [["a", 1.0]]
+    # a chain that compiles but nests one call per link when evaluated
+    # (Spark refuses to parse it, so only the twin side is checked)
+    chain = "value" + " + 0" * 3 * sys.getrecursionlimit() + " > 1"
+    assert svc._twin_predicate("kv", chain, 0, 10, None) == (None, "ineligible_expr")
     # an uncut commit() epoch keeps a lazy Spark plan and no twin
     store.commit(1, {"kv": spark.createDataFrame([("c", 3.0)], "key string, value double")}, None)
     assert store.read_twin("kv") is None
@@ -923,7 +942,6 @@ def test_twin_predicate_cursor_pages_under_durable_commit_load(spark, tmp_path):
     the clean retention-horizon error, never a torn page.  More readers
     than cores and a short switch interval: the stats counters lose no
     answer."""
-    import sys
     import threading
 
     env = TxEnvironment(
