@@ -835,8 +835,8 @@ class StageCtx:
     stage: Any
     ns: Any
     stage_idx: int
-    ops: Any  # persisted Spark DataFrame (alive ops with __key)
-    snapshot: Any  # committed snapshot DataFrame at epoch open
+    ops: Any  # Spark DataFrame of the alive ops with __key (persisted on a cluster)
+    snapshot: Any  # committed snapshot DataFrame at epoch open (None: the ops fold reads the twin)
     value_cols: list[str]
     evaluated: Any  # persisted evaluation frame (None for epoch_combine)
 
@@ -1397,9 +1397,10 @@ class DriverCascade:
         ctx = st.ctx
         pre = ctx.stage.pre_combine
         if ctx.kind != "pandas" and pre:
-            pdf = _pull_pdf(
-                ctx.ops.select("_tid", "__key", *pre), key_cols=("__key",)
-            )
+            ops = ctx.ops
+            if ops.columns != ["_tid", "__key", *pre]:  # not yet the pulled projection
+                ops = ops.select("_tid", "__key", *pre)
+            pdf = _pull_pdf(ops, key_cols=("__key",))
             # recorded on the RAW frame: the pandas pre-combine groupby
             # below silently DROPS NaN keys (dropna default), so a
             # post-groupby check would miss them — the ops-fold path

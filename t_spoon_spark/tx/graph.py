@@ -22,6 +22,7 @@ reads them.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -235,3 +236,212 @@ def apply_t_window(df: DataFrame, stage: TWindowStage) -> DataFrame:
         F.lit(True).alias("_alive"),
         *[c.alias(n) for n, c in out_cols.items()],
     )
+
+
+# -- SQL rendering ---------------------------------------------------------
+#
+# The stage lambdas build Columns, and applying them through the
+# apply_* functions costs several eagerly analyzed DataFrame ops per
+# stage per epoch.  A runner renders them ONCE per batch schema to SQL
+# text (Catalyst's Expression.sql(), the rendering _chain_update_sql
+# uses) and rebuilds each epoch's frames from that text in a few
+# selectExpr calls.  SQL text re-resolves by name, so a lambda that
+# wrote df["x"] against the first epoch's plan is still right on the
+# next one; a cached Column would not be.
+
+
+class CannotRender(Exception):
+    """A stage the SQL renderer cannot express; the runner keeps
+    running the graph through the apply_* walk."""
+
+
+# Python/Scala UDFs, higher-order lambdas: their SQL text does not name
+# the code that runs (a UDF renders as its Python name, which may be a
+# built-in function).  Unseeded random functions would freeze the seed.
+_DENY_NODES = ("UDF", "Udf", "UserDefined", "Lambda")
+_DENY_FUNCS = re.compile(r"\b(rand|randn|random|randstr|uniform|uuid|shuffle)\s*\(", re.I)
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`")
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _unq(tok: str) -> str:
+    return tok[1:-1].replace("``", "`") if tok.startswith("`") else tok
+
+
+def _as(sql: str, name: str) -> str:
+    return _q(name) if sql == _q(name) else f"{sql} AS {_q(name)}"
+
+
+def render_sql(spark, col: Column) -> str:
+    """SQL text of a stage Column, or CannotRender."""
+    expr = spark._jsparkSession.expression(col._jc)
+    todo = [expr]
+    while todo:
+        e = todo.pop()
+        kind = e.getClass().getSimpleName()
+        if any(d in kind for d in _DENY_NODES):
+            raise CannotRender(f"{kind} in {expr.sql()}")
+        it = e.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    sql = expr.sql()
+    if _DENY_FUNCS.search(sql):
+        raise CannotRender(f"random function in {sql}")
+    return sql
+
+
+class _Proj:
+    """The pending projection of a rendering: output column -> SQL over
+    the input of the select being built.  Outputs that pass an input
+    column through unchanged are rendered as the quoted name."""
+
+    def __init__(self, inputs: list[str], cols: dict[str, str]):
+        self.inputs = inputs
+        self.cols = cols
+
+    def over(self, sql: str) -> str | None:
+        """``sql`` (over the graph's columns at this point) rewritten
+        over the select's input, or None when the select must be cut
+        first.  Only a bare column reference is substituted; any other
+        text passes through unchanged when none of its identifiers can
+        name a column whose input differs (case-insensitively, as Spark
+        resolves)."""
+        if _IDENT.fullmatch(sql) and _unq(sql) in self.cols:
+            return self.cols[_unq(sql)]
+        dirty = {n.lower() for n, s in self.cols.items() if s != _q(n)}
+        dirty |= {n.lower() for n in self.inputs if n not in self.cols}
+        if any(_unq(t).lower() in dirty for t in _IDENT.findall(sql)):
+            return None
+        return sql
+
+    def select(self) -> list[str]:
+        return [_as(s, n) for n, s in self.cols.items()]
+
+    def cut(self) -> "_Proj":
+        # a constant-true _alive stays constant: the ops then need no filter
+        return _Proj(
+            list(self.cols), {n: s if s == "true" else _q(n) for n, s in self.cols.items()}
+        )
+
+
+@dataclass
+class _StateSql:
+    step: int  # how many shared selects precede this stage
+    cols: dict[str, str]
+    key: str
+
+    @property
+    def value_cols(self) -> list[str]:
+        return [c for c in self.cols if c not in META_COLS]
+
+
+@dataclass
+class RenderedGraph:
+    """A graph rendered to SQL for one batch schema: shared select
+    lists applied to the batch in order, and per state stage (in graph
+    order) the projection its ops are built from."""
+
+    steps: list[list[str]]
+    states: list[_StateSql]
+    stream: _StateSql  # key unused
+
+
+class RenderedEpoch:
+    """One epoch's frames from a RenderedGraph; the shared selects are
+    built once, on first use."""
+
+    def __init__(self, plan: RenderedGraph, src: DataFrame):
+        self.plan = plan
+        self._bases = [src]
+
+    def _base(self, step: int) -> DataFrame:
+        while len(self._bases) <= step:
+            k = len(self._bases) - 1
+            self._bases.append(self._bases[k].selectExpr(*self.plan.steps[k]))
+        return self._bases[step]
+
+    def ops(self, i: int, only: list[str] | None = None) -> DataFrame:
+        """State stage ``i``'s alive ops with ``__key``: every column, or
+        ``_tid``, ``__key`` and the value columns in ``only``."""
+        s = self.plan.states[i]
+        df = self._base(s.step)
+        if s.cols["_alive"] != "true":
+            df = df.where(s.cols["_alive"])
+        key = f"CAST({s.key} AS STRING) AS `__key`"
+        if only is None:
+            return df.selectExpr(*[_as(v, n) for n, v in s.cols.items()], key)
+        return df.selectExpr(
+            _as(s.cols["_tid"], "_tid"), key, *[_as(s.cols[c], c) for c in only]
+        )
+
+    def stream(self) -> DataFrame:
+        s = self.plan.stream
+        return self._base(s.step).selectExpr(*[_as(v, n) for n, v in s.cols.items()])
+
+
+def render_graph(spark, graph: TGraph, walked: list[DataFrame], src_cols: list[str]) -> RenderedGraph:
+    """Render ``graph`` to SQL.  ``walked[i]`` is the frame stage ``i``
+    sees in the apply_* walk (its lambdas are called on it once more,
+    here), ``walked[-1]`` the walk's final frame; ``src_cols`` are the
+    batch's columns.  Raises CannotRender for key_by, t_window and
+    Columns whose text would not run the same code."""
+    steps: list[list[str]] = []
+    proj = _Proj(
+        list(src_cols),
+        {
+            **{c: _q(c) for c in src_cols},
+            "_ts": "`_tid`",
+            "_path": "CAST(array() AS ARRAY<INT>)",
+            "_alive": "true",
+        },
+    )
+
+    def over(*sqls: str) -> list[str]:
+        # cut the pending select when some text reads a column it
+        # changed; after a cut every column is an input column of the
+        # same name and value, so the text runs as rendered
+        nonlocal proj
+        out = [proj.over(s) for s in sqls]
+        if None in out:
+            steps.append(proj.select())
+            proj = proj.cut()
+            out = list(sqls)
+        return out
+
+    states: list[_StateSql] = []
+    for i, stage in enumerate(graph.stages):
+        df = walked[i]
+        if isinstance(stage, MapStage):
+            new = {n: render_sql(spark, c) for n, c in stage.fn(df).items()}
+            sqls = over(*new.values())
+            meta = {m: proj.cols[m] for m in META_COLS}
+            proj = _Proj(proj.inputs, {**meta, **dict(zip(new, sqls))})
+        elif isinstance(stage, FilterStage):
+            (pred,) = over(render_sql(spark, stage.pred(df)))
+            proj.cols["_alive"] = f"(({proj.cols['_alive']}) AND coalesce({pred}, false))"
+        elif isinstance(stage, FlatMapStage):
+            (arr,) = over(render_sql(spark, stage.fn(df)))
+            steps.append(
+                [_as(proj.cols[m], m) for m in META_COLS]
+                + [f"posexplode({arr}) AS (`__pos`, `__elem`)"]
+            )
+            fields = value_columns(walked[i + 1])
+            proj = _Proj(
+                [*META_COLS, "__pos", "__elem"],
+                {
+                    "_tid": "`_tid`",
+                    "_ts": "`_ts`",
+                    "_path": "concat(`_path`, array(`__pos`))",
+                    "_alive": "true" if proj.cols["_alive"] == "true" else "`_alive`",
+                    **{f: f"`__elem`.{_q(f)}" for f in fields},
+                },
+            )
+        elif isinstance(stage, StateStage):
+            (key,) = over(render_sql(spark, stage.key(df)))
+            states.append(_StateSql(len(steps), dict(proj.cols), key))
+        else:
+            raise CannotRender(type(stage).__name__)
+    return RenderedGraph(steps, states, _StateSql(len(steps), dict(proj.cols), ""))

@@ -40,7 +40,6 @@ import os
 import re
 import time
 
-_DEBUG = os.environ.get("TSPOON_DEBUG") == "1"
 # The materialize mode is the one selector between the two epoch
 # closes: 'pandas' runs the driver close (tx/driver_cascade.py),
 # 'reliable' the distributed close a cluster runs.  None = auto-select
@@ -68,12 +67,6 @@ _OPS_FOLD_MAX_TXNS = 800_000
 class _OpsFoldRetry(Exception):
     """Ops-fold epoch hit a data-dependent ineligibility at pull time:
     re-run the same epoch on the standard path (nothing committed)."""
-
-
-def _dbg(label: str, t0: float) -> float:
-    if _DEBUG:
-        print(f"    [tspoon] {label}: {time.time() - t0:.2f}s", flush=True)
-    return time.time()
 
 
 def materialize_mode(spark) -> str:
@@ -187,13 +180,16 @@ class EpochResult:
     ``"distributed"``; ``cascade_rounds`` counts the abort-cascade
     refold rounds; ``close_fallback`` is None, or why the epoch left
     the driver close it would have taken (an ops-fold retry or an
-    Ineligible reason)."""
+    Ineligible reason).  ``phase_ms`` is the epoch's wall time in ms
+    per phase: ``plan`` (batch stamp and the state stages' frames),
+    ``close`` (votes and the abort cascade), ``commit`` and ``replay``
+    (the replay queue and releasing the epoch's caches)."""
 
     def __init__(
         self,
         epoch: int,
         results,  # DataFrame or zero-arg thunk returning one
-        stream: DataFrame,
+        stream,  # DataFrame or zero-arg thunk returning one
         spu_results: DataFrame | None,
         n_replay: int,
         votes,  # DataFrame or zero-arg thunk returning one
@@ -201,12 +197,11 @@ class EpochResult:
         close_path: str = "distributed",
         cascade_rounds: int = 0,
         close_fallback: str | None = None,
+        phase_ms: dict[str, float] | None = None,
     ):
         self.epoch = epoch
         self._results = results
-        # the transformed stream after all stages (reference exposes it
-        # via sinks on the closed TStream; tests golden-check it)
-        self.stream = stream
+        self._stream = stream
         self.spu_results = spu_results
         self.n_replay = n_replay
         self._votes = votes
@@ -214,12 +209,21 @@ class EpochResult:
         self.close_path = close_path
         self.cascade_rounds = cascade_rounds
         self.close_fallback = close_fallback
+        self.phase_ms = phase_ms or {}
 
     @property
     def results(self) -> DataFrame:
         if callable(self._results):
             self._results = self._results()
         return self._results
+
+    @property
+    def stream(self) -> DataFrame:
+        """The transformed stream after all stages (the reference exposes
+        it via sinks on the closed TStream), built on first access."""
+        if callable(self._stream):
+            self._stream = self._stream()
+        return self._stream
 
     @property
     def votes(self) -> DataFrame:
@@ -276,6 +280,11 @@ class GraphRunner:
         # taken (EpochResult.close_fallback)
         self._dc_ineligible: str | None = None
         self._fallback: str | None = None
+        # the graph rendered to SQL, per batch schema (None: the schema's
+        # first epoch found a stage the renderer cannot express, and the
+        # apply_* walk runs every epoch), and why rendering was refused
+        self._rendered: dict[str, G.RenderedGraph | None] = {}
+        self._render_ineligible: str | None = None
 
     # ------------------------------------------------------------------
 
@@ -330,6 +339,8 @@ class GraphRunner:
         self._stage_ctxs = []
         self._batch_id = batch_id
         self._query_id = query_id
+        self._phase_ms = dict.fromkeys(("plan", "close", "commit", "replay"), 0.0)
+        self._t_phase = time.perf_counter()
 
         src, stamped = self._stamp(batch, epoch)
         if self._replay is not None:
@@ -348,34 +359,11 @@ class GraphRunner:
         self._ops_fold_epoch = not self._of_retry and self._ops_fold_ok(
             src, stamped, spus
         )
-
-        df = src.select(
-            "*",
-            F.col("_tid").alias("_ts"),
-            F.array().cast("array<int>").alias("_path"),
-            F.lit(True).alias("_alive"),
-        )
-
-        if self._tids_covered is None:
-            # needs the per-position frames the stage fns see, so it
-            # rides the first epoch's stage walk (analysis only, no job)
-            self._tids_covered = G.links_cover_tids(self.graph, df)
-        state_jobs: list[tuple[DataFrame, G.StateStage, int]] = []
-        for idx, stage in enumerate(self.graph.stages):
-            if isinstance(stage, G.MapStage):
-                df = G.apply_map(df, stage)
-            elif isinstance(stage, G.FlatMapStage):
-                df = G.apply_flat_map(df, stage)
-            elif isinstance(stage, G.FilterStage):
-                df = G.apply_filter(df, stage)
-            elif isinstance(stage, G.KeyByStage):
-                df = G.apply_key_by(df, stage)
-            elif isinstance(stage, G.TWindowStage):
-                df = G.apply_t_window(df, stage)
-            elif isinstance(stage, G.StateStage):
-                state_jobs.append((df, stage, idx))
-            else:  # pragma: no cover
-                raise TypeError(f"unknown stage {stage}")
+        ops_frames, stream = self._stage_frames(src)
+        state_jobs = [
+            (ops, stage, idx, value_cols)
+            for (ops, value_cols), (idx, stage) in zip(ops_frames, self._state_stages())
+        ]
 
         # Abort-cascade passes are possible only if some touched
         # namespace can abort at all; persisting the per-stage op frames
@@ -384,7 +372,7 @@ class GraphRunner:
         any_invariant = any(
             self.env.namespaces[s.namespace].invariant
             or self.env.namespaces[s.namespace].py_invariant
-            for _, s, _ in state_jobs
+            for _, s, _, _ in state_jobs
         )
         reruns: list = []
 
@@ -394,19 +382,21 @@ class GraphRunner:
             votes_parts: list[DataFrame] = []
             writes_parts: dict[str, list[DataFrame]] = {}
             if excluded is None:
-                for sdf, stage, idx in state_jobs:
-                    votes, writes, rerun = self._run_state(sdf, stage, idx, any_invariant)
+                for ops, stage, idx, value_cols in state_jobs:
+                    votes, writes, rerun = self._run_state(
+                        ops, stage, idx, any_invariant, value_cols
+                    )
                     reruns.append(rerun)
                     votes_parts.append(votes)
                     writes_parts.setdefault(stage.namespace, []).append(writes)
             else:
-                for rerun, (_, stage, _) in zip(reruns, state_jobs):
+                for rerun, (_, stage, _, _) in zip(reruns, state_jobs):
                     votes, writes = rerun(excluded)
                     votes_parts.append(votes)
                     writes_parts.setdefault(stage.namespace, []).append(writes)
             return votes_parts, writes_parts
 
-        return self._close(epoch, src, df, exec_states, len(state_jobs), spus)
+        return self._close(epoch, src, stream, exec_states, len(state_jobs), spus)
 
     def run_to_completion(
         self, batch: DataFrame, spus: DataFrame | None = None, max_epochs: int = 64
@@ -432,10 +422,106 @@ class GraphRunner:
         base = (epoch + 1) << EPOCH_TID_SHIFT
         return batch.withColumn("_tid", F.lit(base) + F.monotonically_increasing_id()), True
 
+    def _lap(self, phase: str) -> None:
+        """Charge the wall time since the last lap to ``phase``."""
+        now = time.perf_counter()
+        self._phase_ms[phase] += (now - self._t_phase) * 1000.0
+        self._t_phase = now
+
+    # -- the graph's frames ----------------------------------------------
+
+    def _state_stages(self) -> list[tuple[int, G.StateStage]]:
+        return [(i, s) for i, s in enumerate(self.graph.stages) if isinstance(s, G.StateStage)]
+
+    def _walk(self, src: DataFrame) -> list[DataFrame]:
+        """The apply_* walk: the frame each stage sees, then the final
+        frame."""
+        df = src.select(
+            "*",
+            F.col("_tid").alias("_ts"),
+            F.array().cast("array<int>").alias("_path"),
+            F.lit(True).alias("_alive"),
+        )
+        if self._tids_covered is None:
+            # needs the per-position frames the stage fns see (analysis
+            # only, no job); computed once — the graph is immutable
+            self._tids_covered = G.links_cover_tids(self.graph, df)
+        seen = []
+        for stage in self.graph.stages:
+            seen.append(df)
+            if isinstance(stage, G.MapStage):
+                df = G.apply_map(df, stage)
+            elif isinstance(stage, G.FlatMapStage):
+                df = G.apply_flat_map(df, stage)
+            elif isinstance(stage, G.FilterStage):
+                df = G.apply_filter(df, stage)
+            elif isinstance(stage, G.KeyByStage):
+                df = G.apply_key_by(df, stage)
+            elif isinstance(stage, G.TWindowStage):
+                df = G.apply_t_window(df, stage)
+            elif not isinstance(stage, G.StateStage):  # pragma: no cover
+                raise TypeError(f"unknown stage {stage}")
+        return seen + [df]
+
+    def _stage_frames(self, src: DataFrame):
+        """([(ops, value columns)] per state stage, stream thunk) for this
+        epoch.  ``ops`` is the stage's alive records with ``__key``; on
+        an ops-fold epoch only ``_tid``, ``__key`` and the pre-combined
+        columns the fold reads.
+
+        The graph is rendered to SQL on the first epoch of each batch
+        schema and checked against the apply_* walk of that epoch: the
+        rendered ops and stream must have the walked schemas.  From then
+        on an epoch's frames are a few selectExpr calls over the batch.
+        A graph the renderer refuses keeps the walk, and the reason
+        stays on the runner (``_render_ineligible``)."""
+        key = src.schema.json()
+        states = self._state_stages()
+        walked = ep = None
+        if key not in self._rendered:
+            walked = self._walk(src)
+            plan = None
+            try:
+                plan = G.render_graph(self.env.spark, self.graph, walked, src.columns)
+                ep = G.RenderedEpoch(plan, src)
+                for n, (i, stage) in enumerate(states):
+                    if ep.ops(n).schema != self._walk_ops(walked[i], stage).schema:
+                        raise G.CannotRender(f"stage {i}: rendered ops schema differs")
+                if ep.stream().schema != walked[-1].schema:
+                    raise G.CannotRender("rendered stream schema differs")
+            except Exception as e:  # CannotRender, or Spark refusing the text
+                self._render_ineligible = f"{type(e).__name__}: {str(e).splitlines()[0]}"
+                plan = None
+            self._rendered[key] = plan
+        plan = self._rendered[key]
+        if plan is None:
+            if walked is None:
+                walked = self._walk(src)
+            return (
+                [(self._walk_ops(walked[i], s), G.value_columns(walked[i])) for i, s in states],
+                lambda: walked[-1],
+            )
+        if ep is None:
+            ep = G.RenderedEpoch(plan, src)
+        ops = []
+        for n, ((_i, stage), rs) in enumerate(zip(states, plan.states)):
+            only = list(stage.pre_combine) if self._ops_fold_epoch else None
+            ops.append((ep.ops(n, only), rs.value_cols))
+        return ops, ep.stream
+
+    @staticmethod
+    def _walk_ops(df: DataFrame, stage: G.StateStage) -> DataFrame:
+        return df.filter(F.col("_alive")).withColumn("__key", stage.key(df).cast("string"))
+
     # -- state stage ----------------------------------------------------
 
     def _run_state(
-        self, df: DataFrame, stage: G.StateStage, stage_idx: int, persist_ops: bool
+        self,
+        ops: DataFrame,
+        stage: G.StateStage,
+        stage_idx: int,
+        persist_ops: bool,
+        value_cols: list[str] | None = None,
     ) -> tuple[DataFrame, DataFrame, "object"]:
         """Returns (votes (_tid, vote), writes (key, value, _tid, _ord,
         _stage), rerun), where rerun(excluded_tids_df) recomputes the
@@ -444,8 +530,17 @@ class GraphRunner:
         costs one refold, not a source + graph re-execution."""
         env = self.env
         ns = env.namespaces[stage.namespace]
-        snapshot = env.store.read(ns.name)
-        ops = df.filter(F.col("_alive")).withColumn("__key", stage.key(df).cast("string"))
+        if value_cols is None:  # handed the frame the stage sees, not its ops
+            value_cols = G.value_columns(ops)
+            ops = self._walk_ops(ops, stage)
+        # the ops fold reads v0 from the store's pandas twin, never the
+        # snapshot frame (an ops-fold epoch that cannot finish re-runs
+        # on the standard path, which reads it)
+        snapshot = (
+            None
+            if self._ops_fold_epoch and env.store.read_twin(ns.name) is not None
+            else env.store.read(ns.name)
+        )
 
         pandas_path = stage.py_update is not None or env.isolation in ("PL0", "PL1")
         if pandas_path:
@@ -493,8 +588,6 @@ class GraphRunner:
 
         if kind in ("epoch_combine",) or (kind == "chain_expr" and stage.pre_combine):
             value_cols = list(stage.pre_combine)
-        else:
-            value_cols = [c for c in ops.columns if c not in (*G.META_COLS, "__key")]
         self._stage_ctxs.append(
             StageCtx(
                 kind=kind,
@@ -982,9 +1075,9 @@ class GraphRunner:
         spus: DataFrame | None,
     ) -> EpochResult:
         env = self.env
-        t0 = time.time()
         votes_parts, writes_parts = exec_states(None)
         spark = src.sparkSession
+        self._lap("plan")
 
         # Driver close (pandas materialize mode + compiled python twins,
         # tx/driver_cascade.py): as few as ONE Spark job per epoch — the
@@ -997,7 +1090,7 @@ class GraphRunner:
             from t_spoon_spark.tx.driver_cascade import Ineligible
 
             try:
-                return self._driver_close(epoch, src, stream, spus, dc, t0)
+                return self._driver_close(epoch, src, stream, spus, dc)
             except Ineligible as e:
                 if self._ops_fold_epoch:
                     # the ops-fold epoch never built the evaluation
@@ -1017,7 +1110,6 @@ class GraphRunner:
         # and the local fallback for graphs the driver compile refuses.
         tids = src.select("_tid")
         gvotes = materialize(self._merge_votes(tids, votes_parts))
-        t0 = _dbg("gvotes", t0)
 
         # Forward abort cascade (the epoch-model analogue of the
         # reference's dependency tracking + StrictnessEnforcer replay,
@@ -1105,15 +1197,14 @@ class GraphRunner:
                 prev_df = aborted
                 votes_parts, writes_parts = exec_states(aborted)
                 gvotes = materialize(self._merge_votes(tids, votes_parts))
-                t0 = _dbg(f"cascade_round {rounds} aborted={n_aborted}", t0)
-            t0 = _dbg("abort_cascade", t0)
 
+        self._lap("close")
         reasons = [self._fallback]
         if self._dc_compiled is False and materialize_mode(spark) == "pandas":
             reasons.append(self._dc_ineligible)
         return self._finish_close(
             epoch, src, stream, lambda: gvotes, None, lambda: writes_parts, spus,
-            None, t0,
+            None,
             close_path="distributed",
             cascade_rounds=rounds,
             close_fallback="; ".join(r for r in reasons if r) or None,
@@ -1126,7 +1217,6 @@ class GraphRunner:
         stream: DataFrame,
         spus: DataFrame | None,
         dc,
-        t0: float,
     ) -> EpochResult:
         """Pandas-mode close via the driver cascade module: pull the
         evaluation links (the epoch's one real Spark job per stage),
@@ -1173,9 +1263,9 @@ class GraphRunner:
                 for ns_name, parts in out.writes.items()
             }
 
-        t0 = _dbg(f"driver_close rounds={out.rounds}", t0)
+        self._lap("close")
         return self._finish_close(
-            epoch, src, stream, gvotes, out.gv_pdf, writes_supplier, spus, out, t0,
+            epoch, src, stream, gvotes, out.gv_pdf, writes_supplier, spus, out,
             close_path="ops_fold" if dc.ops_fold else "evaluated_pull",
             cascade_rounds=out.rounds,
             close_fallback=self._fallback,
@@ -1191,7 +1281,6 @@ class GraphRunner:
         writes_supplier,
         spus: DataFrame | None,
         driver_res,
-        t0: float,
         **close_info,
     ) -> EpochResult:
         """Post-cascade close: resolve finals, commit, build results —
@@ -1271,7 +1360,6 @@ class GraphRunner:
             and driver_res is not None
             and all(store.can_commit_pandas(n) for n in driver_res.finals)
         )
-        t0 = _dbg("build_updates", t0)
         wal = None
         if store.durable:
             wal = build_results().select(
@@ -1299,7 +1387,7 @@ class GraphRunner:
                 batch_id=getattr(self, "_batch_id", None),
                 query_id=getattr(self, "_query_id", None),
             )
-        t0 = _dbg("commit", t0)
+        self._lap("commit")
 
         # REPLAY queue: original source rows re-enter the next epoch
         # with their original tid (OpenOperator replay,
@@ -1320,11 +1408,10 @@ class GraphRunner:
             self._replay = materialize(src.join(replay_tids, "_tid"))
         else:
             self._replay = None
-        _dbg("replay", t0)
-
         for p in self._epoch_persisted:
             p.unpersist()
         self._epoch_persisted = []
+        self._lap("replay")
 
         return EpochResult(
             epoch=epoch,
@@ -1334,6 +1421,7 @@ class GraphRunner:
             n_replay=n_replay,
             votes=gvotes,
             votes_pdf=gv_pdf,
+            phase_ms=dict(self._phase_ms),
             **close_info,
         )
 

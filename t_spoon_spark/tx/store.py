@@ -26,8 +26,8 @@ older epoch never sees a frame of the epoch being committed.
 Small snapshots (under ``SMALL_SNAPSHOT_*``, local session) also keep a
 driver-side pandas twin per retained epoch: the driver close merges
 into it with :meth:`StateStore.commit_pandas` (the durable files are
-written from it), the committed frame is the twin's LocalRelation, and
-key lookups (:meth:`StateStore.read_twin`, used by ``serve.py``) answer
+written from it), the committed frame is the twin's LocalRelation
+(built on the first read of that epoch), and key lookups (:meth:`StateStore.read_twin`, used by ``serve.py``) answer
 from it with no Spark job — the reference likewise reads a shard's
 in-memory versions at the watermark (tgraph/db/Shard.java:186-217).
 Large state and cluster sessions stay on :meth:`StateStore.commit`,
@@ -39,6 +39,7 @@ contract for tests and rate benchmarks.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
@@ -70,6 +71,28 @@ def _nan_as_null(pdf):
     if v.dtype.kind == "f" and v.isna().any():
         pdf = pdf.assign(value=v.astype(object).where(v.notna(), None))
     return pdf
+
+
+class _LazyFrame:
+    """A committed snapshot's LocalRelation, built from its pandas twin
+    on the first read: most driver-close epochs never read it (the next
+    epoch's ops fold reads the twin).  Concurrent first readers may each
+    build one; every reader gets a complete frame, and a built frame is
+    published with one attribute store."""
+
+    def __init__(self, build):
+        self._build = build
+        self._frame: DataFrame | None = None
+
+    def get(self) -> DataFrame:
+        frame = self._frame
+        if frame is None:
+            frame = self._frame = self._build()
+        return frame
+
+
+def _frame(v) -> DataFrame:
+    return v.get() if isinstance(v, _LazyFrame) else v
 
 
 class StateStore:
@@ -136,11 +159,12 @@ class StateStore:
         self.max_epochs = max_epochs
         self.namespaces: dict[str, Namespace] = {}
         # newest published snapshot per namespace; a commit rebinds the
-        # whole dict at publish, never mutates a published one
-        self._current: dict[str, DataFrame] = {}
+        # whole dict at publish, never mutates a published one.  Values
+        # here and in _history are frames or _LazyFrames (read via _frame)
+        self._current: dict[str, DataFrame | _LazyFrame] = {}
         # every retained epoch's snapshot, the newest included — reads
         # resolve by (ns, epoch), so a publish in progress cannot tear them
-        self._history: dict[tuple[str, int], DataFrame] = {}
+        self._history: dict[tuple[str, int], DataFrame | _LazyFrame] = {}
         self._committed = -1
         # highest streaming batch_id whose epoch committed — the
         # idempotence frontier for micro-batches re-delivered after a
@@ -215,7 +239,7 @@ class StateStore:
         epoch = self._resolve(ns, epoch)
         frame = self._history.get((ns, epoch))
         if frame is not None:
-            return frame
+            return _frame(frame)
         if self.durable and ns in self._current:
             return self._reconstruct(ns, epoch)
         raise KeyError(f"snapshot {ns}@{epoch} not retained (history={self.history_epochs})")
@@ -311,16 +335,13 @@ class StateStore:
             eff, updates = (committed, {}) if inflight is None else inflight
             for ns in namespaces:
                 upd = updates.get(ns)
+                frame = _frame(current[ns])
                 if upd is None:
-                    out[ns] = current[ns]
+                    out[ns] = frame
                     continue
-                if not isinstance(upd, DataFrame):  # pandas twin path
-                    nso = self.namespaces.get(ns)
-                    vt = nso.value_type if nso else "double"
-                    upd = self.spark.createDataFrame(
-                        upd[["key", "value"]], schema=f"key string, value {vt}"
-                    )
-                out[ns] = self._upsert(current[ns], upd)
+                if not isinstance(upd, DataFrame):  # the driver close's finals
+                    upd = self._twin_frame(ns, _nan_as_null(upd))
+                out[ns] = self._upsert(frame, upd)
             if self._inflight is inflight and self._committed == committed:
                 break  # stable pass: no commit transition during capture
         else:
@@ -379,7 +400,7 @@ class StateStore:
             for name, df in updates.items():
                 if df is None:
                     continue
-                merged = self._upsert(frames[name], df)
+                merged = self._upsert(_frame(frames[name]), df)
                 # a lazy merged plan: the twin no longer mirrors it
                 twins.pop(name, None)
                 if epoch % self.checkpoint_every == 0:
@@ -427,7 +448,8 @@ class StateStore:
         ({namespace: pandas frame}, already driver-side via the driver
         close, tx/driver_cascade.py) into the pandas snapshot twins — no
         Spark job for the merge, and the new committed frame is the
-        twin's LocalRelation (lineage cut every epoch).  A durable store
+        twin's LocalRelation (lineage cut every epoch), built on the
+        first read() of that epoch.  A durable store
         then writes what commit() writes, in the same order: the log
         files from the updates, the WAL (``wal``, the lazy results
         frame), the marker, and every ``checkpoint_every`` epochs the
@@ -438,9 +460,9 @@ class StateStore:
         if epoch != self._committed + 1:
             raise ValueError(f"epoch {epoch} != committed {self._committed} + 1")
         # pandas twins ride the in-flight overlay as-is (zero cost: dict
-        # of references); read_uncommitted converts on demand — the
-        # pandas-commit window is tiny, but the PL0 semantics stay
-        # uniform across commit paths.
+        # of references); read_uncommitted converts on demand with the
+        # committed frames' conversion — the pandas-commit window is
+        # tiny, but the PL0 semantics stay uniform across commit paths.
         self._inflight = (epoch, dict(updates_pdfs))
         try:
             self._commit_pandas_body(epoch, updates_pdfs, batch_id, query_id, wal)
@@ -465,7 +487,7 @@ class StateStore:
             twin = pd.concat(parts, ignore_index=True) if parts else upd
             self._spill_bytes[name] = ("mem", int(twin.memory_usage(deep=True).sum()))
             twins[name] = twin
-            frames[name] = self._twin_frame(name, twin)
+            frames[name] = _LazyFrame(functools.partial(self._twin_frame, name, twin))
         if self.durable:
             self._write_epoch(
                 epoch,
@@ -477,7 +499,9 @@ class StateStore:
             )
             if epoch % self.checkpoint_every == 0:
                 for name in updates:
-                    frames[name].write.mode("overwrite").parquet(self._base_path(name, epoch))
+                    _frame(frames[name]).write.mode("overwrite").parquet(
+                        self._base_path(name, epoch)
+                    )
         else:
             for name in updates:
                 self._gc_bases(name, epoch)

@@ -1023,3 +1023,46 @@ def test_twin_predicate_cursor_pages_under_durable_commit_load(spark, tmp_path):
     resumed = svc.handle({**req, "cursor": first["cursor"]})
     assert not resumed["ok"] and "outside retention horizon" in resumed["error"], resumed
     assert svc.stats()["answers"]["predicate"].get("spark", 0) == 0
+
+
+def test_uncommitted_read_mid_commit_keeps_null_and_nan(spark, tmp_path):
+    """A freshness='uncommitted' read taken while a driver-close commit is
+    blocked answers from the in-flight finals: a NULL final (which the
+    driver close hands over as a NaN in a float column) reads NULL, and
+    an untouched key's committed NaN stays NaN."""
+    import threading
+
+    env = TxEnvironment(spark, isolation="PL3", durable=True, store_dir=str(tmp_path / "s"))
+    env.create_namespace("kv", "double", 0.0)
+    store = env.store
+    store.commit_pandas(
+        0,
+        {"kv": pd.DataFrame(
+            {"key": ["n", "x"], "value": pd.Series([float("nan"), 1.0], dtype=object)}
+        )},
+    )
+    reached, release = threading.Event(), threading.Event()
+    log_path = store._log_path
+
+    def gated_log_path(ns, epoch):
+        if epoch == 1 and not reached.is_set():
+            reached.set()
+            release.wait(120)
+        return log_path(ns, epoch)
+
+    store._log_path = gated_log_path
+    finals = pd.DataFrame({"key": ["x", "y"], "value": [float("nan"), 2.0]})
+    t = threading.Thread(target=lambda: store.commit_pandas(1, {"kv": finals}))
+    t.start()
+    try:
+        assert reached.wait(120)
+        got = StateService(env).handle(
+            {"op": "keys", "ns": "kv", "keys": ["n", "x", "y"], "freshness": "uncommitted"}
+        )
+    finally:
+        release.set()
+        t.join(120)
+    assert got["ok"] and got["uncommitted"] and got["epoch"] == 1, got
+    rows = dict(got["rows"])
+    assert rows["x"] is None and rows["y"] == 2.0 and math.isnan(rows["n"])
+    assert store.committed_epoch() == 1
